@@ -241,13 +241,6 @@ object ScaleEvidence {
       ops.Neutral.ingestE2e(corpus, incoming, minJaccard = 0.8)
         .select("doc_id")
     }
-    // same-JVM A/B: would pinning the admitted batch help? (measured: no —
-    // caching the wide rows costs more than re-running the admission joins
-    // over the already-cached signature tables)
-    val tChainPinned = run("full_chain_pinned_admitted") {
-      ops.Neutral.ingestE2eImpl(corpus, incoming, "text", 0.8,
-        pinAdmitted = true).select("doc_id")
-    }
     // closure floor: connected components alone over the chain's verified
     // pair set (pairs precomputed and cached outside the timer) — the
     // fixed per-iteration job latency nothing upstream can remove
@@ -272,7 +265,6 @@ object ScaleEvidence {
       s""""banded_verify_increment_s":${"%.2f".format(tAdmit - tExact)},""" +
       s""""clustered_closure_increment_s":${"%.2f".format(tChain - tAdmit)},""" +
       s""""total_s":${"%.2f".format(tChain)},""" +
-      s""""pinned_admitted_total_s":${"%.2f".format(tChainPinned)},""" +
       s""""components_only_s":${"%.2f".format(tComp)}}}""")
 
     // ---- served admission at the daily-crawl shape (corpus >> batch):

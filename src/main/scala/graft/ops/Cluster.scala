@@ -150,12 +150,8 @@ object Cluster {
     // every branch. Checkpointing truncates the logical plan to the
     // materialized rows (the connectedComponents pattern): 2.84→2.05 s
     // warm median. Released by the per-query clearState.
-    val sc = emb.sparkSession.sparkContext
-    val before = sc.getPersistentRDDs.keySet
-    val a = kmeansAssign(emb, k, iters)
-      .join(emb.select(col("vec_id"), col("embedding")), "vec_id")
-      .localCheckpoint(true)
-    Pins.trackRdds(sc, sc.getPersistentRDDs.keySet -- before)
+    val a = Pins.checkpoint(kmeansAssign(emb, k, iters)
+      .join(emb.select(col("vec_id"), col("embedding")), "vec_id"))
     val x = a.select(col("cluster"), col("vec_id").as("id_a"),
       col("embedding").as("e_a"))
     val y = a.select(col("cluster"), col("vec_id").as("id_b"),

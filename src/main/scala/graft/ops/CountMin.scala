@@ -126,17 +126,11 @@ object CountMin {
   }
 
   /** Compact the folded artifact back to ≤ depth×width rows (serve
-    * results unchanged — the fold is the serve's own first step;
-    * localCheckpoint severs the read from the overwrite, and its RDD ids
-    * are Pins-tracked so releaseAll can free what DataFrame.unpersist
-    * cannot reach). */
+    * results unchanged — the fold is the serve's own first step; the
+    * pinned localCheckpoint severs the read from the overwrite). */
   def cmsCompact(spark: SparkSession, dir: String): Unit = {
-    val sc = spark.sparkContext
-    val before = sc.getPersistentRDDs.keySet
-    val folded = Models.load(spark, s"$dir/cells")
-      .groupBy("row_i", "bucket").agg(sum(col("cnt")).cast("long").as("cnt"))
-      .localCheckpoint()
-    Pins.trackRdds(sc, sc.getPersistentRDDs.keySet -- before)
+    val folded = Pins.checkpoint(Models.load(spark, s"$dir/cells")
+      .groupBy("row_i", "bucket").agg(sum(col("cnt")).cast("long").as("cnt")))
     Models.save(folded, s"$dir/cells")
   }
 }

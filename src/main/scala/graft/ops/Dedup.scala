@@ -313,29 +313,25 @@ object Dedup {
     // still embed and re-analyze the giant lineage driver-side, which
     // measured as ~1s per action at sf0.1 (~15s per components call).
     // Checkpointing truncates the logical plan to the materialized rows,
-    // so the iteration plans stay a few nodes deep. The checkpoint RDD is
-    // released by the per-query clearState in Bench/Verify.
-    val sc = pairs.sparkSession.sparkContext
-    val rddsBefore = sc.getPersistentRDDs.keySet
-    val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .unionByName(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-      .distinct()
-      .localCheckpoint(true)
-    val checkpointIds = sc.getPersistentRDDs.keySet -- rddsBefore
+    // so the iteration plans stay a few nodes deep. The checkpoint is
+    // released once the loop has consumed it.
+    val edges = Pins.checkpoint(
+      pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
+        .unionByName(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
+        .distinct())
     // Labels are localCheckpoint'ed per iteration, NOT cached: the
     // pointer-jump below references the step result on BOTH sides of a
     // self-join, so a cached-but-lazy plan TREE doubles per iteration —
     // measured as ~700 exchanges in the returned plan after 6 rounds
     // (execution dedups through the cache, but the driver re-analyzes the
     // exponential tree on every downstream action). Checkpointing resets
-    // each round's plan to its materialized rows; superseded checkpoint
-    // RDDs are released by id as the loop advances.
+    // each round's plan to its materialized rows; superseded checkpoints
+    // are released as the loop advances.
     var labels = edges.select(col("src").as("doc_id"))
       .distinct()
       .withColumn("component", col("doc_id"))
       .cache()
     val initialLabels = labels
-    var labelCkptIds: scala.collection.Set[Int] = Set.empty[Int]
     // Convergence via the label-sum invariant: every step takes a least()
     // of the current label, so per-node labels are monotonically
     // non-increasing and the exact sum is strictly decreasing until the
@@ -376,44 +372,33 @@ object Dedup {
       // rounds, and each driver round costs a full job. Same fixpoint:
       // jumping only short-circuits label flow along already-discovered
       // paths, it never crosses a non-edge.
-      val before = sc.getPersistentRDDs.keySet
       // LAZY checkpoint, fused with the convergence sum: the labelSum
       // aggregate below is the round's first action, so it materializes
       // (and persists + truncates) the checkpoint as a side effect — one
       // driver round-trip per iteration instead of an eager-checkpoint job
       // followed by a separate aggregate job. The plan-truncation contract
       // is unchanged (the Dataset is backed by the marked RDD either way).
-      val next = stepped
+      val next = Pins.checkpoint(stepped
         .join(stepped.select(col("doc_id").as("component"), col("component").as("jc")),
           Seq("component"), "left")
         .select(col("doc_id"),
           least(col("component"), coalesce(col("jc"), col("component")))
-            .as("component"))
-        .localCheckpoint(false)
-      val newIds = sc.getPersistentRDDs.keySet -- before
+            .as("component")), eager = false)
       val newSum = labelSum(next)
-      if (iter == 0) initialLabels.unpersist()
-      labelCkptIds.foreach(id =>
-        sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
-      labelCkptIds = newIds
+      if (iter == 0) initialLabels.unpersist() else Pins.release(labels)
       stepped.unpersist()
       labels = next
       converged = newSum == prevSum
       prevSum = newSum
       iter += 1
     }
-    // release the edge checkpoint (df.unpersist cannot reach a checkpoint
-    // RDD, so the ids were captured at creation)
-    checkpointIds.foreach(id =>
-      sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
+    Pins.release(edges)
     require(converged,
       s"connectedComponents did not converge within $maxIter iterations — " +
         "component ids would be partial; raise maxIter for deep graphs")
-    // the returned labels ride the final checkpoint — register its RDD ids
-    // so Pins.releaseAll() can free what DataFrame.unpersist cannot reach.
+    // the returned labels ride the final checkpoint, which stays pinned.
     // NOTE the checkpoint contract: release only AFTER consuming the result
     // (truncated lineage cannot recompute).
-    Pins.trackRdds(sc, labelCkptIds)
     labels
   }
 
@@ -631,38 +616,26 @@ object Dedup {
     * The map is FUNCTIONAL by construction (a rep merges away at most
     * once — appends only emit merges FROM currently-terminal reps). */
   private[graft] def closeMerges(merges: DataFrame): DataFrame = {
-    // DataFrame.unpersist cannot reach a localCheckpoint's RDD (the repo's
-    // checkpoint-release contract, see connectedComponents above), so every
-    // checkpoint's RDD ids are captured by diffing the context registry:
-    // superseded generations are unpersisted BY ID inside the loop and the
-    // final one is Pins.trackRdds'd — under a streaming fold (ccIngest)
-    // the per-micro-batch Pins.scoped can then actually free it.
-    val sc = merges.sparkSession.sparkContext
-    val before0 = sc.getPersistentRDDs.keySet
-    var m = merges.localCheckpoint()
-    var ckptIds = sc.getPersistentRDDs.keySet -- before0
+    // superseded generations are released inside the loop; the final one
+    // stays pinned, so under a streaming fold (ccIngest) the
+    // per-micro-batch Pins.scoped frees it
+    var m = Pins.checkpoint(merges)
     var iter = 0
     var open = m.as("x").join(m.as("y"),
       col("x.to_rep") === col("y.from_rep"), "left_semi").count()
     while (open > 0) {
       require(iter < 48, "merge chains deeper than 2^48 — corrupt artifact")
-      val before = sc.getPersistentRDDs.keySet
-      val next = m.as("x")
+      val next = Pins.checkpoint(m.as("x")
         .join(broadcast(m.as("y")),
           col("x.to_rep") === col("y.from_rep"), "left")
         .select(col("x.from_rep"),
-          coalesce(col("y.to_rep"), col("x.to_rep")).as("to_rep"))
-        .localCheckpoint()
-      val newIds = sc.getPersistentRDDs.keySet -- before
-      ckptIds.foreach(id =>
-        sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
-      ckptIds = newIds
+          coalesce(col("y.to_rep"), col("x.to_rep")).as("to_rep")))
+      Pins.release(m)
       m = next
       open = m.as("x").join(m.as("y"),
         col("x.to_rep") === col("y.from_rep"), "left_semi").count()
       iter += 1
     }
-    Pins.trackRdds(sc, ckptIds)
     m
   }
 
@@ -676,9 +649,9 @@ object Dedup {
   /** Fold a batch of new edges into the artifact. Scans the batch plus
     * one labels equi join; CC runs over the component-compressed batch
     * graph only. Terminal (both appends land inside), so the body runs
-    * under Pins.scoped: the merge-closure and batch-CC checkpoints are
-    * released on exit — one append (or one ccIngest micro-batch) accrues
-    * nothing in the block manager. */
+    * under Pins.scoped: the merge-closure, endpoint and batch-CC
+    * checkpoints are released on exit — one append (or one ccIngest
+    * micro-batch) accrues nothing in the block manager. */
   def ccAppend(newPairs: DataFrame, dir: String,
       batchId: Long): Unit = Pins.scoped {
     require(batchId >= 0, "appends need an explicit batch/sequence id")
@@ -689,16 +662,12 @@ object Dedup {
     // current representative of each batch endpoint: its resolved stored
     // label, or itself if the node is new to the graph
     def reps(side: String) = newPairs.select(col(side).as("doc_id"))
-    // checkpoint ids captured at creation: endpoints.unpersist() cannot
-    // reach a checkpoint RDD, so release happens by id at the end
-    val sc = spark.sparkContext
-    val beforeEp = sc.getPersistentRDDs.keySet
-    val endpoints = reps("doc_a").unionByName(reps("doc_b")).distinct()
-      .join(resolved, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("component"), col("doc_id")).as("rep"))
-      .localCheckpoint() // feeds two joins + the new-node anti join
-    val endpointIds = sc.getPersistentRDDs.keySet -- beforeEp
+    // feeds two joins + the new-node anti join
+    val endpoints = Pins.checkpoint(
+      reps("doc_a").unionByName(reps("doc_b")).distinct()
+        .join(resolved, Seq("doc_id"), "left")
+        .select(col("doc_id"),
+          coalesce(col("component"), col("doc_id")).as("rep")))
     val e = newPairs
       .join(endpoints.select(col("doc_id").as("doc_a"),
         col("rep").as("rep_a")), Seq("doc_a"))
@@ -728,8 +697,6 @@ object Dedup {
         coalesce(col("__c"), col("rep")).as("component"))
     Models.append(newNodeLabels, s"$dir/labels")
     Models.logGen(spark, dir, batchId)
-    endpointIds.foreach(id =>
-      sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
   }
 
   /** Current labels: stored rows resolved through the merge closure.

@@ -254,17 +254,13 @@ object Dsir {
     * to one row per bucket (the exact integer sum serve performs at
     * load). Serve-after-compact is bit-identical; what it buys is the
     * load-time fold shrinking from O(batches·buckets) rows back to the
-    * numBuckets bound. Checkpoint RDD ids are Pins-tracked (the table is
+    * numBuckets bound. The checkpoint is Pins-tracked (the table is
     * bucket-bounded, so the checkpoint is tiny). */
   def dsirCompactCounts(spark: SparkSession, dir: String,
       numBuckets: Int = DefaultBuckets): Unit = {
     requireMeta(spark, dir, numBuckets)
-    val sc = spark.sparkContext
-    val before = sc.getPersistentRDDs.keySet
-    val folded = Models.load(spark, s"$dir/raw_counts")
-      .groupBy("bucket").agg(sum(col("nr")).cast("long").as("nr"))
-      .localCheckpoint()
-    Pins.trackRdds(sc, sc.getPersistentRDDs.keySet -- before)
+    val folded = Pins.checkpoint(Models.load(spark, s"$dir/raw_counts")
+      .groupBy("bucket").agg(sum(col("nr")).cast("long").as("nr")))
     Models.save(folded, s"$dir/raw_counts")
   }
 

@@ -140,11 +140,10 @@ object Evolve {
       keyCol: String): Unit = {
     // cast back to the partial schema (sum widens decimal precision;
     // future appends must stay parquet-schema-compatible)
-    val folded = aggServe(spark, dir, keyCol)
+    val folded = Pins.checkpoint(aggServe(spark, dir, keyCol)
       .select(col(keyCol), col("n_rows").cast("long").as("n"),
         col("total_amount")
-          .cast(org.apache.spark.sql.types.DecimalType(28, 6)).as("amount"))
-      .localCheckpoint()
+          .cast(org.apache.spark.sql.types.DecimalType(28, 6)).as("amount")))
     Models.save(folded, s"$dir/agg")
   }
 

@@ -35,14 +35,10 @@ object Graph {
     // AQE stage-job of every iteration, which for a joined-at-scale edge
     // list is the dominant per-iteration cost once the graph itself is
     // small. Checkpointing truncates the lineage to the materialized rows,
-    // so each iteration's plan is a few nodes deep. The checkpoint RDD is
+    // so each iteration's plan is a few nodes deep. The checkpoint is
     // released before returning (after the result is materialized), same
     // contract as Dedup.connectedComponents' edge checkpoint.
-    val sc = edges.sparkSession.sparkContext
-    val rddsBefore = sc.getPersistentRDDs.keySet
-    val e = edges.select(col("src"), col("dst")).distinct().localCheckpoint(true)
-    val eCkptIds = sc.getPersistentRDDs.keySet -- rddsBefore
-    Pins.trackRdds(sc, eCkptIds)
+    val e = Pins.checkpoint(edges.select(col("src"), col("dst")).distinct())
     val outdeg = Pins.track(e.groupBy("src").agg(count(lit(1)).as("od")).cache())
     val nodes = Pins.track(e.select(col("src").as("node"))
       .unionByName(e.select(col("dst").as("node"))).distinct().cache())
@@ -94,8 +90,7 @@ object Graph {
     if (pinned != null) pinned.unpersist()
     // the result is materialized above, so the edge checkpoint (whose
     // truncated lineage cannot recompute) is safe to release now
-    eCkptIds.foreach(id =>
-      sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
+    Pins.release(e)
     outdeg.unpersist()
     nodes.unpersist()
     out

@@ -484,14 +484,9 @@ object Neutral {
       minJaccard: Double = 0.8,
       commitBeforeAppend: DataFrame => Unit = _ => (),
       batchId: Long): DataFrame = {
-    val sc = spark.sparkContext
-    val before = sc.getPersistentRDDs.keySet
-    val admitted =
-      dedupAgainstServed(spark, dir, incoming, textCol, minJaccard)
-        .localCheckpoint()
-    // register the checkpoint RDD so Pins can free what the DataFrame
-    // handle cannot reach (release only AFTER consuming the batch)
-    Pins.trackRdds(sc, sc.getPersistentRDDs.keySet -- before)
+    // pinned: release only AFTER consuming the batch
+    val admitted = Pins.checkpoint(
+      dedupAgainstServed(spark, dir, incoming, textCol, minJaccard))
     commitBeforeAppend(admitted)
     dedupIndexAppend(admitted, dir, textCol, batchId = batchId)
     admitted
@@ -605,14 +600,10 @@ object Neutral {
   def admitBloomAndAppend(spark: org.apache.spark.sql.SparkSession,
       dir: String, incoming: DataFrame, textCol: String = "text",
       commitBeforeAppend: DataFrame => Unit = _ => ()): DataFrame = {
-    val sc = spark.sparkContext
-    val before = sc.getPersistentRDDs.keySet
-    val admitted = incoming
+    val admitted = Pins.checkpoint(incoming
       .join(admitBloomServed(spark, dir, incoming, textCol)
           .filter(col("admitted")).select("doc_id"),
-        Seq("doc_id"), "left_semi")
-      .localCheckpoint()
-    Pins.trackRdds(sc, sc.getPersistentRDDs.keySet -- before)
+        Seq("doc_id"), "left_semi"))
     commitBeforeAppend(admitted)
     bloomIndexAppend(admitted, dir, textCol)
     admitted
@@ -1037,25 +1028,14 @@ object Neutral {
     * against the corpus signature table and stage 2 runs on the (much
     * smaller) admitted batch only. */
   def ingestE2e(corpus: DataFrame, incoming: DataFrame,
-      textCol: String = "text", minJaccard: Double = 0.8): DataFrame =
-    ingestE2eImpl(corpus, incoming, textCol, minJaccard, pinAdmitted = false)
-
-  /** [[ingestE2e]] body; `pinAdmitted` exists only for the ScaleEvidence
-    * stage-breakdown A/B. Stage 2 consumes the admitted batch from two
-    * subtrees (exactGroups' digest groupBy and the kept-table fill), so
-    * the admission anti/banded joins re-execute once — but those joins
-    * read the CACHED signature tables, and the measured A/B (SCALING.md)
-    * shows re-running them (~4.3 s total) beats materializing the wide
-    * admitted rows into the block cache (~5.1 s total): the pin's
-    * serialize-and-barrier cost exceeds the recompute it saves. Default
-    * is therefore unpinned; the expensive per-shingle hashing is cached
-    * either way. */
-  private[graft] def ingestE2eImpl(corpus: DataFrame, incoming: DataFrame,
-      textCol: String, minJaccard: Double, pinAdmitted: Boolean): DataFrame = {
-    val (admitted0, shI) =
+      textCol: String = "text", minJaccard: Double = 0.8): DataFrame = {
+    // stage 2 reads the admitted batch from two subtrees (exactGroups'
+    // digest groupBy and the kept-table fill), so the admission joins
+    // re-execute once, over the CACHED signature tables. The admitted rows
+    // stay unpinned: no valid measurement says pinning them pays
+    // (SCALING.md, ingest stage breakdown)
+    val (admitted, shI) =
       admitWithSig(corpus, incoming, textCol, minJaccard, 3, 16, 4)
-    val admitted =
-      if (pinAdmitted) Pins.track(admitted0.cache()) else admitted0
     // stage 2 reuses stage 1's cached incoming-side signatures (shI covers
     // every admitted doc) — the chain hashes each shingle exactly once
     dedupCorpusClustered(admitted, textCol, minJaccard,

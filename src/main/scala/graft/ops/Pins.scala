@@ -1,7 +1,8 @@
 package graft.ops
 
-import org.apache.spark.SparkContext
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.storage.StorageLevel
 
 /** Self-contained cache lifecycle for the operators that pin tables by
@@ -19,6 +20,13 @@ import org.apache.spark.storage.StorageLevel
   * cannot recompute; release results only AFTER consuming them (the same
   * contract the Bench/Verify per-query clearState enforces).
   *
+  * Checkpoints go through [[checkpoint]]: it takes the RDD from the
+  * `LogicalRDD` leaf of the checkpointed Dataset's own plan and pins
+  * exactly that RDD, so releasing it never touches a cache the
+  * checkpoint's job happened to build upstream (the caller's, or another
+  * operator's pin), nor a checkpoint another thread created meanwhile. A
+  * loop that supersedes a checkpoint frees it early with [[release]].
+  *
   * Pins is ONE JVM-wide ledger, so [[releaseAll]] from an async callback
   * (a streaming foreachBatch thread, a parallel query runner) would release
   * pins belonging to OTHER concurrently running operators — forcing silent
@@ -35,48 +43,62 @@ import org.apache.spark.storage.StorageLevel
   */
 object Pins {
 
-  private final class DfPin(val df: DataFrame, val thread: Long, val seq: Long)
-  private final class RddPin(val sc: SparkContext, val id: Int,
-      val thread: Long, val seq: Long)
+  /** A cached DataFrame (`rdd == null`) or a checkpoint's own RDD. */
+  private final class Pin(val df: DataFrame, val rdd: RDD[_],
+      val thread: Long, val seq: Long) {
+    def live: Boolean =
+      if (rdd == null) df.storageLevel != StorageLevel.NONE
+      else rdd.getStorageLevel != StorageLevel.NONE
+    def free(): Unit =
+      if (rdd == null) df.unpersist(blocking = false)
+      else rdd.unpersist(blocking = false)
+  }
 
-  private val dfs = scala.collection.mutable.ArrayBuffer.empty[DfPin]
-  private val rdds = scala.collection.mutable.ArrayBuffer.empty[RddPin]
+  private val pins = scala.collection.mutable.ArrayBuffer.empty[Pin]
   private var seqCounter = 0L
 
-  /** Register a cached DataFrame; returns it for chaining. */
-  private[graft] def track[A <: DataFrame](df: A): A = synchronized {
-    dfs.filterInPlace(_.df.storageLevel != StorageLevel.NONE)
+  private def add(df: DataFrame, rdd: RDD[_]): Unit = synchronized {
+    pins.filterInPlace(_.live)
     seqCounter += 1
-    dfs += new DfPin(df, Thread.currentThread().getId, seqCounter)
+    pins += new Pin(df, rdd, Thread.currentThread().getId, seqCounter)
+  }
+
+  /** Register a cached DataFrame; returns it for chaining. */
+  private[graft] def track[A <: DataFrame](df: A): A = {
+    add(df, null)
     df
   }
 
-  /** Register localCheckpoint RDD ids (a DataFrame handle cannot unpersist
-    * those — they are reachable only through the context's RDD registry). */
-  private[graft] def trackRdds(sc: SparkContext, ids: Iterable[Int]): Unit =
-    synchronized {
-      rdds.filterInPlace(p => p.sc.getPersistentRDDs.contains(p.id))
-      ids.foreach { id =>
-        seqCounter += 1
-        rdds += new RddPin(sc, id, Thread.currentThread().getId, seqCounter)
-      }
+  /** `df.localCheckpoint(eager)`, with the checkpoint's RDD pinned. */
+  def checkpoint(df: DataFrame, eager: Boolean = true): DataFrame = {
+    val cp = df.localCheckpoint(eager)
+    add(cp, checkpointRdd(cp))
+    cp
+  }
+
+  /** Free a [[checkpoint]] result now (a loop superseding it). */
+  def release(cp: DataFrame): Unit = {
+    val rdd = checkpointRdd(cp)
+    synchronized(pins.filterInPlace(_.rdd ne rdd))
+    rdd.unpersist(blocking = false)
+  }
+
+  private def checkpointRdd(cp: DataFrame): RDD[_] =
+    cp.queryExecution.logical match {
+      case r: LogicalRDD => r.rdd
+      case p => throw new IllegalArgumentException(
+        s"not a checkpoint: plan root is ${p.nodeName}")
     }
 
   /** Tracked pins that are still materialized (cached DataFrames at a
     * non-NONE storage level plus live checkpoint RDDs). */
-  def liveCount: Int = synchronized {
-    dfs.count(_.df.storageLevel != StorageLevel.NONE) +
-      rdds.count(p => p.sc.getPersistentRDDs.contains(p.id))
-  }
+  def liveCount: Int = synchronized(pins.count(_.live))
 
   /** Release every pin any graft operator still holds. Single-threaded
     * consumers only — from a concurrent callback use [[scoped]]. */
   def releaseAll(): Unit = synchronized {
-    dfs.foreach(_.df.unpersist(blocking = false))
-    dfs.clear()
-    rdds.foreach(p =>
-      p.sc.getPersistentRDDs.get(p.id).foreach(_.unpersist(blocking = false)))
-    rdds.clear()
+    pins.foreach(_.free())
+    pins.clear()
   }
 
   /** Run `body`, then release exactly the pins the CURRENT thread created
@@ -94,15 +116,9 @@ object Pins {
 
   /** Release pins created after `mark` by thread `tid`; keep the rest. */
   private def releaseSince(mark: Long, tid: Long): Unit = synchronized {
-    dfs.filterInPlace { p =>
+    pins.filterInPlace { p =>
       val mine = p.seq > mark && p.thread == tid
-      if (mine) p.df.unpersist(blocking = false)
-      !mine
-    }
-    rdds.filterInPlace { p =>
-      val mine = p.seq > mark && p.thread == tid
-      if (mine) p.sc.getPersistentRDDs.get(p.id)
-        .foreach(_.unpersist(blocking = false))
+      if (mine) p.free()
       !mine
     }
   }

@@ -227,10 +227,7 @@ object Quantize {
     // the ~150 KB fit lineage per stage-job (cold rep 28→12 s in the A/B);
     // ledger-tracked and released by the per-query clearState like the CC
     // checkpoints
-    val sc0 = emb.sparkSession.sparkContext
-    val before0 = sc0.getPersistentRDDs.keySet
-    val codes = codesOf(a, m).localCheckpoint(true)
-    Pins.trackRdds(sc0, sc0.getPersistentRDDs.keySet -- before0)
+    val codes = Pins.checkpoint(codesOf(a, m))
     val queries = emb.filter(col("vec_id").isin(queryIds: _*))
       .select(col("vec_id").as("query_id"), col("embedding"))
     val luts = lutsOf(queries, cents, m, subDim)
@@ -269,12 +266,8 @@ object Quantize {
     // form re-analyzes the whole ~200 KB fit lineage on every AQE stage
     // of both branches — truncating to the materialized rows cut the cold
     // rep 28→12 s and the warm min ~10% in the pq twin's A/B
-    val sc0 = emb.sparkSession.sparkContext
-    val before0 = sc0.getPersistentRDDs.keySet
-    val codes = codesOf(a, m)
-      .join(emb.select(col("vec_id"), col("label")), Seq("vec_id"))
-      .localCheckpoint(true)
-    Pins.trackRdds(sc0, sc0.getPersistentRDDs.keySet -- before0)
+    val codes = Pins.checkpoint(codesOf(a, m)
+      .join(emb.select(col("vec_id"), col("label")), Seq("vec_id")))
     val queries = emb.filter(col("vec_id").isin(queryIds: _*))
       .select(col("vec_id").as("query_id"), col("embedding"))
     ivfPqScan(queries, Similarity.centroids(emb), cents, codes,

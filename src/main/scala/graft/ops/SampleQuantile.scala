@@ -120,15 +120,10 @@ object SampleQuantile {
     quantiles(serveSketch(spark, dir, groupCol), groupCol, qs)
 
   /** Rewrite the candidate table as the folded bottom-k (serve results
-    * unchanged — the fold is the serve's own first step; localCheckpoint
-    * severs the read lineage from the overwrite, and its RDD ids are
-    * Pins-tracked so releaseAll can free what DataFrame.unpersist cannot
-    * reach). */
+    * unchanged — the fold is the serve's own first step; the pinned
+    * localCheckpoint severs the read lineage from the overwrite). */
   def compact(spark: SparkSession, dir: String, groupCol: String): Unit = {
-    val sc = spark.sparkContext
-    val before = sc.getPersistentRDDs.keySet
-    val folded = serveSketch(spark, dir, groupCol).localCheckpoint()
-    Pins.trackRdds(sc, sc.getPersistentRDDs.keySet -- before)
+    val folded = Pins.checkpoint(serveSketch(spark, dir, groupCol))
     Models.save(folded, s"$dir/sample")
   }
 }

@@ -305,14 +305,10 @@ object NorthStar {
     val docs = T.documents(s, d)
     val dir = graft.ops.Models.ensureBuilt(s"ccinc|$d") { tmp =>
       // the build is terminal (the artifact lands on disk inside), so the
-      // whole block is scoped: the pairs checkpoint (id-tracked — a
-      // checkpoint is unreachable via DataFrame.unpersist) and the pair
+      // whole block is scoped: the pairs checkpoint and the pair
       // generator's signature cache release on exit
       graft.ops.Pins.scoped {
-        val sc = s.sparkContext
-        val before = sc.getPersistentRDDs.keySet
-        val pairs = Dedup.ngramJaccardPairs(docs).localCheckpoint()
-        graft.ops.Pins.trackRdds(sc, sc.getPersistentRDDs.keySet -- before)
+        val pairs = graft.ops.Pins.checkpoint(Dedup.ngramJaccardPairs(docs))
         Dedup.ccBuild(
           pairs.filter(pmod(col("doc_a") + col("doc_b"), lit(2)) === 0), tmp)
         Dedup.ccAppend(
@@ -341,10 +337,7 @@ object NorthStar {
     val docs = T.documents(s, d)
     val dir = graft.ops.Models.ensureBuilt(s"cccmp|$d") { tmp =>
       graft.ops.Pins.scoped {
-        val sc = s.sparkContext
-        val before = sc.getPersistentRDDs.keySet
-        val pairs = Dedup.ngramJaccardPairs(docs).localCheckpoint()
-        graft.ops.Pins.trackRdds(sc, sc.getPersistentRDDs.keySet -- before)
+        val pairs = graft.ops.Pins.checkpoint(Dedup.ngramJaccardPairs(docs))
         Dedup.ccBuild(
           pairs.filter(pmod(col("doc_a") + col("doc_b"), lit(2)) === 0), tmp)
         Dedup.ccAppend(

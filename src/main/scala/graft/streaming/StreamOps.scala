@@ -612,10 +612,7 @@ object StreamOps {
     stream.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         graft.ops.Pins.scoped {
-          val sc = spark.sparkContext
-          val before = sc.getPersistentRDDs.keySet
-          val b = batch.localCheckpoint()
-          graft.ops.Pins.trackRdds(sc, sc.getPersistentRDDs.keySet -- before)
+          val b = graft.ops.Pins.checkpoint(batch)
           b.write.mode("append").parquet(sinkDir)
           // the real micro-batch id lands in the generation ledger — the
           // card's freshness row then names the exact stream position
@@ -673,10 +670,7 @@ object StreamOps {
     stream.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         graft.ops.Pins.scoped {
-          val sc = spark.sparkContext
-          val before = sc.getPersistentRDDs.keySet
-          val b = batch.localCheckpoint()
-          graft.ops.Pins.trackRdds(sc, sc.getPersistentRDDs.keySet -- before)
+          val b = graft.ops.Pins.checkpoint(batch)
           b.write.mode("append").parquet(sinkDir)
           graft.ops.Similarity.ivfAppend(spark, b, indexDir, batchId)
           // DRIFT-TRIGGERED RETRAIN (r12 "What's missing" #3 — the

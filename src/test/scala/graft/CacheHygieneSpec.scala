@@ -62,6 +62,64 @@ class CacheHygieneSpec extends AnyFunSuite {
     }
   }
 
+  test("checkpoints free only their own RDD — live pins and the caller's cache stay backed") {
+    import spark.implicits._
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions.{col, udf}
+    val docs = queries.T.documents(spark, sf)
+    val idxDir = java.nio.file.Files.createTempDirectory("hygiene_e2e").toString
+    ops.Neutral.dedupIndexBuild(docs.filter($"doc_id" < 250), idxDir)
+    // a range, not a local Seq: the optimizer would fold the tally into a
+    // local relation at planning time and no recompute could show
+    val edges = spark.range(40).select(col("id").as("src"),
+      ((col("id") * 7 + 1) % 40).as("dst"))
+    val inputs = Seq[(String, DataFrame, DataFrame => Unit)](
+      ("ingestE2eServed", docs.filter($"doc_id" >= 250),
+        in => ops.Neutral.ingestE2eServed(spark, idxDir, in).count()),
+      ("pageRank", edges, in => ops.Graph.pageRank(in, iters = 7).count()))
+    val problems = inputs.flatMap { case (name, input, consume) =>
+      clearState()
+      // the caller's own cache, registered but not yet materialized; the
+      // accumulator counts every row its plan computes
+      val computed = spark.sparkContext.longAccumulator(name)
+      val tally = udf { (v: Long) => computed.add(1); v }
+      val key = input.columns.head
+      val mine = input.withColumn(key, tally(col(key))).cache()
+      consume(mine)
+      val before = computed.sum
+      mine.count()
+      val recomputed = computed.sum - before
+      // one registered RDD per live pin: releasing the ledger frees exactly
+      // as many as Pins.liveCount counts
+      val registered = spark.sparkContext.getPersistentRDDs.size
+      val live = ops.Pins.liveCount
+      ops.Pins.releaseAll()
+      val freed = registered - spark.sparkContext.getPersistentRDDs.size
+      mine.unpersist()
+      Seq(
+        Option.when(freed != live)(
+          s"$name: $live live pins, but releasing them freed $freed registered RDDs"),
+        Option.when(recomputed != 0)(
+          s"$name: the caller's cache recomputed $recomputed rows — its RDD was unpersisted")
+      ).flatten
+    }
+    clearState()
+    assert(problems.isEmpty, problems.mkString("; "))
+  }
+
+  test("only Pins reads the persistent-RDD registry in operator sources") {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala/graft")
+    val offenders = Seq("ops", "streaming", "queries").flatMap { d =>
+      java.nio.file.Files.walk(root.resolve(d)).iterator().asScala.toSeq
+        .filter(p => p.toString.endsWith(".scala") &&
+          p.getFileName.toString != "Pins.scala" &&
+          java.nio.file.Files.readString(p).contains("getPersistentRDDs"))
+    }
+    assert(offenders.isEmpty,
+      s"getPersistentRDDs outside Pins (use Pins.checkpoint/release): $offenders")
+  }
+
   test("per-op pinned footprint is exactly the documented contract") {
     import spark.implicits._
     val edges = (0L until 40L).map(i => (i, (i * 7 + 1) % 40)).toDF("src", "dst")
@@ -118,7 +176,7 @@ class CacheHygieneSpec extends AnyFunSuite {
     val counts = (1 to 10).map { _ =>
       ops.Graph.pageRank(edges, iters = 3).count()
       // clustered dedup exercises caches AND the components localCheckpoint
-      // path (releasable only through the ledger's RDD-id tracking)
+      // path (releasable only through the ledger's checkpoint pins)
       ops.Neutral.dedupCorpusClustered(docs).count()
       val n = spark.sparkContext.getPersistentRDDs.size
       ops.Pins.releaseAll()

@@ -120,6 +120,10 @@ class LifecycleSpec extends AnyFunSuite {
   }
 
   test("aggMaintain: two folded deltas equal a full recompute exactly") {
+    // start from an empty registry (earlier suites share this session)
+    graft.ops.Pins.releaseAll()
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
     val orders = graft.queries.T.orders(spark, "/root/testdata/sf0.001")
     val dir = java.nio.file.Files.createTempDirectory("aggmaint").toString
     Evolve.aggBuild(orders.filter(col("o_orderkey") % 3 === 0), dir,
@@ -153,7 +157,10 @@ class LifecycleSpec extends AnyFunSuite {
     Evolve.aggFold(orders.filter(col("o_orderkey") % 3 === 0), dir,
       "o_custkey", "o_totalprice") // re-fold a slice: schema must merge
     assert(Evolve.aggServe(spark, dir, "o_custkey").count() == full.count())
+    // the compaction checkpoint is ledger-tracked: releaseAll alone frees it
     graft.ops.Pins.releaseAll()
+    assert(spark.sparkContext.getPersistentRDDs.isEmpty,
+      "Pins.releaseAll left persisted RDDs behind after aggCompact")
   }
 
   test("joinView maintenance: two cross-side appends equal the full " +
