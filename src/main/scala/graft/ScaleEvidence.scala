@@ -903,7 +903,8 @@ object ScaleEvidence {
     * policies: naive full pair enumeration (the quadratic blow-up),
     * maxBucket drop (bounded but the class never collapses), and
     * hub-verified star edges (linear AND closure-identical —
-    * [[graft.ops.Neutral.minHashEdgesSkewSafe]], pinned by ScaleSpec).
+    * [[graft.ops.Neutral.minHashCandidates]] with `starCap`, pinned by
+    * ScaleSpec).
     * Then the j11 analog: ONE interval covering the whole price domain
     * joins against every lineitem point through the SAME bucket-explode
     * equi key — the giant range spreads over all its buckets (the
@@ -948,7 +949,8 @@ object ScaleEvidence {
         .filter(col("jaccard") >= 0.8).select("doc_a", "doc_b")
     }
     val (nStar, cStar, _) = run("skew_safe_star") {
-      Neutral.minHashEdgesSkewSafe(sk, maxBucket = 16)
+      Neutral.minHashCandidates(sk, starCap = Some(16))
+        .filter(col("jaccard") >= 0.8).select("doc_a", "doc_b")
     }
     println(s"""SKEW_DEDUP_SUMMARY {"quadratic_pairs":$nNaive,""" +
       s""""star_edges":$nStar,"edge_ratio":${nNaive / math.max(1L, nStar)},""" +

@@ -69,6 +69,11 @@ object JaccardSorted {
   * built-in nested-lambda form re-enters the interpreted expression
   * evaluator 64×|shingles| times per row. Whole-stage-codegen'd via a
   * static kernel call.
+  *
+  * No operator runs it: MinHash dedup runs the md5-seeded
+  * [[Md5MinHashSig]] (graft.ops.Neutral). It stays only because the
+  * benchmark harness (perfbench Kernels) measures it as a kernel rate,
+  * and the `minhash_signature` SQL function exposes it.
   */
 case class MinHashSignature(child: Expression, slots: Int = 64)
     extends UnaryExpression {

@@ -100,11 +100,11 @@ object GraftExtensions {
       }),
     (FunctionIdentifier("lsh_buckets"),
       info("lsh_buckets",
-        "lsh_buckets(vec, nbits, tables) - multi-table random-hyperplane LSH bucket ids"),
+        "lsh_buckets(vec, nbits, tables) - multi-table md5-seeded sign-LSH bucket ids"),
       (args: Seq[Expression]) => args match {
-        case Seq(v) => LshBuckets(v, 8, 1)
-        case Seq(v, nbits) => LshBuckets(v, intArg("lsh_buckets", "nbits", nbits), 1)
-        case Seq(v, nbits, tables) => LshBuckets(v,
+        case Seq(v) => Md5LshBuckets(v, 8, 1)
+        case Seq(v, nbits) => Md5LshBuckets(v, intArg("lsh_buckets", "nbits", nbits), 1)
+        case Seq(v, nbits, tables) => Md5LshBuckets(v,
           intArg("lsh_buckets", "nbits", nbits), intArg("lsh_buckets", "tables", tables))
         case _ => throw new IllegalArgumentException("lsh_buckets expects (vec[, nbits[, tables]])")
       }))

@@ -79,7 +79,10 @@ object NeutralKernels {
   /** md5-seeded sign-LSH buckets (one long per table). `isFloat` selects
     * the element accessor; accumulation is (((0.0 + s0*x0) + s1*x1) + ...)
     * — the identical IEEE operation sequence as
-    * `aggregate(zip_with(signs, v, (s, x) -> s * double(x)), 0.0d, +)`. */
+    * `aggregate(zip_with(signs, v, (s, x) -> s * double(x)), 0.0d, +)`.
+    * Null when the vector contains a null element: the accessor would
+    * read it as 0.0, and a bucket from a zero-filled vector would silently
+    * collide with unrelated vectors. */
   def lshBucketsCompute(arr: ArrayData, isFloat: Boolean, nbits: Int,
       tables: Int): ArrayData = {
     val dim = arr.numElements()
@@ -88,6 +91,7 @@ object NeutralKernels {
     val v = new Array[Double](dim)
     var i = 0
     while (i < dim) {
+      if (arr.isNullAt(i)) return null
       v(i) = if (isFloat) arr.getFloat(i).toDouble else arr.getDouble(i)
       i += 1
     }
@@ -541,6 +545,8 @@ case class Md5LshBuckets(child: Expression, nbits: Int, tables: Int)
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "md5_lsh_buckets"
+  // null-element vectors come out null (see lshBucketsCompute)
+  override def nullable: Boolean = true
 
   override def nullSafeEval(input: Any): Any =
     NeutralKernels.lshBucketsCompute(
@@ -548,7 +554,8 @@ case class Md5LshBuckets(child: Expression, nbits: Int, tables: Int)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.expr.NeutralKernels.lshBucketsCompute($c, $isFloat, $nbits, $tables);")
+      s"""${ev.value} = graft.expr.NeutralKernels.lshBucketsCompute($c, $isFloat, $nbits, $tables);
+         |if (${ev.value} == null) { ${ev.isNull} = true; }""".stripMargin)
 
   override protected def withNewChildInternal(newChild: Expression): Md5LshBuckets =
     copy(child = newChild)

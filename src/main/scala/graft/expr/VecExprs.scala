@@ -1,14 +1,12 @@
 package graft.expr
 
-import java.util.concurrent.ConcurrentHashMap
-
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftbridge.{columnToExpr, exprToColumn}
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, LongType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
 /** Vector kernels for the similarity/dedup operators, as compiled Catalyst
   * expressions. The composable form (`aggregate(zip_with(...))`) re-enters
@@ -113,99 +111,7 @@ object CosineSim {
   }
 }
 
-/** `tables` random-hyperplane LSH bucket ids (each `nbits` sign bits) for a
-  * FLOAT/DOUBLE vector — the OR-amplification family for near-dup blocking:
-  * a pair is a candidate if it collides in ANY table, so per-table recall
-  * shortfall multiplies away. Hyperplane weights are derived
-  * deterministically from XXH64(pos, table*nbits + bit) (no stored model,
-  * reproducible across runs) and cached per (bits, dim) — bucket
-  * computation is then `tables*nbits*dim` fused multiply-adds per row. */
-case class LshBuckets(child: Expression, nbits: Int, tables: Int)
-    extends UnaryExpression {
-
-  require(nbits >= 1 && nbits <= 62, "nbits must be in [1, 62]")
-  require(tables >= 1, "tables must be >= 1")
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "lsh_buckets"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (VecKernels.isVec(child.dataType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"lsh_buckets requires an array<float|double> input, got ${child.dataType}")
-
-  override def nullable: Boolean = true
-
-  private lazy val isDouble = VecKernels.isDoubleVec(child.dataType)
-
-  override def nullSafeEval(input: Any): Any =
-    LshBuckets.compute(input.asInstanceOf[ArrayData], isDouble, nbits, tables)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"""${ev.value} = graft.expr.LshBuckets.compute($c, $isDouble, $nbits, $tables);
-         |if (${ev.value} == null) { ${ev.isNull} = true; }""".stripMargin)
-
-  override protected def withNewChildInternal(newChild: Expression): LshBuckets =
-    copy(child = newChild)
-}
-
-object LshBuckets {
-  /** Hyperplane weight rows, uniform in [-1, 1), keyed by (totalBits, dim).
-    * Weights are row-independent, so one matrix serves the whole scan. */
-  private val cache = new ConcurrentHashMap[Long, Array[Array[Double]]]()
-
-  private def weights(bits: Int, dim: Int): Array[Array[Double]] =
-    cache.computeIfAbsent((bits.toLong << 32) | dim.toLong, _ => {
-      val w = Array.ofDim[Double](bits, dim)
-      var b = 0
-      while (b < bits) {
-        var p = 0
-        while (p < dim) {
-          val h = XXH64.hashLong(p.toLong, b.toLong)
-          w(b)(p) = (((h % 1000L) + 1000L) % 1000L) / 500.0 - 1.0
-          p += 1
-        }
-        b += 1
-      }
-      w
-    })
-
-  /** Static kernel shared by interpreted eval and codegen; null when the
-    * vector contains a null element (a bucket from a zero-filled vector
-    * would silently collide everything). */
-  def compute(input: ArrayData, isDouble: Boolean, nbits: Int, tables: Int): ArrayData = {
-    var p0 = 0
-    while (p0 < input.numElements()) {
-      if (input.isNullAt(p0)) return null
-      p0 += 1
-    }
-    val v = VecKernels.toDoubles(input, isDouble)
-    val w = weights(nbits * tables, v.length)
-    val out = new Array[Long](tables)
-    var t = 0
-    while (t < tables) {
-      var bucket = 0L
-      var j = 0
-      while (j < nbits) {
-        val wb = w(t * nbits + j)
-        var d = 0.0
-        var p = 0
-        while (p < v.length) { d += v(p) * wb(p); p += 1 }
-        if (d > 0) bucket |= (1L << j)
-        j += 1
-      }
-      out(t) = bucket
-      t += 1
-    }
-    new GenericArrayData(out)
-  }
-}
-
 object VecExprs {
   def cosineSim(a: Column, b: Column): Column =
     exprToColumn(CosineSim(columnToExpr(a), columnToExpr(b)))
-
-  def lshBuckets(c: Column, nbits: Int, tables: Int): Column =
-    exprToColumn(LshBuckets(columnToExpr(c), nbits, tables))
 }

@@ -4,21 +4,23 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.expr.ArrayExprs.{jaccardSorted, minhashSignature}
+import graft.expr.ArrayExprs.jaccardSorted
 
 /** Large-scale deduplication operators for training-data pipelines.
   *
   * Scale design (the 100 TB contract):
   *  - Exact dedup groups by a 256-bit content digest, so the shuffle carries
   *    32 bytes + id per row instead of full document text.
-  *  - MinHash/LSH is the classic shingle → signature → banded-bucket-join
-  *    pipeline: per-row signature computation is embarrassingly parallel,
-  *    and the only shuffle is on (band, bucket_key) — candidate pairs are
-  *    generated per-bucket, never all-pairs.
-  *  - SimHash probes maxHamming+1 disjoint 16-bit block tables (recall 1
-  *    by pigeonhole); the quadratic pair check runs only inside buckets.
-  *  - Hashing/signatures/pair-scoring run in custom Catalyst expressions
-  *    (graft.expr.ShingleHashes/MinHashSignature/JaccardSorted) — compiled
+  *  - Near-dup candidate generation (MinHash/LSH, SimHash, embedding
+  *    LSH) has one implementation each, the md5-seeded pipelines in
+  *    [[Neutral]] that the DuckDB oracle reproduces; [[dedupCorpus]] runs
+  *    the MinHash one. The only shuffle there is on (band, bucket) —
+  *    candidate pairs are generated per bucket, never all-pairs.
+  *  - The n-gram pipeline blocks on each doc's rarest shingles
+  *    (PPJoin-style prefix filter), so candidate volume follows near-dup
+  *    density rather than corpus size.
+  *  - Shingle hashing and pair scoring run in custom Catalyst expressions
+  *    (graft.expr.ShingleHashes/ShingleStrings/JaccardSorted) — compiled
   *    single-pass loops where the built-in lambda forms pay interpreted
   *    per-element overhead; still plain Columns to Catalyst, never UDFs.
   */
@@ -53,21 +55,19 @@ object Dedup {
       .withColumn("shingles", expr(shingleExpr(n)))
       .drop("w")
 
-  /** (doc_id, hs): distinct shingles hashed to xxhash64 longs, cached.
-    * Every dedup pipeline fans out into several branches over this table
-    * (signature, document frequency, pair scoring) — materializing it once
-    * replaces 3-4 recomputations of the interpreted shingle lambda, and
-    * long arrays make the cache, the shuffles, and the set ops
-    * (array_intersect/union) several times cheaper than string shingles.
-    * Jaccard on 64-bit hashes equals Jaccard on shingles up to negligible
-    * collision probability. At 100 TB this is the persisted intermediate
-    * table between pipeline stages. */
+  /** (doc_id, hs): distinct shingles hashed to xxhash64 longs, cached —
+    * the n-gram pipeline's pair-scoring table ([[ngramScoredPairs]]
+    * re-attaches it to both sides of every candidate pair, so it is read
+    * twice). Long arrays make the cache, the shuffles and the merge-walk
+    * Jaccard kernel several times cheaper than string shingles; Jaccard on
+    * 64-bit hashes equals Jaccard on shingles up to negligible collision
+    * probability. */
   private def shingleTable(docs: DataFrame, textCol: String, n: Int): DataFrame =
     // NOT fanned (r18): the Neutral.sigTable 8-way pre-cache fan was a
-    // clear win there, but the same fan HERE measured 1.47 -> 2.06 s on
-    // q_ns_dedup_corpus — this table's consumers join/aggregate the long
-    // hash arrays directly, and the extra shuffle of exploded-array rows
-    // outweighs the parallelized kernel; decision recorded, left 1-task.
+    // clear win there, but the same fan HERE measured 1.47 -> 2.06 s (on
+    // q_ns_dedup_corpus, which then read this table) — consumers join the
+    // long hash arrays directly, and the extra shuffle outweighs the
+    // parallelized kernel.
     docs
       .select(col("doc_id"),
         graft.expr.ShingleHashes.shingleHashes(col(textCol), n).as("hs"))
@@ -75,152 +75,19 @@ object Dedup {
       .cache()
       .transform(Pins.track)
 
-  /** MinHash-LSH candidate pairs: signatures banded into `bands` bands of
-    * `rows` slots; docs sharing any band bucket become candidates and are
-    * verified with exact shingle-set Jaccard. Returns (doc_a, doc_b,
-    * jaccard) with doc_a < doc_b.
-    *
-    * `maxBucket` is the degenerate-corpus guard for 100 TB runs: a bucket
-    * holding B docs emits B² candidate pairs, and a pathological corpus
-    * (boilerplate-heavy, near-constant pages) concentrates mass in few
-    * buckets. Capping skips buckets larger than `maxBucket` — a documented
-    * recall trade (members of a skipped bucket usually co-occur in other,
-    * smaller buckets of their 15 remaining bands). Default off: exact
-    * reference behavior, and what the dedupCorpus oracle reproduces.
-    *
-    * `starCap` (r16) is the closure/drop-decision-preserving alternative
-    * (the [[graft.ops.Neutral.minHashEdgesSkewSafe]] policy): oversized
-    * buckets emit hub-verified STAR candidates (bucket-min rep → member,
-    * O(size)) instead of being skipped; every candidate still pays exact
-    * Jaccard verification. Only member↔member pairs meeting EXCLUSIVELY
-    * inside over-cap buckets are traded for the hub edge. At most one of
-    * maxBucket/starCap may be set. */
+  /** MinHash-LSH candidate pairs (doc_a < doc_b, verified jaccard) — a
+    * forwarder to [[Neutral.minHashCandidates]], the one md5-seeded
+    * implementation the DuckDB oracle reproduces; same parameters, same
+    * `maxBucket` (drop) and `starCap` (star) bucket policies. Kept as a
+    * named entry point because the benchmark harness composes
+    * [[dedupCorpus]]'s stages through it, so its traced run stays equal
+    * to the real call. */
   def minHashCandidates(docs: DataFrame, textCol: String = "text",
       shingleN: Int = 3, bands: Int = 16, rows: Int = 4,
       maxBucket: Option[Int] = None,
-      starCap: Option[Int] = None): DataFrame = {
-    require(bands * rows == 64, "bands*rows must equal the 64-slot signature")
-    require(maxBucket.isEmpty || starCap.isEmpty,
-      "maxBucket (drop) and starCap (star) are alternative bucket policies")
-    import org.apache.spark.sql.expressions.Window
-    val sig = shingleTable(docs, textCol, shingleN)
-      .withColumn("sig", minhashSignature(col("hs")))
-      .select(col("doc_id"), col("hs"), col("sig"))
-    // one row per (doc, band): bucket key = hash of the band's slice
-    val banded0 = sig.select(
-      col("doc_id"), col("hs"),
-      posexplode(expr(
-        s"transform(sequence(0, ${bands - 1}), b -> xxhash64(b, slice(sig, b * $rows + 1, $rows)))"))
-        .as(Seq("band", "bucket")))
-    val banded = maxBucket match {
-      case Some(m) =>
-        // window over the same (band, bucket) key the join shuffles on —
-        // the size count reuses that partitioning, no extra exchange
-        banded0
-          .withColumn("bsize",
-            count(lit(1)).over(Window.partitionBy("band", "bucket")))
-          .filter(col("bsize") <= m)
-          .drop("bsize")
-      case None => banded0
-    }
-    val cand = starCap match {
-      case Some(cap) =>
-        // candidates travel as narrow (doc_a, doc_b) here and the shingle
-        // arrays re-attach afterwards: star dedup must not carry `hs`
-        // through the union/distinct
-        val w = Window.partitionBy("band", "bucket")
-        val sized = banded0
-          .withColumn("bsize", count(lit(1)).over(w))
-          .withColumn("rep", min(col("doc_id")).over(w))
-        val small = sized.filter(col("bsize") <= cap)
-          .select("band", "bucket", "doc_id")
-        val pairsSmall = small.select(col("band"), col("bucket"),
-            col("doc_id").as("doc_a"))
-          .join(small.select(col("band"), col("bucket"),
-            col("doc_id").as("doc_b")), Seq("band", "bucket"))
-          .filter(col("doc_a") < col("doc_b"))
-          .select("doc_a", "doc_b")
-        val star = sized.filter(col("bsize") > cap &&
-            col("doc_id") =!= col("rep"))
-          .select(col("rep").as("doc_a"), col("doc_id").as("doc_b"))
-        pairsSmall.unionByName(star).distinct()
-          .join(sig.select(col("doc_id").as("doc_a"), col("hs").as("sh_a")),
-            Seq("doc_a"))
-          .join(sig.select(col("doc_id").as("doc_b"), col("hs").as("sh_b")),
-            Seq("doc_b"))
-      case None =>
-        val a = banded.select(col("band"), col("bucket"),
-          col("doc_id").as("doc_a"), col("hs").as("sh_a"))
-        val b = banded.select(col("band"), col("bucket"),
-          col("doc_id").as("doc_b"), col("hs").as("sh_b"))
-        a.join(b, Seq("band", "bucket"))
-          .filter(col("doc_a") < col("doc_b"))
-          .select("doc_a", "doc_b", "sh_a", "sh_b")
-          .distinct()
-    }
-    cand
-      .withColumn("jaccard", jaccardSorted(col("sh_a"), col("sh_b")))
-      .select("doc_a", "doc_b", "jaccard")
-  }
-
-  /** 64-bit SimHash: per-word xxhash64, signed bit-vote per bit position,
-    * assembled into one long. Explode → 64 conditional sums → bit OR fold. */
-  def simHash(docs: DataFrame, textCol: String = "text"): DataFrame = {
-    val hashed = docs
-      .select(col("doc_id"), explode(words(textCol)).as("word"))
-      .filter(col("word") =!= "")
-      .select(col("doc_id"), xxhash64(col("word")).as("h"))
-    val votes = (0 until 64).map { j =>
-      sum(when(expr(s"(h >> $j) & 1") === 1, 1).otherwise(-1)).as(s"b$j")
-    }
-    val agg = hashed.groupBy("doc_id").agg(votes.head, votes.tail: _*)
-    val sim = (0 until 64)
-      .map(j => when(col(s"b$j") > 0, lit(1L << j)).otherwise(lit(0L)))
-      .reduce((x, y) => x.bitwiseOR(y))
-    agg.select(col("doc_id"), sim.as("simhash"))
-  }
-
-  /** SimHash near-dup candidate count per doc, with multi-table probing:
-    * the 64-bit signature splits into `maxHamming + 1` disjoint bit blocks,
-    * each block is a bucket table, and candidates collide in ANY table. By
-    * pigeonhole, <= maxHamming differing bits cannot touch all
-    * maxHamming + 1 blocks, so every true pair shares at least one bucket —
-    * recall is exactly 1 (single-prefix bucketing silently missed pairs
-    * differing in a prefix bit). The quadratic check still runs only inside
-    * buckets; pairs are deduped before counting (a near pair collides in
-    * several tables). */
-  def simHashNearDups(docs: DataFrame, textCol: String = "text",
-      maxHamming: Int = 3): DataFrame =
-    simHashNearDupsFromSig(simHash(docs, textCol), maxHamming)
-
-  /** Multi-table near-dup counts over precomputed (doc_id, simhash)
-    * signatures — split out so tests can plant exact signatures. */
-  def simHashNearDupsFromSig(sh: DataFrame, maxHamming: Int = 3): DataFrame = {
-    val tables = maxHamming + 1
-    val width = 64 / tables
-    // width = 64 (maxHamming = 0, exact-match table): 1L << 64 wraps to 1
-    // in JVM shift semantics, so the all-bits mask needs its own arm
-    val mask = if (width >= 64) -1L else (1L << width) - 1
-    val buckets = (0 until tables).map(t =>
-      expr(s"(simhash >> ${t * width}) & $mask"))
-    val bucketed = sh.select(col("doc_id"), col("simhash"),
-      posexplode(array(buckets: _*)).as(Seq("t", "bucket")))
-    val a = bucketed.select(col("t"), col("bucket"),
-      col("doc_id").as("doc_a"), col("simhash").as("sim_a"))
-    val b = bucketed.select(col("t"), col("bucket"),
-      col("doc_id").as("doc_b"), col("simhash").as("sim_b"))
-    val pairs = a.join(b, Seq("t", "bucket"))
-      .filter(col("doc_a") < col("doc_b") &&
-        bit_count(col("sim_a").bitwiseXOR(col("sim_b"))) <= maxHamming)
-      .select("doc_a", "doc_b")
-      .distinct()
-    sh.select(col("doc_id"), col("simhash"))
-      .join(
-        pairs.select(explode(array(col("doc_a"), col("doc_b"))).as("doc_id"))
-          .groupBy("doc_id").agg(count(lit(1)).as("n_near")),
-        Seq("doc_id"), "left")
-      .na.fill(0L, Seq("n_near"))
-  }
+      starCap: Option[Int] = None): DataFrame =
+    Neutral.minHashCandidates(docs, textCol, shingleN, bands, rows,
+      maxBucket = maxBucket, starCap = starCap)
 
   /** Shared core of the n-gram pipeline (PPJoin-style rarest-prefix
     * blocking): candidates must share one of each doc's `prefixK`
@@ -433,7 +300,10 @@ object Dedup {
   /** End-to-end corpus dedup — the API a training-data pipeline calls:
     * drop exact duplicates (keep min doc_id per digest), then drop the
     * larger id of every MinHash-verified near-dup pair at `minJaccard`.
-    * Returns the retained rows of `docs` unchanged.
+    * Candidates come from [[Neutral.minHashCandidates]] (md5-seeded
+    * lanes, 16×4 bands), so the whole stage is reproducible by the
+    * `q_ns_dedup_corpus` oracle. Returns the retained rows of `docs`
+    * unchanged.
     *
     * Defaults to the skew-safe star candidates (r16): a dominant
     * duplicate class measured quadratic under full enumeration (r15 sf1
@@ -451,7 +321,7 @@ object Dedup {
     // kept feeds both the near-dup candidate search and the final anti
     // join — uncached, the exact-dedup digest groupBy re-executes twice
     val kept = Pins.track(docs.join(exactKeep, Seq("doc_id"), "left_semi").cache())
-    val nearDrop = minHashCandidates(kept, textCol, starCap = starCap)
+    val nearDrop = Neutral.minHashCandidates(kept, textCol, starCap = starCap)
       .filter(col("jaccard") >= minJaccard)
       .select(greatest(col("doc_a"), col("doc_b")).as("doc_id"))
       .distinct()

@@ -5,15 +5,15 @@ import org.apache.spark.sql.functions._
 
 import graft.expr.ArrayExprs.jaccardSorted
 
-/** Engine-neutral (md5-seeded) twins of the hash-randomized dedup/ANN
-  * operators, so the FULL pipelines — signature, banding, bucketing,
-  * verification — are reproducible in ANSI-ish SQL and sit under the
-  * driver's DuckDB hash gate. The xxhash64-kernel forms in [[Dedup]] /
-  * [[Similarity]] remain the raw-throughput path (one fused hash per
-  * element); these twins pay one md5 per element plus cheap integer/float
-  * arithmetic, an acceptable constant for a fully cross-engine-checkable
-  * pipeline. Same scale shape as the kernel forms: per-row signatures are
-  * embarrassingly parallel and every join is equi on (band/table, bucket).
+/** Engine-neutral (md5-seeded) near-dup and ANN operators — the one
+  * implementation of MinHash/LSH, SimHash and sign-LSH blocking in the
+  * engine ([[Dedup.dedupCorpus]] runs the MinHash pipeline here), so the
+  * FULL pipelines — signature, banding, bucketing, verification — are
+  * reproducible in ANSI-ish SQL and sit under the driver's DuckDB hash
+  * gate. Each element pays one md5 plus cheap integer/float arithmetic,
+  * in compiled kernels (graft.expr.NeutralKernels). Per-row signatures
+  * are embarrassingly parallel and every join is equi on (band/table,
+  * bucket).
   *
   * Seeding contract (everything below derives from md5, which both engines
   * share bit-for-bit):
@@ -77,11 +77,6 @@ object Neutral {
 
   // ---------------------------------------------------------------- MinHash
 
-  /** MinHash-LSH candidate pairs with md5-seeded permutations — same
-    * banding pipeline as [[Dedup.minHashCandidates]] (one row per (doc,
-    * band), equi join on (band, bucket), exact-Jaccard verification), but
-    * every lane min is reproducible in SQL. One md5 per distinct shingle;
-    * the 64 lane permutations are integer multiply-adds. */
   /** (cached) md5 signature table: (doc_id, hs, sig). Cached because every
     * consumer fans out over it (banding sides + verify re-attach joins) —
     * uncached, the shingle + signature kernels would re-execute per branch
@@ -119,10 +114,15 @@ object Neutral {
           s"array_join(transform(slice(sig, b * $rows + 1, $rows), x -> cast(x as string)), ','))"))
         .as(Seq("band", "bucket")))
 
-  /** `maxBucket` is the degenerate-corpus guard (same trade as
-    * [[Dedup.minHashCandidates]]): a bucket holding B docs emits B²
-    * candidate pairs, and a boilerplate-heavy corpus concentrates mass in
-    * few buckets; capping skips oversized buckets — a documented recall
+  /** MinHash-LSH candidate pairs with md5-seeded permutations: one row
+    * per (doc, band), equi join on (band, bucket), exact-Jaccard
+    * verification, and every lane min reproducible in SQL. One md5 per
+    * distinct shingle; the 64 lane permutations are integer multiply-adds.
+    * Returns (doc_a, doc_b, jaccard) with doc_a < doc_b.
+    *
+    * `maxBucket` is the degenerate-corpus guard: a bucket holding B docs
+    * emits B² candidate pairs, and a boilerplate-heavy corpus concentrates
+    * mass in few buckets; capping skips oversized buckets — a documented recall
     * trade (skipped members usually co-occur in other, smaller buckets of
     * their remaining bands). Default off: the oracle reproduces the
     * uncapped candidate set.
@@ -132,10 +132,13 @@ object Neutral {
     * rep → member, O(size)) instead of being skipped — every candidate,
     * pair or star, still pays the exact Jaccard verification, so emitted
     * edges are never approximate; only member↔member pairs meeting
-    * EXCLUSIVELY inside over-cap buckets are traded for the hub edge (the
-    * [[minHashEdgesSkewSafe]] policy — component-equal on a genuine
-    * duplicate class, pinned by ScaleSpec). Component-level consumers
-    * ([[dedupCorpusClustered]], joint multimodal dedup — but NOT
+    * EXCLUSIVELY inside over-cap buckets are traded for the hub edge —
+    * component-equal to full enumeration on a genuine duplicate class
+    * (pinned by ScaleSpec; `q_ns_dedup_skew_safe` runs this arm at cap 16).
+    * A class owning half the corpus lands in the same buckets in every
+    * band, so full enumeration there is ~n²/8 verified pairs, the star
+    * form n−1 edges. [[Dedup.dedupCorpus]] and the component-level
+    * consumers ([[dedupCorpusClustered]], joint multimodal dedup — but NOT
     * [[leakageSafeSplit]], whose contamination guarantee makes exactness
     * the right default; see its doc) default to Some(256) since r16:
     * real boilerplate corpora have
@@ -205,60 +208,10 @@ object Neutral {
       .select("doc_a", "doc_b", "jaccard")
   }
 
-  /** Skew-safe near-dup EDGES for closure under a DOMINANT duplicate
-    * class (r14 verdict #5 — the one scale hazard uniform fixtures never
-    * exercise). Buckets at or under `maxBucket` emit full verified pairs
-    * (exactly [[minHashCandidates]]'s behavior); OVERSIZED buckets emit
-    * hub-verified STAR edges instead: each member is verified against the
-    * bucket's min-doc_id representative only, O(size) per bucket instead
-    * of O(size²). A class owning half the corpus lands in the same
-    * buckets in every band — full pair enumeration there is ~n²/8
-    * verified pairs (measured: ScaleEvidence `skew` mode), while the star
-    * form emits n−1 edges that yield the IDENTICAL connected components
-    * for a genuine duplicate class (every member ~ the hub, so the hub
-    * links them transitively). The trade, documented like `maxBucket`'s
-    * drop: a pathological bucket mixing DISSIMILAR docs loses member↔
-    * member edges whose hub verification fails; `maxBucket=None`-style
-    * completeness is not claimed, component EQUALITY on duplicate-class
-    * skew is (pinned by ScaleSpec). Both small-bucket size/pair and
-    * big-bucket rep derivations reuse the (band, bucket) shuffle
-    * partitioning — one exchange feeds the size window, the rep window,
-    * and the self-join. Returns undirected verified (doc_a < doc_b)
-    * edges. */
-  def minHashEdgesSkewSafe(docs: DataFrame, textCol: String = "text",
-      shingleN: Int = 3, bands: Int = 16, rows: Int = 4,
-      maxBucket: Int = 64, minJaccard: Double = 0.8): DataFrame = {
-    require(bands * rows == 64, "bands*rows must equal the 64-lane signature")
-    import org.apache.spark.sql.expressions.Window
-    val sh = sigTable(docs, textCol, shingleN)
-    val w = Window.partitionBy("band", "bucket")
-    val sized = bandedOf(sh, bands, rows)
-      .withColumn("bsize", count(lit(1)).over(w))
-      .withColumn("rep", min(col("doc_id")).over(w))
-    val small = sized.filter(col("bsize") <= maxBucket)
-      .select("band", "bucket", "doc_id")
-    val pairsSmall = small.select(col("band"), col("bucket"),
-        col("doc_id").as("doc_a"))
-      .join(small.select(col("band"), col("bucket"), col("doc_id").as("doc_b")),
-        Seq("band", "bucket"))
-      .filter(col("doc_a") < col("doc_b"))
-      .select("doc_a", "doc_b")
-    // star edges: rep = min(doc_id) over the bucket, so rep < member and
-    // the (doc_a < doc_b) orientation is already canonical
-    val star = sized.filter(col("bsize") > maxBucket &&
-        col("doc_id") =!= col("rep"))
-      .select(col("rep").as("doc_a"), col("doc_id").as("doc_b"))
-    val cand = pairsSmall.unionByName(star).distinct()
-    cand
-      .join(sh.select(col("doc_id").as("doc_a"), col("hs").as("sh_a")), Seq("doc_a"))
-      .join(sh.select(col("doc_id").as("doc_b"), col("hs").as("sh_b")), Seq("doc_b"))
-      .filter(jaccardSorted(col("sh_a"), col("sh_b")) >= minJaccard)
-      .select("doc_a", "doc_b")
-  }
-
-  /** DuckDB twin of [[minHashEdgesSkewSafe]]'s edge set over `docsRel`:
-    * CTE chain ending in `hits(doc_a, doc_b)` — compose with a recursive
-    * closure for component oracles. */
+  /** DuckDB twin of `minHashCandidates(starCap = Some(maxBucket))`
+    * filtered at `minJaccard`, over `docsRel`: CTE chain ending in
+    * `hits(doc_a, doc_b)` — compose with a recursive closure for
+    * component oracles. */
   private[graft] def skewSafeEdgeCtes(docsRel: String, minJaccard: Double,
       maxBucket: Int, shingleN: Int = 3, bands: Int = 16,
       rows: Int = 4): String =
@@ -1119,18 +1072,28 @@ object Neutral {
       assemble("vl").as("sim_lo"), assemble("vh").as("sim_hi"))
   }
 
-  /** Multi-table near-dup counts over (sim_lo, sim_hi) halves: the 64 bits
-    * split into maxHamming+1 disjoint blocks (recall 1 by pigeonhole, as in
-    * [[Dedup.simHashNearDupsFromSig]]); blocks must align with the 32-bit
-    * halves, so maxHamming+1 must be a power of two >= 2. */
+  /** SimHash near-dup candidate count per doc, with multi-table probing:
+    * the 64 bits split into maxHamming+1 disjoint blocks, each block is a
+    * bucket table, and candidates collide in ANY table. By pigeonhole,
+    * <= maxHamming differing bits cannot touch all maxHamming+1 blocks, so
+    * every true pair shares a bucket — recall is exactly 1 (single-prefix
+    * bucketing silently missed pairs differing in a prefix bit). Blocks
+    * must align with the 32-bit halves, so maxHamming+1 must be a power of
+    * two >= 2. Pairs are deduped before counting (a near pair collides in
+    * several tables). */
   def simHashNearDups(docs: DataFrame, textCol: String = "text",
+      maxHamming: Int = 3): DataFrame =
+    simHashNearDupsFromSig(simHash(docs, textCol), maxHamming)
+
+  /** Multi-table near-dup counts over precomputed (doc_id, sim_lo, sim_hi)
+    * signatures — split out so tests can plant exact signatures. */
+  private[graft] def simHashNearDupsFromSig(sh: DataFrame,
       maxHamming: Int = 3): DataFrame = {
     val tables = maxHamming + 1
     val width = 64 / tables
     require(tables >= 2 && 64 % tables == 0 && 32 % width == 0,
       "maxHamming+1 must be a power of two >= 2 (blocks align with halves)")
     val mask = (1L << width) - 1
-    val sh = simHash(docs, textCol)
     val buckets = (0 until tables).map { t =>
       val bitpos = t * width
       val half = if (bitpos < 32) col("sim_lo") else col("sim_hi")
@@ -1234,10 +1197,13 @@ object Neutral {
         "raise Neutral.lshMaxDim for wider embeddings"))))
 
   /** Built-in-functions form of the sign-projection buckets — the semantic
-    * reference the compiled kernel must match bit-for-bit (NeutralSpec). */
+    * reference the compiled kernel must match bit-for-bit (NeutralSpec).
+    * A vector with a null element yields null, as the kernel does: its
+    * null dots would otherwise read as clear bits and bucket the vector
+    * as if it were zero-filled. */
   private[graft] def lshBucketsRef(embCol: Column, nbits: Int = 8,
       tables: Int = 4): Column =
-    requireDim(embCol, array((0 until tables).map { t =>
+    requireDim(embCol, when(!exists(embCol, _.isNull), array((0 until tables).map { t =>
       (0 until nbits).map { b =>
         val dot = aggregate(
           zip_with(slice(signsLit(t, b), lit(1), size(embCol)), embCol,
@@ -1245,7 +1211,7 @@ object Neutral {
           lit(0.0), (acc, v) => acc + v)
         when(dot >= 0, lit(1L << b)).otherwise(lit(0L))
       }.reduce(_ + _)
-    }: _*))
+    }: _*)))
 
   /** `tables` md5-seeded sign-projection buckets (`nbits` bits each) per
     * vector, computed by the compiled kernel (graft.expr.Md5LshBuckets).
@@ -1374,9 +1340,12 @@ object Neutral {
   }
 
   /** Embedding-cosine near-dup counts at `minCos`, blocked by md5-seeded
-    * multi-table sign-LSH — same pipeline as
-    * [[Similarity.cosineNearDupCounts]], oracle-reproducible buckets. The
-    * per-table bucket ids ride along in the output so the hash gate
+    * multi-table sign-LSH: each vector lands in `tables` buckets, candidate
+    * pairs share (table, bucket), and candidates are verified with the
+    * exact cosine kernel — OR-amplification keeps recall high for
+    * genuinely-near pairs while the only shuffle is the equi join on
+    * (table, bucket). [[Similarity.cosineNearDupCountsExact]] is the
+    * all-pairs correctness baseline. The per-table bucket ids ride along in the output so the hash gate
     * validates the cross-engine bucket computation DIRECTLY — on a corpus
     * with no qualifying pair, count parity alone would not prove the
     * candidate generation matches.
@@ -1725,8 +1694,12 @@ object Neutral {
        |SELECT vec_id, pos, v FROM p
        |ORDER BY vec_id, pos""".stripMargin
 
-  /** Multi-table sign-LSH ANN with exact rerank — the md5-seeded twin of
-    * [[Similarity.lshTopK]] (rank-only output; ranks are engine-stable). */
+  /** LSH-bucketed ANN with multi-table probing: a candidate shares the
+    * query's bucket in ANY of `tables` md5-seeded sign-LSH tables
+    * (OR-amplification — per-table recall shortfall multiplies away), then
+    * exact rerank over the deduped candidate set. Recall < 1 by
+    * construction; (nbits, tables) is the scan-fraction/recall dial.
+    * Rank-only output; ranks are engine-stable. */
   def lshTopK(emb: DataFrame, queryIds: Seq[Long], k: Int, nbits: Int = 8,
       tables: Int = 4): DataFrame = {
     import org.apache.spark.sql.expressions.Window

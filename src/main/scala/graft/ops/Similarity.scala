@@ -11,12 +11,11 @@ import graft.expr.VecExprs
   *
   * Scale design: brute-force is the correctness baseline (query-set ×
   * candidate-set broadcast join — fine when the query set is small); the
-  * scale paths are IVF (route each query to its nearest centroid, search
-  * only that partition of the corpus) and LSH (random-hyperplane sign
-  * buckets, search only the colliding bucket). Both cut the scanned
-  * fraction to ~1/nlist with the same top-k code path for reranking.
-  * Near-dup pair detection blocks on multi-table LSH buckets — the only
-  * joins are equi-joins on (table, bucket), never all-pairs.
+  * scale path here is IVF (route each query to its nearest centroid,
+  * search only that partition of the corpus), cutting the scanned
+  * fraction to ~1/nlist with the same top-k code path for reranking. LSH
+  * search and LSH-blocked near-dup detection live in [[Neutral]]
+  * (md5-seeded sign buckets, `lshTopK` / `cosineNearDupCounts`).
   *
   * Outputs are rank-only (query_id, rank, neighbor_id): scores are doubles
   * whose last-ulp depends on the engine, ranks don't (random-vector cosine
@@ -479,85 +478,10 @@ object Similarity {
         col("label").as("neighbor_label"))
   }
 
-  /** Random-hyperplane LSH bucket id: `nbits` sign bits over hyperplanes
-    * derived deterministically from XXH64 — no stored model, reproducible
-    * across runs. Compiled kernel (graft.expr.LshBuckets). */
-  def lshBucket(embCol: String, nbits: Int): Column =
-    VecExprs.lshBuckets(col(embCol), nbits, 1).getItem(0)
-
-  /** LSH-bucketed ANN with multi-table probing: a candidate shares the
-    * query's bucket in ANY of `tables` independent hash tables
-    * (OR-amplification — per-table recall shortfall multiplies away), then
-    * exact rerank over the deduped candidate set. Recall < 1 by
-    * construction; (nbits, tables) is the scan-fraction/recall dial —
-    * tables = 1 recovers single-bucket LSH. Candidates are deduped on
-    * narrow (query, vec) keys before embeddings re-attach for scoring. */
-  def lshTopK(emb: DataFrame, queryIds: Seq[Long], k: Int, nbits: Int = 8,
-      tables: Int = 4): DataFrame = {
-    val bucketed = emb.select(col("vec_id"),
-      posexplode(graft.expr.VecExprs.lshBuckets(col("embedding"), nbits, tables))
-        .as(Seq("t", "bucket")))
-    val queries = bucketed.filter(col("vec_id").isin(queryIds: _*))
-      .select(col("vec_id").as("query_id"), col("t"), col("bucket"))
-    val cand = bucketed.join(broadcast(queries), Seq("t", "bucket"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select("query_id", "vec_id")
-      .distinct()
-    val qEmb = emb.filter(col("vec_id").isin(queryIds: _*))
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cos").desc, col("vec_id").asc)
-    cand
-      .join(emb.select(col("vec_id"), col("embedding")), Seq("vec_id"))
-      .join(broadcast(qEmb), Seq("query_id"))
-      .withColumn("cos", cosine("q_emb", "embedding"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("vec_id").as("neighbor_id"))
-  }
-
-  /** Embedding-cosine near-duplicate counts at `minCos`, blocked by
-    * multi-table LSH buckets: each vector lands in `tables` buckets
-    * (`nbits` sign bits each), candidate pairs share (table, bucket), and
-    * candidates are verified with the exact cosine kernel. OR-amplification
-    * across tables keeps recall high for genuinely-near pairs (a cos 0.95
-    * pair flips any given hyperplane with p = angle/pi ~ 0.1) while the only
-    * shuffle is the equi-join on (table, bucket) — candidate volume scales
-    * with bucket occupancy, never all-pairs. Pairs are deduped on narrow
-    * (id, id) keys before embeddings are re-attached for scoring.
-    *
-    * `starCap` (default 256, the house skew policy — [[Neutral]]'s
-    * cosineCandidates): under a FIXED bit width, bucket occupancy grows
-    * ∝ n, so uncapped within-bucket pairs grow ∝ n² (measured 1.95–2.00
-    * on the sf0.1→sf1 decade, r16); over-cap buckets emit hub-verified
-    * star candidates instead, making `n_near` a documented lower bound
-    * there (exact below the cap; `None` restores full enumeration).
-    * `nbits = 0` (default) derives the depth from the corpus size
-    * ([[Neutral.lshBitsFor]] — pins expected bucket occupancy so
-    * candidates stay linear in n; the density half of the r17 fix). */
-  def cosineNearDupCounts(emb: DataFrame, minCos: Double,
-      nbits: Int = 0, tables: Int = 4,
-      starCap: Option[Int] = Some(256)): DataFrame = {
-    val bits = if (nbits > 0) nbits else Neutral.lshBitsFor(emb.count())
-    val bucketed = emb.select(col("vec_id"),
-      posexplode(VecExprs.lshBuckets(col("embedding"), bits, tables))
-        .as(Seq("t", "bucket")))
-    val cand = Neutral.cosineCandidates(bucketed, starCap)
-    val pairs = cand
-      .join(emb.select(col("vec_id").as("id_a"), col("embedding").as("e_a")), Seq("id_a"))
-      .join(emb.select(col("vec_id").as("id_b"), col("embedding").as("e_b")), Seq("id_b"))
-      .filter(cosine("e_a", "e_b") >= minCos)
-    emb.select(col("vec_id"))
-      .join(pairs.select(explode(array(col("id_a"), col("id_b"))).as("vec_id"))
-        .groupBy("vec_id").agg(count(lit(1)).as("n_near")),
-        Seq("vec_id"), "left")
-      .na.fill(0L, Seq("n_near"))
-  }
-
-  /** Exact all-pairs variant of [[cosineNearDupCounts]] — the correctness
-    * baseline and oracle anchor. O(n²) BY DESIGN: only ever run it on a
-    * bounded slice (the driver query caps vec_id < 200); the LSH-blocked
-    * form above is the corpus-scale path. */
+  /** Exact all-pairs variant of [[Neutral.cosineNearDupCounts]] — the
+    * correctness baseline and oracle anchor. O(n²) BY DESIGN: only ever run
+    * it on a bounded slice (the driver query caps vec_id < 200); the
+    * LSH-blocked form is the corpus-scale path. */
   def cosineNearDupCountsExact(emb: DataFrame, minCos: Double): DataFrame = {
     val a = emb.select(col("vec_id").as("id_a"), col("embedding").as("e_a"))
     val b = emb.select(col("vec_id").as("id_b"), col("embedding").as("e_b"))

@@ -31,9 +31,9 @@ object NorthStar {
   /** MinHash-LSH near-dup candidates (shingle → 64-lane signature → banded
     * buckets → verified Jaccard); per-doc candidate count. md5-seeded
     * permutations (graft.ops.Neutral) make the whole pipeline — lane mins,
-    * band buckets, candidate set — reproducible in the DuckDB oracle; the
-    * xxhash64 kernel form (Dedup.minHashCandidates) stays the raw-
-    * throughput path with behavioral ScalaTest coverage. */
+    * band buckets, candidate set — reproducible in the DuckDB oracle; it
+    * is the engine's only MinHash implementation, so q_ns_dedup_corpus and
+    * q_ns_prepare_corpus run the same candidate generator. */
   val dedupMinHash = QueryDef(
     "q_ns_dedup_minhash",
     graft.ops.Neutral.minHashOracleSql(0.5)) { (s, d) =>
@@ -185,8 +185,8 @@ object NorthStar {
     * at pairwise Jaccard ≈ 0.96 and land in the same LSH buckets in
     * every band). Full pair enumeration there is ~n²/8 verified pairs —
     * the quadratic blow-up uniform fixtures never exercise (measured in
-    * ScaleEvidence `skew`); [[graft.ops.Neutral.minHashEdgesSkewSafe]]
-    * emits hub-verified STAR edges for oversized buckets instead, O(n)
+    * ScaleEvidence `skew`); [[graft.ops.Neutral.minHashCandidates]] with
+    * `starCap` emits hub-verified STAR edges for oversized buckets, O(n)
     * edges with identical closure on a genuine duplicate class. Output:
     * per-doc component id. Oracle: the same size-gated edge semantics in
     * SQL + recursive-CTE transitive closure. */
@@ -225,8 +225,9 @@ object NorthStar {
           concat(col("base_text"), lit(" zz"),
             (col("doc_id") % 5).cast("string")))
           .otherwise(col("text")).as("text"))
-    val edges = graft.ops.Neutral.minHashEdgesSkewSafe(skewed,
-      maxBucket = 16, minJaccard = 0.8)
+    val edges = graft.ops.Neutral.minHashCandidates(skewed, starCap = Some(16))
+      .filter(col("jaccard") >= 0.8)
+      .select("doc_a", "doc_b")
     val comp = graft.ops.Dedup.connectedComponents(edges)
     docs.select("doc_id")
       .join(comp, Seq("doc_id"), "left")
@@ -618,7 +619,10 @@ object NorthStar {
     * jaccard >= 0.8. The oracle recomputes the TRUE jaccard >= 0.8 pair set
     * all-pairs — parity holds because 16-band/4-row banding finds a
     * J >= 0.8 pair with p = 1-(1-J^4)^16 > 0.9998 and the verify step
-    * discards false positives exactly. */
+    * discards false positives exactly. The bands are md5-seeded
+    * (Neutral.minHashCandidates), so which pairs banding finds is itself
+    * engine-independent: on the sf0.001/0.01/0.1 fixtures it finds every
+    * oracle pair. */
   val dedupCorpusQ = QueryDef(
     "q_ns_dedup_corpus",
     """WITH kept AS (

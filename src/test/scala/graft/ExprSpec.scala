@@ -362,6 +362,20 @@ class ExprSpec extends AnyFunSuite {
         |""".stripMargin).head()
     assert(math.abs(vec.getDouble(0) - 1.0) < 1e-12)
     assert(vec.getInt(1) == 4)
+    // lsh_buckets is the md5-seeded sign-LSH kernel the operators run
+    val rnd = new scala.util.Random(7)
+    val emb = (0L until 20L)
+      .map(i => (i, Array.fill(64)(rnd.nextFloat() * 2 - 1)))
+      .toDF("vec_id", "embedding")
+    emb.createOrReplaceTempView("lsh_emb")
+    val viaSql = spark.sql(
+      "SELECT vec_id, lsh_buckets(embedding, 8, 4) AS b FROM lsh_emb")
+    val viaOp = emb.select(col("vec_id"),
+      graft.ops.Neutral.lshBuckets(col("embedding"), 8, 4).as("b"))
+    val mismatch = viaSql.join(viaOp.withColumnRenamed("b", "o"), "vec_id")
+      .filter(not(col("b") <=> col("o"))).count()
+    assert(viaSql.count() == 20 && mismatch == 0,
+      s"$mismatch vectors where lsh_buckets differs from Neutral.lshBuckets")
   }
 
   test("KernelSubstitution rewrites the composable cosine fold to the kernel") {
@@ -416,11 +430,11 @@ class ExprSpec extends AnyFunSuite {
     assert(mismatches == 0)
   }
 
-  test("LshBuckets: deterministic, `tables` entries, scale-invariant") {
-    import graft.expr.VecExprs
+  test("Md5LshBuckets: deterministic, `tables` entries, scale-invariant") {
+    import graft.expr.Md5LshBuckets
     val emb = graft.queries.T.embeddings(spark, "/root/testdata/sf0.001").limit(20)
     def buckets(df: org.apache.spark.sql.DataFrame) = df
-      .select(col("vec_id"), VecExprs.lshBuckets(col("embedding"), 8, 4).as("b"))
+      .select(col("vec_id"), Md5LshBuckets.lshBuckets(col("embedding"), 8, 4).as("b"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1).toSeq).toMap
     val b1 = buckets(emb)
     val b2 = buckets(emb)

@@ -401,12 +401,24 @@ class NeutralSpec extends AnyFunSuite {
 
   test("kernel bit-compat: Md5LshBuckets equals the built-in-functions form") {
     val emb = graft.queries.T.embeddings(spark, "/root/testdata/sf0.001")
-    val mismatch = emb.select(
+    // plant a vector with one null element: both forms must yield null,
+    // never a bucket computed as if the element were 0.0
+    val holed = emb.filter(col("vec_id") === 0)
+      .select((col("vec_id") + 100000L).as("vec_id"),
+        transform(col("embedding"), (x, i) => when(i === 3, lit(null)).otherwise(x))
+          .as("embedding"),
+        col("label"))
+    val mismatch = emb.unionByName(holed).select(
         graft.expr.Md5LshBuckets.lshBuckets(col("embedding"), 8, 4).as("k"),
         graft.ops.Neutral.lshBucketsRef(col("embedding"), 8, 4).as("r"))
-      .filter(col("k") =!= col("r"))
+      .filter(not(col("k") <=> col("r")))
       .count()
     assert(mismatch == 0, s"$mismatch vectors with kernel/reference bucket mismatch")
+    val holedBuckets = holed
+      .select(graft.expr.Md5LshBuckets.lshBuckets(col("embedding"), 8, 4))
+      .head()
+    assert(holedBuckets.isNullAt(0),
+      s"a null element must null the buckets, got ${holedBuckets.get(0)}")
   }
 
   test("kernel bit-compat: Md5Winnow equals the built-in-functions form") {

@@ -269,32 +269,27 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("simhash marks the exact duplicate as near (hamming 0)") {
-    val near = Dedup.simHashNearDups(docsWithDups)
+    val near = graft.ops.Neutral.simHashNearDups(docsWithDups)
       .filter(col("doc_id").isin(5L, 20005L))
       .select("n_near").as[Long].collect()
     assert(near.forall(_ >= 1))
   }
 
   test("multi-table simhash probing finds pairs differing in a prefix bit") {
-    // bit 60 lives in the old single-table 16-bit prefix: flipping it used
-    // to move the doc to another bucket and the pair was never compared
+    // bit 60 (bit 28 of the high half) lives in the old single-table
+    // 16-bit prefix: flipping it used to move the doc to another bucket
+    // and the pair was never compared
     val base = 0x0123456789abcdefL
+    def halves(id: Long, sig: Long) = (id, sig & 0xffffffffL, sig >>> 32)
     val sigs = Seq(
-      (1L, base),
-      (2L, base ^ (1L << 60)),
-      (3L, 0x7edcba9876543210L)).toDF("doc_id", "simhash")
-    val near = Dedup.simHashNearDupsFromSig(sigs, maxHamming = 3)
+      halves(1L, base),
+      halves(2L, base ^ (1L << 60)),
+      halves(3L, 0x7edcba9876543210L)).toDF("doc_id", "sim_lo", "sim_hi")
+    val near = graft.ops.Neutral.simHashNearDupsFromSig(sigs, maxHamming = 3)
       .select("doc_id", "n_near").as[(Long, Long)].collect().toMap
     assert(near(1L) == 1, s"hamming-1 prefix pair missed: $near")
     assert(near(2L) == 1)
     assert(near(3L) == 0)
-    // maxHamming = 0 degenerates to exact-signature match (single 64-bit
-    // table — the width-64 mask edge)
-    val exact = Dedup.simHashNearDupsFromSig(
-      Seq((1L, base), (2L, base), (3L, base ^ 1L)).toDF("doc_id", "simhash"),
-      maxHamming = 0)
-      .select("doc_id", "n_near").as[(Long, Long)].collect().toMap
-    assert(exact(1L) == 1 && exact(2L) == 1 && exact(3L) == 0)
   }
 
   test("LSH-blocked cosine near-dup finds a planted near-identical vector") {
@@ -306,7 +301,7 @@ class OpsSpec extends AnyFunSuite {
         expr("transform(embedding, x -> float(x * 2.0))").as("embedding"),
         col("label"))
     val withPlant = emb.unionByName(planted)
-    val approx = graft.ops.Similarity.cosineNearDupCounts(withPlant, 0.8)
+    val approx = graft.ops.Neutral.cosineNearDupCounts(withPlant, 0.8)
       .filter(col("vec_id").isin(0L, 100000L))
       .select("vec_id", "n_near").as[(Long, Long)].collect().toMap
     assert(approx(0L) >= 1, s"planted pair missed: $approx")
@@ -314,7 +309,7 @@ class OpsSpec extends AnyFunSuite {
     // no false positives: blocked counts never exceed the exact all-pairs
     // counts (candidates are verified with the exact kernel)
     val slice = emb.filter(col("vec_id") < 100)
-    val a = graft.ops.Similarity.cosineNearDupCounts(slice, 0.8)
+    val a = graft.ops.Neutral.cosineNearDupCounts(slice, 0.8)
       .select("vec_id", "n_near").as[(Long, Long)].collect().toMap
     val e = graft.ops.Similarity.cosineNearDupCountsExact(slice, 0.8)
       .select("vec_id", "n_near").as[(Long, Long)].collect().toMap
@@ -338,7 +333,7 @@ class OpsSpec extends AnyFunSuite {
       .filter(col("vec_id") >= 100000L && col("n_near") >= 1)
       .select("vec_id").as[Long].collect().toSet
     val exact = found(graft.ops.Similarity.cosineNearDupCountsExact(all, 0.9))
-    val approx = found(graft.ops.Similarity.cosineNearDupCounts(all, 0.9))
+    val approx = found(graft.ops.Neutral.cosineNearDupCounts(all, 0.9))
     assert(exact.size == 20, s"perturbation drifted below 0.9: ${exact.size}")
     val recall = approx.size.toDouble / exact.size
     assert(recall >= 0.7, s"LSH-blocked recall too low on near-identical pairs: $recall")
@@ -356,7 +351,7 @@ class OpsSpec extends AnyFunSuite {
       .collect().forall(_ == 3))
     // LSH: every returned neighbor shares the query's bucket; recall@10 of
     // the bucket-restricted search vs brute force must be nonzero overall
-    val lsh = Similarity.lshTopK(emb, Seq(0L, 1L, 2L), 10)
+    val lsh = graft.ops.Neutral.lshTopK(emb, Seq(0L, 1L, 2L), 10)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect()
     val hits = lsh.count { case (q, n) => brute.getOrElse(q, Set()).contains(n) }
     assert(hits > 0, "LSH found none of the brute-force top-10")

@@ -125,8 +125,8 @@ class PropertySpec extends AnyFunSuite {
         VecExprs.cosineSim(col("a"), col("b")).as("ab"),
         VecExprs.cosineSim(col("b"), col("a")).as("ba"),
         VecExprs.cosineSim(col("a"), col("a")).as("aa"),
-        VecExprs.lshBuckets(col("a"), 8, 4).as("ba4"),
-        VecExprs.lshBuckets(col("a_scaled"), 8, 4).as("bs4")).head()
+        graft.expr.Md5LshBuckets.lshBuckets(col("a"), 8, 4).as("ba4"),
+        graft.expr.Md5LshBuckets.lshBuckets(col("a_scaled"), 8, 4).as("bs4")).head()
       val ab = r.getDouble(0)
       assert(ab >= -1.0 - 1e-12 && ab <= 1.0 + 1e-12)
       assert(ab == r.getDouble(1), "cosine must be exactly symmetric")
