@@ -41,8 +41,8 @@ import org.apache.spark.sql.functions._
   *             scaling contracts measured
   *  - prefix   two-pass bucketed prefix sum vs the naive single-partition
   *             global window on 40M points — the ScaleOps.prefixSum A/B
-  *  - skew     dominant-duplicate-class dedup (naive pairs vs maxBucket
-  *             drop vs hub-verified star edges) + one interval covering
+  *  - skew     dominant-duplicate-class dedup (naive pairs vs
+  *             hub-verified star edges) + one interval covering
   *             the whole price domain through the j11 bucket join
   */
 object ScaleEvidence {
@@ -244,9 +244,9 @@ object ScaleEvidence {
     // closure floor: connected components alone over the chain's verified
     // pair set (pairs precomputed and cached outside the timer) — the
     // fixed per-iteration job latency nothing upstream can remove
-    val pairs = ops.Pins.track(
+    val pairs = ops.Pins.cache(
       ops.Neutral.minHashCandidates(incoming)
-        .filter(col("jaccard") >= 0.8).select("doc_a", "doc_b").cache())
+        .filter(col("jaccard") >= 0.8).select("doc_a", "doc_b"))
     pairs.count()
     val tComp = {
       val ts = (1 to reps).map { _ =>
@@ -899,9 +899,8 @@ object ScaleEvidence {
   /** `skew` mode (r14 verdict #5): the dominant-duplicate-class and
     * hot-interval hazards, measured. Plants a near-dup class owning HALF
     * of sf0.1's documents (2500 docs at pairwise J≈0.96 — every band
-    * routes them to the same LSH bucket) and compares three candidate
-    * policies: naive full pair enumeration (the quadratic blow-up),
-    * maxBucket drop (bounded but the class never collapses), and
+    * routes them to the same LSH bucket) and compares two candidate
+    * policies: naive full pair enumeration (the quadratic blow-up) and
     * hub-verified star edges (linear AND closure-identical —
     * [[graft.ops.Neutral.minHashCandidates]] with `starCap`, pinned by
     * ScaleSpec).
@@ -927,11 +926,11 @@ object ScaleEvidence {
     val nClass = nDocs / 2
     def run(label: String)(edges: => DataFrame): (Long, Long, Double) = {
       val (pairsAndComps, t) = timed {
-        val e = edges.cache()
+        val e = ops.Pins.cache(edges)
         val n = e.count()
         val nc = Dedup.connectedComponents(e)
           .agg(countDistinct(col("component"))).head().getLong(0)
-        e.unpersist()
+        ops.Pins.release(e)
         (n, nc)
       }
       println(s"""SKEW_DEDUP {"policy":"$label","docs":$nDocs,""" +
@@ -944,10 +943,6 @@ object ScaleEvidence {
       Neutral.minHashCandidates(sk).filter(col("jaccard") >= 0.8)
         .select("doc_a", "doc_b")
     }
-    val (nCap, cCap, _) = run("max_bucket_drop") {
-      Neutral.minHashCandidates(sk, maxBucket = Some(16))
-        .filter(col("jaccard") >= 0.8).select("doc_a", "doc_b")
-    }
     val (nStar, cStar, _) = run("skew_safe_star") {
       Neutral.minHashCandidates(sk, starCap = Some(16))
         .filter(col("jaccard") >= 0.8).select("doc_a", "doc_b")
@@ -955,8 +950,7 @@ object ScaleEvidence {
     println(s"""SKEW_DEDUP_SUMMARY {"quadratic_pairs":$nNaive,""" +
       s""""star_edges":$nStar,"edge_ratio":${nNaive / math.max(1L, nStar)},""" +
       s""""components_naive":$cNaive,"components_star":$cStar,""" +
-      s""""components_equal":${cNaive == cStar},""" +
-      s""""capped_components":$cCap,"capped_edges":$nCap}""")
+      s""""components_equal":${cNaive == cStar}}""")
 
     // r16: the REAL pipeline entry points under the same dominant-class
     // shape. The suffix here is unique PER DOC (not doc_id % 5) so the

@@ -28,16 +28,12 @@ object Classify {
   /** Fit the model: (label, prior, oov) and (label, word, ll) tables. */
   def nbModel(docs: DataFrame, labelCol: String = "lang",
       textCol: String = "text"): (DataFrame, DataFrame) = {
-    // 8-way fan for the fit side too — the class-word count's tokenize
-    // stage has the same 1-task shape on a single-row-group labeled slice
-    val docsF = ScaleOps.fanOutCompute(docs,
-      target = math.min(8, docs.sparkSession.sparkContext.defaultParallelism))
+    val docsF = ScaleOps.fanOutCompute(docs)
     val tok = docsF.select(col(labelCol).as("label"),
       explode(words(textCol)).as("word"))
     // class-word counts feed the totals AND the likelihood table — the one
     // relation consumed twice, vocabulary-bounded, so it is what's pinned
-    val cw = Pins.track(
-      tok.groupBy("label", "word").agg(count(lit(1)).as("n")).cache())
+    val cw = Pins.cache(tok.groupBy("label", "word").agg(count(lit(1)).as("n")))
     val ct = cw.groupBy("label").agg(sum(col("n")).as("tot"))
     val v = cw.select("word").distinct().agg(count(lit(1)).as("v"))
     val nd = docs.groupBy(col(labelCol).as("label")).agg(count(lit(1)).as("nd"))
@@ -75,12 +71,8 @@ object Classify {
     * calibration bins) can rank beyond the argmax. */
   def nbScoresWith(docs: DataFrame, priors: DataFrame, ll: DataFrame,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    // 8-way fan before tokenization: on a single-row-group source the
-    // tokenize+explode+broadcast-join+partial-agg stage otherwise runs as
-    // ONE task (same 1-partition-scan signature as the bm25/tfidf sites)
     val docsF = ScaleOps.fanOutCompute(docs.select(col(idCol), col(textCol)),
-      idCol, target = math.min(8,
-        docs.sparkSession.sparkContext.defaultParallelism))
+      idCol)
     val w = docsF.select(col(idCol), explode(words(textCol)).as("word"))
     val nw = w.groupBy(idCol).agg(count(lit(1)).as("n_words"))
     // broadcast: ll is (classes x vocabulary)-bounded — kilobytes here,

@@ -83,29 +83,17 @@ object Cluster {
     * tables) take the centroids; the assignment stays LAZY over them. */
   def kmeansFit(emb: DataFrame, k: Int = 8, iters: Int = 3): (DataFrame, DataFrame) = {
     require(k >= 1 && iters >= 1, "need k >= 1 and iters >= 1")
-    // 8-way fan (the Neutral.sigTable r18 pattern): a 1-row-group scan
-    // otherwise runs every iteration's crossJoin-argmax and centroid
-    // explode single-task; identity on multi-split sources
     val e = ScaleOps.fanOutCompute(
-      emb.select(col("vec_id"), col("embedding")), "vec_id",
-      target = math.min(8, emb.sparkSession.sparkContext.defaultParallelism))
+      emb.select(col("vec_id"), col("embedding")), "vec_id")
     // Pin each iteration's k×dim centroid table and release the superseded
-    // pin immediately (cache+count, not localCheckpoint: unpersistable
-    // through the public API, and recompute-on-eviction is safe — every
-    // step is deterministic). Holding all iters pins alive was measurable
-    // memory/GC pressure for every LATER query in a single-JVM run.
-    var pinned: DataFrame = null
-    def pin(df: DataFrame): DataFrame = {
-      val c = Pins.track(df.cache())
-      c.count()
-      if (pinned != null) pinned.unpersist()
-      pinned = c
-      c
-    }
-    var cents = pin(seedCentroids(e, k))
+    // pin immediately (cache+count, not localCheckpoint: recompute-on-
+    // eviction is safe — every step is deterministic). Holding all iters
+    // pins alive was measurable memory/GC pressure for every LATER query
+    // in a single-JVM run.
+    var cents = Pins.advance(null, seedCentroids(e, k))
     var a = assign(e, cents)
     for (_ <- 2 to iters) {
-      cents = pin(updateCentroids(e, a))
+      cents = Pins.advance(cents, updateCentroids(e, a))
       a = assign(e, cents)
     }
     // The returned assignment stays LAZY over the final pinned centroid

@@ -215,12 +215,11 @@ object CorpusQuality {
   def domainMixWeights(docs: DataFrame, textCol: String = "text",
       sourceCol: String = "source", cap: Double = 4.0): DataFrame = {
     // cached for the same double-reference reason as temperatureMixWeights
-    val perSrc = Pins.track(docs
+    val perSrc = Pins.cache(docs
       .select(col(sourceCol).as("source"), tokens(textCol).as("ws"))
       .groupBy("source")
       .agg(count(lit(1)).as("n_docs"),
-        sum(size(col("ws")).cast("long")).as("tokens"))
-      .cache())
+        sum(size(col("ws")).cast("long")).as("tokens")))
     val tot = perSrc.agg(sum(col("tokens")).as("total_tokens"),
       count(lit(1)).as("n_sources"))
     perSrc.join(broadcast(tot))
@@ -247,12 +246,11 @@ object CorpusQuality {
     // and the output join — uncached, each reference re-runs the full
     // corpus token-count scan (ReuseExchange does not fire across the
     // branches), which is 2 extra corpus passes at scale
-    val perSrc = Pins.track(docs
+    val perSrc = Pins.cache(docs
       .select(col(sourceCol).as("source"), tokens(textCol).as("ws"))
       .groupBy("source")
       .agg(count(lit(1)).as("n_docs"),
-        sum(size(col("ws")).cast("long")).as("tokens"))
-      .cache())
+        sum(size(col("ws")).cast("long")).as("tokens")))
     val tot = perSrc.agg(sum(col("tokens")).as("total_tokens"))
     val ps = perSrc.join(broadcast(tot))
       .withColumn("p", col("tokens").cast("double") / col("total_tokens"))

@@ -34,6 +34,15 @@ object Dedup {
       .groupBy(sha2(col(textCol), 256).as("content_sha"))
       .agg(min(col(idCol)).as("keep_doc_id"), count(lit(1)).as("n_copies"))
 
+  /** The exact-dup survivors of `docs` (min doc_id per text), cached and
+    * registered: the dedup pipelines read them twice, in the near-dup
+    * candidate search and in the final survivor join. */
+  private[ops] def exactKept(docs: DataFrame, textCol: String): DataFrame = {
+    val exactKeep = exactGroups(docs, textCol)
+      .select(col("keep_doc_id").as("doc_id"))
+    Pins.cache(docs.join(exactKeep, Seq("doc_id"), "left_semi"))
+  }
+
   /** Lower-cased whitespace word array. */
   def words(textCol: String): Column = split(lower(trim(col(textCol))), "\\s+")
 
@@ -72,22 +81,20 @@ object Dedup {
       .select(col("doc_id"),
         graft.expr.ShingleHashes.shingleHashes(col(textCol), n).as("hs"))
       .filter(size(col("hs")) > 0)
-      .cache()
-      .transform(Pins.track)
+      .transform(Pins.cache)
 
   /** MinHash-LSH candidate pairs (doc_a < doc_b, verified jaccard) — a
     * forwarder to [[Neutral.minHashCandidates]], the one md5-seeded
     * implementation the DuckDB oracle reproduces; same parameters, same
-    * `maxBucket` (drop) and `starCap` (star) bucket policies. Kept as a
+    * `starCap` (star) bucket policy. Kept as a
     * named entry point because the benchmark harness composes
     * [[dedupCorpus]]'s stages through it, so its traced run stays equal
     * to the real call. */
   def minHashCandidates(docs: DataFrame, textCol: String = "text",
       shingleN: Int = 3, bands: Int = 16, rows: Int = 4,
-      maxBucket: Option[Int] = None,
       starCap: Option[Int] = None): DataFrame =
     Neutral.minHashCandidates(docs, textCol, shingleN, bands, rows,
-      maxBucket = maxBucket, starCap = starCap)
+      starCap = starCap)
 
   /** Shared core of the n-gram pipeline (PPJoin-style rarest-prefix
     * blocking): candidates must share one of each doc's `prefixK`
@@ -194,11 +201,9 @@ object Dedup {
     // exponential tree on every downstream action). Checkpointing resets
     // each round's plan to its materialized rows; superseded checkpoints
     // are released as the loop advances.
-    var labels = edges.select(col("src").as("doc_id"))
+    var labels = Pins.cache(edges.select(col("src").as("doc_id"))
       .distinct()
-      .withColumn("component", col("doc_id"))
-      .cache()
-    val initialLabels = labels
+      .withColumn("component", col("doc_id")))
     // Convergence via the label-sum invariant: every step takes a least()
     // of the current label, so per-node labels are monotonically
     // non-increasing and the exact sum is strictly decreasing until the
@@ -225,12 +230,11 @@ object Dedup {
       // cached: the pointer-jump below reads it on BOTH join sides —
       // uncached it would re-execute the neighbor-min subtree twice per
       // round (released before the round ends)
-      val stepped = labels
+      val stepped = Pins.cache(labels
         .join(nbrMin, Seq("doc_id"), "left")
         .select(col("doc_id"),
           least(col("component"), coalesce(col("nbr_min"), col("component")))
-            .as("component"))
-        .cache()
+            .as("component")))
       // pointer jumping: follow component -> that node's own component
       // (labels are always node ids, so the lookup relation is `stepped`
       // itself). Halves the remaining path length every round on top of
@@ -252,8 +256,8 @@ object Dedup {
           least(col("component"), coalesce(col("jc"), col("component")))
             .as("component")), eager = false)
       val newSum = labelSum(next)
-      if (iter == 0) initialLabels.unpersist() else Pins.release(labels)
-      stepped.unpersist()
+      Pins.release(labels)
+      Pins.release(stepped)
       labels = next
       converged = newSum == prevSum
       prevSum = newSum
@@ -316,11 +320,9 @@ object Dedup {
   def dedupCorpus(docs: DataFrame, textCol: String = "text",
       minJaccard: Double = 0.8,
       starCap: Option[Int] = Some(256)): DataFrame = {
-    val exactKeep = exactGroups(docs, textCol)
-      .select(col("keep_doc_id").as("doc_id"))
     // kept feeds both the near-dup candidate search and the final anti
     // join — uncached, the exact-dedup digest groupBy re-executes twice
-    val kept = Pins.track(docs.join(exactKeep, Seq("doc_id"), "left_semi").cache())
+    val kept = exactKept(docs, textCol)
     val nearDrop = Neutral.minHashCandidates(kept, textCol, starCap = starCap)
       .filter(col("jaccard") >= minJaccard)
       .select(greatest(col("doc_a"), col("doc_b")).as("doc_id"))

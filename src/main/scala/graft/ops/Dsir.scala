@@ -166,14 +166,13 @@ object Dsir {
     // the ≤numBuckets-row count table feeds both the ratio join and the
     // totals — pin it so the corpus gram pass runs once (the lmBigramModel
     // n12 precedent; the cache is bucket-bounded, never corpus-sized)
-    val counts = Pins.track(raw
+    val counts = Pins.cache(raw
       .select(targetWhere.as("__t"),
         explode(graft.expr.DsirGramBuckets.dsirGramBuckets(
           lower(trim(col(textCol))), numBuckets)).as("bucket"))
       .groupBy("bucket")
       .agg(count(lit(1)).as("nr"),
-        sum(when(col("__t"), 1L).otherwise(0L)).as("nt"))
-      .cache())
+        sum(when(col("__t"), 1L).otherwise(0L)).as("nt")))
     modelOfCounts(raw.sparkSession,
       counts.select("bucket", "nr"), counts.select("bucket", "nt"),
       numBuckets)

@@ -39,9 +39,9 @@ object Graph {
     // released before returning (after the result is materialized), same
     // contract as Dedup.connectedComponents' edge checkpoint.
     val e = Pins.checkpoint(edges.select(col("src"), col("dst")).distinct())
-    val outdeg = Pins.track(e.groupBy("src").agg(count(lit(1)).as("od")).cache())
-    val nodes = Pins.track(e.select(col("src").as("node"))
-      .unionByName(e.select(col("dst").as("node"))).distinct().cache())
+    val outdeg = Pins.cache(e.groupBy("src").agg(count(lit(1)).as("od")))
+    val nodes = Pins.cache(e.select(col("src").as("node"))
+      .unionByName(e.select(col("dst").as("node"))).distinct())
     val nRow = nodes.agg(count(lit(1)).as("n"))
     var scores = nodes.join(broadcast(nRow))
       .select(col("node"), (lit(1.0) / col("n")).cast(dec).as("score"))
@@ -51,22 +51,17 @@ object Graph {
     // eager pin is a full job, and for a small graph the per-job overhead
     // dominates the 2 tiny shuffles an iteration actually does; a 5-deep
     // lazy chain folds into the next materialization at no extra cost.
-    // cache+count rather than localCheckpoint — cached plans can be
-    // unpersisted through the public API, and recompute-on-eviction is safe
-    // because every step here is deterministic.
+    // cache+count rather than localCheckpoint — recompute-on-eviction is
+    // safe because every step here is deterministic.
     val pinEvery = 5 // r18 A/B: pinEvery=3 cut cold reps (17.3→10.6) but
                      // cost the steady min an extra pin job (5.0→5.8 s,
                      // medians equal) — kept at 5, the steady state wins
-    var pinned: DataFrame = null
-    def pin(df: DataFrame): DataFrame = {
-      val c = Pins.track(df.cache())
-      c.count()
-      if (pinned != null) pinned.unpersist()
-      pinned = c
-      c
-    }
+    var frontier: DataFrame = null // the last pinned scores
     for (i <- 1 to iters) {
-      if (i > 1 && (i - 1) % pinEvery == 0) scores = pin(scores)
+      if (i > 1 && (i - 1) % pinEvery == 0) {
+        frontier = Pins.advance(frontier, scores)
+        scores = frontier
+      }
       val insum = e
         .join(scores.withColumnRenamed("node", "src"), "src")
         .join(outdeg, "src")
@@ -85,14 +80,12 @@ object Graph {
     // materialize the result, then free every intermediate: the only cache
     // surviving the call is the returned table (release via Pins.releaseAll
     // after consuming, or the per-query clearState in Bench/Verify)
-    val out = Pins.track(scores.cache())
-    out.count()
-    if (pinned != null) pinned.unpersist()
+    val out = Pins.advance(frontier, scores)
     // the result is materialized above, so the edge checkpoint (whose
     // truncated lineage cannot recompute) is safe to release now
     Pins.release(e)
-    outdeg.unpersist()
-    nodes.unpersist()
+    Pins.release(outdeg)
+    Pins.release(nodes)
     out
   }
 
@@ -138,10 +131,10 @@ object Graph {
     * and the closing semi join on (u,w) — both bounded by oriented-edge
     * volume. */
   def triangleCounts(edges: DataFrame): DataFrame = {
-    val und = Pins.track(edges
+    val und = Pins.cache(edges
       .select(least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"))
-      .filter(col("a") =!= col("b")).distinct().cache())
+      .filter(col("a") =!= col("b")).distinct())
     val deg = und.select(col("a").as("node"))
       .unionAll(und.select(col("b").as("node")))
       .groupBy("node").agg(count(lit(1)).as("deg"))
@@ -149,12 +142,11 @@ object Graph {
       (col("da") === col("db") && col("a") < col("b"))
     // oriented feeds three plans (wedge left, wedge right, closing semi);
     // uncached the 4-way derivation re-executes for each
-    val oriented = Pins.track(und
+    val oriented = Pins.cache(und
       .join(deg.select(col("node").as("a"), col("deg").as("da")), Seq("a"))
       .join(deg.select(col("node").as("b"), col("deg").as("db")), Seq("b"))
       .select(when(fwd, col("a")).otherwise(col("b")).as("u"),
-        when(fwd, col("b")).otherwise(col("a")).as("v"))
-      .cache())
+        when(fwd, col("b")).otherwise(col("a")).as("v")))
     val wedges = oriented
       .join(oriented.select(col("u").as("v"), col("v").as("w")), "v")
     val tris = wedges.join(oriented.select(col("u"), col("v").as("w")),

@@ -83,25 +83,18 @@ object Neutral {
     * (released by the per-query clearState). */
   private def sigTable(docs: DataFrame, textCol: String,
       shingleN: Int): DataFrame =
-    // modest fan BEFORE the cache: the bench corpora scan as ONE parquet
-    // row group, so an unfanned cache holds one partition and every
-    // consumer stage (banding sides, verify re-attach, edge build) runs
-    // 1-task — nine concurrent ~800 ms single-core stages in the r18
-    // event-log profile. 8 partitions parallelizes those 8x; r17 measured
-    // the full 32-way fan NEGATIVE (every downstream stage pays 32 task
-    // launches through long chains), 8 is the measured sweet spot. At
-    // cluster scale fanOutCompute is the identity (multi-split source).
-    ScaleOps.fanOutCompute(
-        docs.select(col("doc_id"), col(textCol)), "doc_id",
-        target = math.min(8,
-          docs.sparkSession.sparkContext.defaultParallelism))
+    // fan BEFORE the cache: the bench corpora scan as ONE parquet row
+    // group, so an unfanned cache holds one partition and every consumer
+    // stage (banding sides, verify re-attach, edge build) runs 1-task —
+    // nine concurrent ~800 ms single-core stages in the r18 event-log
+    // profile
+    ScaleOps.fanOutCompute(docs.select(col("doc_id"), col(textCol)))
       .select(col("doc_id"),
         graft.expr.ShingleStrings.shingleStrings(col(textCol), shingleN).as("s"),
         graft.expr.ShingleHashes.shingleHashes(col(textCol), shingleN).as("hs"))
       .filter(size(col("s")) > 0)
       .withColumn("sig", graft.expr.Md5MinHashSig.minHashSig(col("s")))
-      .cache()
-      .transform(Pins.track)
+      .transform(Pins.cache)
 
   /** NARROW (doc_id, band, bucket) rows from a signature table. ONE
     * expression references sig once — 16 separate per-band columns would
@@ -120,16 +113,10 @@ object Neutral {
     * distinct shingle; the 64 lane permutations are integer multiply-adds.
     * Returns (doc_a, doc_b, jaccard) with doc_a < doc_b.
     *
-    * `maxBucket` is the degenerate-corpus guard: a bucket holding B docs
-    * emits B² candidate pairs, and a boilerplate-heavy corpus concentrates
-    * mass in few buckets; capping skips oversized buckets — a documented recall
-    * trade (skipped members usually co-occur in other, smaller buckets of
-    * their remaining bands). Default off: the oracle reproduces the
-    * uncapped candidate set.
-    *
-    * `starCap` (r16) is the closure-preserving alternative to the drop
-    * cap: oversized buckets emit hub-verified STAR candidates (bucket-min
-    * rep → member, O(size)) instead of being skipped — every candidate,
+    * `starCap` (r16) is the degenerate-corpus guard: a bucket holding B
+    * docs emits B² candidate pairs, and a boilerplate-heavy corpus
+    * concentrates mass in few buckets. Oversized buckets emit hub-verified
+    * STAR candidates (bucket-min rep → member, O(size)) — every candidate,
     * pair or star, still pays the exact Jaccard verification, so emitted
     * edges are never approximate; only member↔member pairs meeting
     * EXCLUSIVELY inside over-cap buckets are traded for the hub edge —
@@ -144,15 +131,13 @@ object Neutral {
     * real boilerplate corpora have
     * the dominant-class shape the r15 sf1 sweep measured quadratic, and
     * the pair-shaped driver fixtures never reach the cap, so oracle
-    * results are bit-identical. At most one of maxBucket/starCap. */
+    * results are bit-identical. Default off: the oracle reproduces the
+    * uncapped candidate set. */
   def minHashCandidates(docs: DataFrame, textCol: String = "text",
       shingleN: Int = 3, bands: Int = 16, rows: Int = 4,
-      maxBucket: Option[Int] = None,
       precomputedSig: Option[DataFrame] = None,
       starCap: Option[Int] = None): DataFrame = {
     require(bands * rows == 64, "bands*rows must equal the 64-lane signature")
-    require(maxBucket.isEmpty || starCap.isEmpty,
-      "maxBucket (drop) and starCap (star) are alternative bucket policies")
     // precomputedSig: a sigTable already restricted to `docs` (signatures
     // are a pure function of text, so reuse is result-identical) — lets
     // composite pipelines skip re-hashing every shingle per stage
@@ -160,24 +145,12 @@ object Neutral {
     // candidate pairs dedup on narrow (doc_a, doc_b) keys before the
     // shingle-hash arrays re-attach for exact scoring, so no array ever
     // rides the bucket shuffle (the ngram pipeline's PPJoin shape)
-    val banded0 = bandedOf(sh, bands, rows)
-    val banded = maxBucket match {
-      case Some(cap) =>
-        // size window over the SAME (band, bucket) key the join shuffles
-        // on — the count reuses that partitioning, no extra exchange
-        import org.apache.spark.sql.expressions.Window
-        banded0
-          .withColumn("bsize",
-            count(lit(1)).over(Window.partitionBy("band", "bucket")))
-          .filter(col("bsize") <= cap)
-          .drop("bsize")
-      case None => banded0
-    }
+    val banded = bandedOf(sh, bands, rows)
     val cand = starCap match {
       case Some(cap) =>
         import org.apache.spark.sql.expressions.Window
         val w = Window.partitionBy("band", "bucket")
-        val sized = banded0
+        val sized = banded
           .withColumn("bsize", count(lit(1)).over(w))
           .withColumn("rep", min(col("doc_id")).over(w))
         val small = sized.filter(col("bsize") <= cap)
@@ -208,12 +181,12 @@ object Neutral {
       .select("doc_a", "doc_b", "jaccard")
   }
 
-  /** DuckDB twin of `minHashCandidates(starCap = Some(maxBucket))`
+  /** DuckDB twin of `minHashCandidates(starCap = Some(starCap))`
     * filtered at `minJaccard`, over `docsRel`: CTE chain ending in
     * `hits(doc_a, doc_b)` — compose with a recursive closure for
     * component oracles. */
   private[graft] def skewSafeEdgeCtes(docsRel: String, minJaccard: Double,
-      maxBucket: Int, shingleN: Int = 3, bands: Int = 16,
+      starCap: Int, shingleN: Int = 3, bands: Int = 16,
       rows: Int = 4): String =
     s"""${bandedCtes(docsRel, "", shingleN, bands, rows)},
        |bsz AS (
@@ -226,11 +199,11 @@ object Neutral {
        |    FROM banded a
        |    JOIN bsz z ON a.band = z.band AND a.bucket = z.bucket
        |    JOIN banded b ON b.band = a.band AND b.bucket = a.bucket
-       |    WHERE z.bsize <= $maxBucket AND a.doc_id < b.doc_id
+       |    WHERE z.bsize <= $starCap AND a.doc_id < b.doc_id
        |    UNION ALL
        |    SELECT z.rep AS doc_a, b.doc_id AS doc_b
        |    FROM banded b JOIN bsz z ON b.band = z.band AND b.bucket = z.bucket
-       |    WHERE z.bsize > $maxBucket AND b.doc_id <> z.rep
+       |    WHERE z.bsize > $starCap AND b.doc_id <> z.rep
        |  ) u
        |),
        |hits AS (
@@ -755,9 +728,7 @@ object Neutral {
       minJaccard: Double = 0.8,
       precomputedSig: Option[DataFrame] = None,
       starCap: Option[Int] = Some(256)): DataFrame = {
-    val exactKeep = Dedup.exactGroups(docs, textCol)
-      .select(col("keep_doc_id").as("doc_id"))
-    val kept = Pins.track(docs.join(exactKeep, Seq("doc_id"), "left_semi").cache())
+    val kept = Dedup.exactKept(docs, textCol)
     // a caller-supplied signature table (covering ⊇ docs) restricts to the
     // exact-kept rows by semi join — signatures are pure functions of text,
     // so reuse is result-identical and skips the per-shingle md5 pass
@@ -816,9 +787,7 @@ object Neutral {
       minJaccard: Double = 0.8, scoreCol: String = "n_chars",
       starCap: Option[Int] = Some(256)): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val exactKeep = Dedup.exactGroups(docs, textCol)
-      .select(col("keep_doc_id").as("doc_id"))
-    val kept = Pins.track(docs.join(exactKeep, Seq("doc_id"), "left_semi").cache())
+    val kept = Dedup.exactKept(docs, textCol)
     // component-level consumer → star-capped candidates (see
     // [[dedupCorpusClustered]]); survivor CHOICE within a component uses
     // scoreCol, which star edges don't affect — the component sets match
@@ -1456,15 +1425,14 @@ object Neutral {
         .as(Seq("t", "bucket")))
     val cand = cosineCandidates(bucketed, starCap)
     // scored once, consumed by the pair and doc aggregates
-    val scored = Pins.track(cand
+    val scored = Pins.cache(cand
       .join(emb.select(col("vec_id").as("id_a"), col("embedding").as("e_a")),
         Seq("id_a"))
       .join(emb.select(col("vec_id").as("id_b"), col("embedding").as("e_b")),
         Seq("id_b"))
       .select(col("id_a"), col("id_b"),
         Similarity.cosine("e_a", "e_b").as("cos"))
-      .filter(col("cos") >= thresholds.min)
-      .cache())
+      .filter(col("cos") >= thresholds.min))
     val fanned = scored.select(col("id_a"), col("id_b"), col("cos"),
         explode(array(thresholds.map(lit): _*)).as("threshold"))
       .filter(col("cos") >= col("threshold"))

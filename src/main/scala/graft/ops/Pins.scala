@@ -8,9 +8,14 @@ import org.apache.spark.storage.StorageLevel
 /** Self-contained cache lifecycle for the operators that pin tables by
   * contract (pageRank's result, kmeansFit's final centroids, the MinHash
   * signature tables, pqFit's subspace table, connectedComponents' label
-  * checkpoint, ...). Every cache or localCheckpoint an operator creates is
-  * registered here; a library consumer calls [[releaseAll]] after consuming
-  * results — e.g. once per loop iteration — and accumulates nothing, with
+  * checkpoint, ...). Pins is the one materialisation owner: operators cache
+  * with [[cache]], truncate lineage with [[checkpoint]], step an iterative
+  * loop with [[advance]] and free early with [[release]] — no operator
+  * calls `cache`/`persist`/`localCheckpoint`/`unpersist` itself
+  * (CacheHygieneSpec's source guard), so everything an operator
+  * materialises is registered here. A library consumer calls
+  * [[releaseAll]] after consuming results — e.g. once per loop
+  * iteration — and accumulates nothing, with
   * no need for the harness-level `clearCache` sweep (which would also
   * clobber the consumer's OWN cached tables).
   *
@@ -63,9 +68,9 @@ object Pins {
     pins += new Pin(df, rdd, Thread.currentThread().getId, seqCounter)
   }
 
-  /** Register a cached DataFrame; returns it for chaining. */
-  private[graft] def track[A <: DataFrame](df: A): A = {
-    add(df, null)
+  /** `df.cache()`, registered; returns it for chaining. */
+  def cache(df: DataFrame): DataFrame = {
+    add(df.cache(), null)
     df
   }
 
@@ -76,11 +81,17 @@ object Pins {
     cp
   }
 
-  /** Free a [[checkpoint]] result now (a loop superseding it). */
-  def release(cp: DataFrame): Unit = {
-    val rdd = checkpointRdd(cp)
-    synchronized(pins.filterInPlace(_.rdd ne rdd))
-    rdd.unpersist(blocking = false)
+  /** Free a [[cache]] or [[checkpoint]] result now (a loop superseding
+    * it). A DataFrame the ledger no longer holds is left alone. */
+  def release(df: DataFrame): Unit = freeWhere(_.df eq df)
+
+  /** One iterate of a materialise-and-supersede loop: cache `next` and
+    * count it, then release `prev` (null before the first iterate), so
+    * the loop holds one materialised iterate at a time. */
+  def advance(prev: DataFrame, next: DataFrame): DataFrame = {
+    cache(next).count()
+    if (prev != null) release(prev)
+    next
   }
 
   private def checkpointRdd(cp: DataFrame): RDD[_] =
@@ -115,11 +126,14 @@ object Pins {
   }
 
   /** Release pins created after `mark` by thread `tid`; keep the rest. */
-  private def releaseSince(mark: Long, tid: Long): Unit = synchronized {
+  private def releaseSince(mark: Long, tid: Long): Unit =
+    freeWhere(p => p.seq > mark && p.thread == tid)
+
+  private def freeWhere(mine: Pin => Boolean): Unit = synchronized {
     pins.filterInPlace { p =>
-      val mine = p.seq > mark && p.thread == tid
-      if (mine) p.free()
-      !mine
+      val m = mine(p)
+      if (m) p.free()
+      !m
     }
   }
 }

@@ -80,16 +80,13 @@ object Quantize {
     // (m separate kmeansFit calls paid m independent job chains — measured
     // ~2x the whole query's cost). Identical output by construction: the
     // seeds are the same k smallest-md5 vec_ids in every subspace, and
-    // argmax / decimal means group per (s, cluster).
-    // 8-way fan before the subspace cache (the Neutral.sigTable r18
-    // pattern): a 1-row-group scan otherwise leaves the cache single-
-    // partition, serializing every Lloyd iteration's assignment and
-    // update map work on one core
-    val subs = Pins.track(
+    // argmax / decimal means group per (s, cluster). Fanned before the
+    // subspace cache, so every Lloyd iteration reads a multi-partition
+    // cache.
+    val subs = Pins.cache(
       subspaceSplit(
-        ScaleOps.fanOutCompute(emb.select(col(idCol), col(embCol)), idCol,
-          target = math.min(8, emb.sparkSession.sparkContext.defaultParallelism)),
-        m, subDim, idCol, embCol).cache())
+        ScaleOps.fanOutCompute(emb.select(col(idCol), col(embCol)), idCol),
+        m, subDim, idCol, embCol))
     val seedIds = emb
       .select(col(idCol).as("vec_id"), md5(col(idCol).cast("string")).as("h"))
       .orderBy(col("h"), col("vec_id"))
@@ -97,14 +94,6 @@ object Quantize {
       .agg(array_sort(collect_list(struct(col("h"), col("vec_id")))).as("a"))
       .select(posexplode(col("a")).as(Seq("cluster", "x")))
       .select(col("cluster").cast("int").as("cluster"), col("x.vec_id").as("vec_id"))
-    var pinned: DataFrame = null
-    def pin(df: DataFrame): DataFrame = {
-      val c = Pins.track(df.cache())
-      c.count()
-      if (pinned != null) pinned.unpersist()
-      pinned = c
-      c
-    }
     def assign(cents: DataFrame): DataFrame = assignSubspaces(subs, cents)
     def update(a: DataFrame): DataFrame =
       subs.join(a, Seq("s", "vec_id"))
@@ -115,11 +104,11 @@ object Quantize {
         .groupBy("s", "cluster")
         .agg(array_sort(collect_list(struct(col("pos"), col("mean_v")))).as("pc"))
         .select(col("s"), col("cluster"), expr("transform(pc, x -> x.mean_v)").as("c"))
-    var cents = pin(subs.join(broadcast(seedIds), Seq("vec_id"))
+    var cents = Pins.advance(null, subs.join(broadcast(seedIds), Seq("vec_id"))
       .select(col("s"), col("cluster"), col("sv").as("c")))
     var a = assign(cents)
     for (_ <- 2 to iters) {
-      cents = pin(update(a))
+      cents = Pins.advance(cents, update(a))
       a = assign(cents)
     }
     // cents: (s, cluster, c); a: (s, vec_id, cluster) — a stays lazy over

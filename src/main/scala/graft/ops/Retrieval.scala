@@ -37,11 +37,8 @@ object Retrieval {
     * (tf * ln(N/df)). The df join stays a plain equi join — query-term
     * vocabularies broadcast under AQE, open-vocab corpora shuffle on word. */
   def tfidf(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    // 8-way fan before tokenization — same rationale as [[bm25]]'s postings
     val tf = tokens(
-        ScaleOps.fanOutCompute(df.select(col(idCol), col(textCol)), idCol,
-          target = math.min(8,
-            df.sparkSession.sparkContext.defaultParallelism)),
+        ScaleOps.fanOutCompute(df.select(col(idCol), col(textCol)), idCol),
         idCol, textCol)
       .groupBy(col(idCol), col("word")).agg(count(lit(1)).as("tf"))
     val dfreq = tf.groupBy("word").agg(count(lit(1)).as("df"))
@@ -57,16 +54,11 @@ object Retrieval {
   def bm25(df: DataFrame, idCol: String, textCol: String, terms: Seq[String],
            k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     // postings feed four consumers (dl, stats, hits->df, score join);
-    // uncached, the explode+count lineage re-executes for each. 8-way fan
-    // before tokenization (the Neutral.sigTable r18 pattern) so the word
-    // explode parallelizes past the 1-row-group scan
-    val tf = Pins.track(tokens(
-        ScaleOps.fanOutCompute(df.select(col(idCol), col(textCol)), idCol,
-          target = math.min(8,
-            df.sparkSession.sparkContext.defaultParallelism)),
+    // uncached, the explode+count lineage re-executes for each
+    val tf = Pins.cache(tokens(
+        ScaleOps.fanOutCompute(df.select(col(idCol), col(textCol)), idCol),
         idCol, textCol)
-      .groupBy(col(idCol), col("word")).agg(count(lit(1)).as("tf"))
-      .cache())
+      .groupBy(col(idCol), col("word")).agg(count(lit(1)).as("tf")))
     val dl = tf.groupBy(idCol).agg(sum(col("tf")).as("dl"))
     val stats = dl.agg(count(lit(1)).as("n_docs"), avg(col("dl")).as("avgdl"))
     bm25Score(tf, dl, stats, idCol, terms, k1, b)
@@ -115,11 +107,9 @@ object Retrieval {
     * runs. */
   def bm25Build(df: DataFrame, idCol: String, textCol: String,
       dir: String): Unit = Pins.scoped {
-    val tf = Pins.track(tokens(df, idCol, textCol)
-      .groupBy(col(idCol), col("word")).agg(count(lit(1)).as("tf"))
-      .cache())
-    val dl = Pins.track(
-      tf.groupBy(idCol).agg(sum(col("tf")).as("dl")).cache())
+    val tf = Pins.cache(tokens(df, idCol, textCol)
+      .groupBy(col(idCol), col("word")).agg(count(lit(1)).as("tf")))
+    val dl = Pins.cache(tf.groupBy(idCol).agg(sum(col("tf")).as("dl")))
     Models.save(wordSorted(tf, idCol), s"$dir/postings")
     Models.save(dl, s"$dir/doclen")
     Models.save(
@@ -144,11 +134,9 @@ object Retrieval {
   def bm25Append(batch: DataFrame, dir: String, idCol: String,
       textCol: String, batchId: Long): Unit = Pins.scoped {
     require(batchId >= 0, "appends need an explicit batch/sequence id")
-    val tf = Pins.track(tokens(batch, idCol, textCol)
-      .groupBy(col(idCol), col("word")).agg(count(lit(1)).as("tf"))
-      .cache())
-    val dl = Pins.track(
-      tf.groupBy(idCol).agg(sum(col("tf")).as("dl")).cache())
+    val tf = Pins.cache(tokens(batch, idCol, textCol)
+      .groupBy(col(idCol), col("word")).agg(count(lit(1)).as("tf")))
+    val dl = Pins.cache(tf.groupBy(idCol).agg(sum(col("tf")).as("dl")))
     Models.append(wordSorted(tf, idCol), s"$dir/postings")
     Models.append(dl, s"$dir/doclen")
     Models.append(

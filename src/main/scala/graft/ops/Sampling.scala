@@ -162,10 +162,9 @@ object Sampling {
     // d is consumed by the bucket totals AND the per-doc join; uncached,
     // the (regex-heavy) upstream scoring would execute twice. Narrow
     // projection only — 4 columns, not the document text.
-    val d = Pins.track(
+    val d = Pins.cache(
       docs.select(col(idCol), col(scoreCol), col(tokensCol))
-        .withColumn("__bucket", floor(col(scoreCol) * 1000).cast("long"))
-        .cache())
+        .withColumn("__bucket", floor(col(scoreCol) * 1000).cast("long")))
     val overBuckets = Window.orderBy(col("__bucket").desc)
       .rowsBetween(Window.unboundedPreceding, -1)
     val buckets = d.groupBy("__bucket")

@@ -21,15 +21,19 @@ object ScaleOps {
     * time inside a 3.0 s-wall winnow query at sf0.1/32 cores. A
     * deterministic hash repartition on the id column spreads the compute;
     * the exchange moves only the rows the caller selected (text/ids, KB
-    * to MB here). SCALE-ADAPTIVE: when the source already carries at
-    * least `defaultParallelism` partitions (any real multi-split table —
-    * a 100 TB corpus has ~10⁵ splits), this is the identity, so no
-    * cluster-scale query pays a gratuitous full-corpus shuffle. */
-  def fanOutCompute(df: DataFrame, byCol: String = "doc_id",
-      target: Int = -1): DataFrame = {
-    val tgt =
-      if (target > 0) target
-      else df.sparkSession.sparkContext.defaultParallelism
+    * to MB here).
+    *
+    * ONE width rule for every caller: `min(8, defaultParallelism)`
+    * partitions. r17 measured the full 32-way fan NEGATIVE on sigTable
+    * (every downstream stage pays 32 task launches through long chains);
+    * 8 was the measured sweet spot there and every later fan site adopted
+    * it. The cap only binds above 8 cores. SCALE-ADAPTIVE: when the
+    * source already holds at least one scan split per fan partition (any
+    * real multi-split table — a 100 TB corpus has ~10⁵ splits), this is
+    * the identity, so no cluster-scale query pays a gratuitous
+    * full-corpus shuffle. */
+  def fanOutCompute(df: DataFrame, byCol: String = "doc_id"): DataFrame = {
+    val tgt = math.min(8, df.sparkSession.sparkContext.defaultParallelism)
     // size probe from the ANALYZED plan's statistics (footer-based for
     // scans — no physical planning, no jobs; an .rdd.getNumPartitions
     // probe measured ~0.5 s of driver planning per call). A source under
@@ -364,15 +368,9 @@ object ScaleOps {
       }
     // cached: the signature window, the pair expansion, and (gated form)
     // the exact side all fan out over the hashed sets; ledger-tracked so
-    // a consumer can release it (CacheHygieneSpec contract). 8-way fan
-    // before the kernel (the Neutral.sigTable r18 pattern) so the shingle
-    // hashing and each consumer stage parallelize past the 1-row-group scan
-    val hv = Pins.track(
-      sourceShingleHashes(
-        fanOutCompute(base, "doc_id",
-          target = math.min(8,
-            base.sparkSession.sparkContext.defaultParallelism)),
-        srcCol, textCol, shingleN).cache())
+    // a consumer can release it (CacheHygieneSpec contract)
+    val hv = Pins.cache(
+      sourceShingleHashes(fanOutCompute(base), srcCol, textCol, shingleN))
     val wSrc = Window.partitionBy("source").orderBy("hv")
     val sig = hv.withColumn("__rn", row_number().over(wSrc))
       .filter(col("__rn") <= k).drop("__rn")

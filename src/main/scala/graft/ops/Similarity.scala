@@ -135,11 +135,9 @@ object Similarity {
     * Self-pairs excluded; each (vector, neighbor) pair meets at most
     * once (a neighbor lives in exactly one list). */
   def knnGraph(emb0: DataFrame, k: Int, nprobe: Int = 1): DataFrame = {
-    // 8-way fan (the Neutral.sigTable r18 pattern): the query side IS the
-    // corpus, so the routing crossJoin's cosines and the probe join's map
-    // sides otherwise run inside the 1-task row-group scan
-    val emb = ScaleOps.fanOutCompute(emb0, "vec_id",
-      target = math.min(8, emb0.sparkSession.sparkContext.defaultParallelism))
+    // fanned: the query side IS the corpus, so the routing crossJoin's
+    // cosines and the probe join's map sides parallelize with it
+    val emb = ScaleOps.fanOutCompute(emb0, "vec_id")
     val cents = centroids(emb0)
     val wProbe = Window.partitionBy("query_id")
       .orderBy(col("ccos").desc, col("probe_label").asc)

@@ -476,26 +476,20 @@ object TextAnalysis {
     * are equi on the fingerprint hash. Pair volume per fingerprint is
     * df², so fingerprints appearing in more than `maxPostings` docs are
     * dropped before pairing — they are boilerplate with no discriminative
-    * value (MOSS does the same), and the cap bounds the worst bucket the
-    * way maxBucket does for MinHash bands. The fingerprint table is
+    * value (MOSS does the same), and the cap bounds the worst bucket's
+    * pair volume. The fingerprint table is
     * cached: the postings explode and the per-doc sizes both consume it. */
   def winnowOverlapPairs(docs: DataFrame, textCol: String = "text",
       k: Int = 8, w: Int = 8, minShared: Int = 2,
       maxPostings: Int = 50, minContainment: Double = 0.0): DataFrame = {
     require(minShared >= 1, "minShared must be >= 1")
     require(maxPostings >= 2, "maxPostings < 2 would drop every shared fingerprint")
-    // 8-way fan before the cache (the Neutral.sigTable r18 pattern): the
-    // single-row-group scan otherwise leaves the fingerprint cache one
-    // partition, serializing the Md5Winnow kernel and every consumer stage
-    val fps = Pins.track(
+    val fps = Pins.cache(
       withWinnowedFingerprint(
-          ScaleOps.fanOutCompute(docs.select(col("doc_id"), col(textCol)),
-            "doc_id", target = math.min(8,
-              docs.sparkSession.sparkContext.defaultParallelism)),
+          ScaleOps.fanOutCompute(docs.select(col("doc_id"), col(textCol))),
           textCol, k, w)
         .filter(col("winnow_fp").isNotNull)
-        .select(col("doc_id"), col("n_fp"), col("winnow_fp"))
-        .cache())
+        .select(col("doc_id"), col("n_fp"), col("winnow_fp")))
     // NOT unhexed to a binary key (r18 measured): narrowing the postings
     // key to the 16-byte digest regressed the paired A/B 2.9→3.8 s — the
     // per-row unhex projection and binary-key hashing cost more than the
@@ -618,9 +612,8 @@ object TextAnalysis {
       .select(explode(words(textCol)).as("w"))
       .filter(col("w") =!= "")
       .groupBy("w").agg(count(lit(1)).as("wc"))
-    var syms = Pins.track(wordCounts.select(col("wc"),
-      graft.expr.CharSyms.charSyms(col("w")).as("s"))
-      .cache())
+    var syms = Pins.cache(wordCounts.select(col("wc"),
+      graft.expr.CharSyms.charSyms(col("w")).as("s")))
     val merges = Seq.newBuilder[(Int, String, String, String, Long)]
     for (r <- 1 to rounds) {
       val top = syms
@@ -636,13 +629,10 @@ object TextAnalysis {
       require(top.nonEmpty, s"no adjacent pairs left to merge in round $r")
       val (a, b, cnt) = (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
       merges += ((r, a, b, a + b, cnt))
-      val next = Pins.track(
-        syms.select(col("wc"), applyBpeMerge(col("s"), a, b).as("s")).cache())
-      next.count()
-      syms.unpersist()
-      syms = next
+      syms = Pins.advance(syms,
+        syms.select(col("wc"), applyBpeMerge(col("s"), a, b).as("s")))
     }
-    syms.unpersist()
+    Pins.release(syms)
     merges.result()
   }
 
@@ -717,32 +707,26 @@ object TextAnalysis {
   def lmBigramModel(docs: DataFrame, textCol: String = "text")
       : (DataFrame, DataFrame) = {
     val dec = org.apache.spark.sql.types.DecimalType(18, 6)
-    // 8-way fan before the explodes (the Neutral.sigTable r18 pattern):
-    // both count passes otherwise tokenize the corpus inside the 1-task
-    // row-group scan
-    val ws = ScaleOps.fanOutCompute(docs, "doc_id",
-        target = math.min(8, docs.sparkSession.sparkContext.defaultParallelism))
+    val ws = ScaleOps.fanOutCompute(docs)
       .select(
         filter(split(lower(trim(col(textCol))), "\\s+"), x => x =!= "").as("ws"))
     // n12 feeds both the context totals and the final join — cache the
     // vocabulary-bounded counts, re-scan the raw text for unigrams (the
     // token arrays would be corpus-sized; the counts are not)
-    val n12 = Pins.track(
+    val n12 = Pins.cache(
       ws.filter(size(col("ws")) >= 2)
         .select(explode(arrays_zip(
           slice(col("ws"), lit(1), size(col("ws")) - 1),
           slice(col("ws"), lit(2), size(col("ws")) - 1))).as("pr"))
         .select(col("pr.0").as("w1"), col("pr.1").as("w2"))
-        .groupBy("w1", "w2").agg(count(lit(1)).as("n12"))
-        .cache())
+        .groupBy("w1", "w2").agg(count(lit(1)).as("n12")))
     val n1 = n12.groupBy("w1").agg(sum(col("n12")).as("n1"))
     val big = n12.join(n1, "w1")
       .select(col("w1"), col("w2"),
         log(col("n12").cast("double") / col("n1")).cast(dec).as("lp"))
-    val uni = Pins.track(
+    val uni = Pins.cache(
       ws.select(explode(col("ws")).as("word"))
-        .groupBy("word").agg(count(lit(1)).as("tf"))
-        .cache())
+        .groupBy("word").agg(count(lit(1)).as("tf")))
     val tot = uni.agg(sum(col("tf")).as("total"))
     val bo = uni.join(broadcast(tot))
       .select(col("word"),
@@ -763,8 +747,7 @@ object TextAnalysis {
     */
   def lmBigramScoreWith(docs: DataFrame, big: DataFrame, bo: DataFrame,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame =
-    ScaleOps.fanOutCompute(docs.select(col(idCol), col(textCol)), idCol,
-        target = math.min(8, docs.sparkSession.sparkContext.defaultParallelism))
+    ScaleOps.fanOutCompute(docs.select(col(idCol), col(textCol)), idCol)
       .select(col(idCol),
         filter(split(lower(trim(col(textCol))), "\\s+"), x => x =!= "").as("ws"))
       .filter(size(col("ws")) >= 2)
@@ -834,12 +817,11 @@ object TextAnalysis {
       k: Int = 3): DataFrame = {
     val dec6 = org.apache.spark.sql.types.DecimalType(18, 6)
     def lnr(c: Column): Column = log(c).cast(dec6).cast("double")
-    val gw = Pins.track(docs
+    val gw = Pins.cache(docs
       .select(col(groupCol).as("grp"),
         explode(split(lower(trim(col(textCol))), "\\s+")).as("word"))
       .filter(col("word") =!= "")
-      .groupBy("grp", "word").agg(count(lit(1)).as("c_gw"))
-      .cache())
+      .groupBy("grp", "word").agg(count(lit(1)).as("c_gw")))
     val wTot = gw.groupBy("word").agg(sum(col("c_gw")).as("c_w"))
     val gTot = gw.groupBy("grp").agg(sum(col("c_gw")).as("n_g"))
     val vocab = gw.agg(countDistinct(col("word")).as("v"),

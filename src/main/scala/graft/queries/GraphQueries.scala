@@ -72,7 +72,7 @@ object GraphQueries {
     // once per iteration, and uncached that re-derives the 4-table join
     // every hop (same pattern as Graph.pageRank's cache; the oracle's
     // MATERIALIZED hint is the DuckDB analogue)
-    graft.ops.Pins.track(s.sql(thinSql).cache())
+    graft.ops.Pins.cache(s.sql(thinSql))
       .createOrReplaceTempView("thin_edges")
     s.sql("WITH RECURSIVE " + reachBody("thin_edges"))
   }

@@ -86,11 +86,10 @@ object NorthStar {
     // once per pair, and compared with the codegen'd merge-walk
     // JaccardSorted (ShingleHashes emits sorted distinct arrays) instead
     // of two hash-set builds per pair: ~7 s -> ~1 s at sf0.1
-    val shn = graft.ops.Pins.track(anchor
+    val shn = graft.ops.Pins.cache(anchor
       .select(col("doc_id"),
         graft.expr.ShingleHashes.shingleHashes(col("text"), 3).as("s"))
-      .filter(size(col("s")) > 0)
-      .cache())
+      .filter(size(col("s")) > 0))
     val ex = shn.as("a").join(shn.as("b"), col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
         graft.expr.ArrayExprs.jaccardSorted(col("a.s"), col("b.s"))
@@ -100,7 +99,7 @@ object NorthStar {
     val hits = graft.ops.Neutral.minHashCandidates(anchor)
       .filter(col("jaccard") >= 0.3)
       .select("doc_a", "doc_b")
-    val exC = graft.ops.Pins.track(ex.cache())
+    val exC = graft.ops.Pins.cache(ex)
     exC.agg(count(lit(1)).as("n_exact"))
       .join(exC.join(hits, Seq("doc_a", "doc_b"), "left_semi")
         .agg(count(lit(1)).as("n_found")))

@@ -114,16 +114,13 @@ object Relational {
       |WHERE l_shipdate <= TIMESTAMP '2001-09-01'
       |GROUP BY l_returnflag, l_linestatus
       |ORDER BY l_returnflag, l_linestatus""".stripMargin) { (s, d) =>
-    // 8-way fan after the pushed filter (identity on any multi-split
-    // source): the bench lineitem is one parquet row group, so the
-    // partial aggregation otherwise runs single-task
+    // fanned after the pushed filter, so only the surviving rows move
     graft.ops.ScaleOps.fanOutCompute(
         T.lineitem(s, d)
           .filter(col("l_shipdate") <= lit("2001-09-01").cast("timestamp"))
           .select("l_orderkey", "l_returnflag", "l_linestatus", "l_quantity",
             "l_extendedprice", "l_discount"),
-        "l_orderkey",
-        target = math.min(8, s.sparkContext.defaultParallelism))
+        "l_orderkey")
       .groupBy("l_returnflag", "l_linestatus")
       .agg(
         Fns.dsum(col("l_quantity")).as("sum_qty"),

@@ -360,14 +360,13 @@ object TrainPrep {
     // chain a second time — the two subtrees don't canonicalize equal, so
     // exchange reuse never fires. mg is 3 narrow columns per doc (the
     // nbModel-cw pin pattern; Bench's clearState releases it per run).
-    val mg = graft.ops.Pins.track(ranked.groupBy("doc_id")
+    val mg = graft.ops.Pins.cache(ranked.groupBy("doc_id")
       .agg(max(when(col("rn") === 1, col("label"))).as("pred_label"),
         max(when(col("rn") === 1, col("score"))).as("sc1"),
         max(when(col("rn") === 2, col("score"))).as("sc2"))
       .filter(col("sc2").isNotNull)
       .select(col("doc_id"), col("pred_label"),
-        (col("sc1") - col("sc2")).cast("double").as("margin"))
-      .cache())
+        (col("sc1") - col("sc2")).cast("double").as("margin")))
     val bounds = mg.agg(min(col("margin")).as("lo"),
       when(max(col("margin")) > min(col("margin")),
         max(col("margin")) - min(col("margin"))).otherwise(lit(1.0))

@@ -108,16 +108,42 @@ class CacheHygieneSpec extends AnyFunSuite {
   }
 
   test("only Pins reads the persistent-RDD registry in operator sources") {
+    // ... and only Pins caches, checkpoints or frees: operators go through
+    // Pins.cache / checkpoint / advance / release
     import scala.jdk.CollectionConverters._
     val root = java.nio.file.Paths.get("src/main/scala/graft")
+    val banned = Seq("getPersistentRDDs", ".cache()", ".persist(",
+      ".localCheckpoint(", ".unpersist(", "Pins.track")
     val offenders = Seq("ops", "streaming", "queries").flatMap { d =>
       java.nio.file.Files.walk(root.resolve(d)).iterator().asScala.toSeq
         .filter(p => p.toString.endsWith(".scala") &&
-          p.getFileName.toString != "Pins.scala" &&
-          java.nio.file.Files.readString(p).contains("getPersistentRDDs"))
+          p.getFileName.toString != "Pins.scala")
+        .flatMap { p =>
+          val src = java.nio.file.Files.readString(p)
+          val hits = banned.filter(src.contains)
+          Option.when(hits.nonEmpty)(s"$p: ${hits.mkString(" ")}")
+        }
     }
     assert(offenders.isEmpty,
-      s"getPersistentRDDs outside Pins (use Pins.checkpoint/release): $offenders")
+      s"materialisation outside Pins (use Pins.cache/checkpoint/advance/release): " +
+        offenders.mkString("; "))
+  }
+
+  test("Pins.release frees a Pins.cache pin and lowers liveCount by one") {
+    import spark.implicits._
+    clearState()
+    val df = ops.Pins.cache(queries.T.documents(spark, sf).select($"doc_id"))
+    df.count()
+    val live = ops.Pins.liveCount
+    val rdds = spark.sparkContext.getPersistentRDDs.size
+    ops.Pins.release(df)
+    assert(df.storageLevel == org.apache.spark.storage.StorageLevel.NONE,
+      "released pin is still cached")
+    assert(spark.sparkContext.getPersistentRDDs.size == rdds - 1,
+      "release did not free the pin's RDD")
+    assert(ops.Pins.liveCount == live - 1,
+      s"liveCount ${ops.Pins.liveCount}, expected ${live - 1}")
+    clearState()
   }
 
   test("per-op pinned footprint is exactly the documented contract") {
@@ -193,13 +219,13 @@ class CacheHygieneSpec extends AnyFunSuite {
     clearState()
     val docs = queries.T.documents(spark, sf).filter($"doc_id" < 100)
     // an "other operator" pin created on THIS thread before the scope opens
-    val outer = ops.Pins.track(docs.select($"doc_id").cache())
+    val outer = ops.Pins.cache(docs.select($"doc_id"))
     outer.count()
     // an "other operator" pin created on a DIFFERENT thread while the scope
     // is conceptually open — must survive the scoped release
     @volatile var otherDf: org.apache.spark.sql.DataFrame = null
     val t = new Thread(() => {
-      otherDf = ops.Pins.track(docs.select($"text").cache())
+      otherDf = ops.Pins.cache(docs.select($"text"))
       otherDf.count()
     })
     ops.Pins.scoped {

@@ -446,12 +446,14 @@ class NeutralSpec extends AnyFunSuite {
       .withColumn("lang", lit("en")).withColumn("source", lit("t"))
       .withColumn("n_chars", length(col("text")))
     val capped = graft.ops.Neutral
-      .minHashCandidates(docs, maxBucket = Some(10))
+      .minHashCandidates(docs, starCap = Some(10))
       .filter(col("jaccard") >= 0.5)
       .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
     assert(capped.contains((1L, 2L)), s"small-bucket pair lost: $capped")
-    assert(!capped.exists(p => p._1 >= 1000 && p._2 >= 1000),
-      s"oversized-bucket pairs should be skipped: $capped")
+    // the oversized bucket emits only its hub edges: rep 1000 -> member
+    val hub = (1001L to 1029L).map(b => (1000L, b)).toSet
+    assert(capped.filter(p => p._1 >= 1000 && p._2 >= 1000) == hub,
+      s"oversized bucket should emit exactly the 29 hub edges: $capped")
     // uncapped finds the flood pairs (30*29/2 of them)
     val uncapped = graft.ops.Neutral.minHashCandidates(docs)
       .filter(col("jaccard") >= 0.5).count()

@@ -60,10 +60,12 @@ class OpsSpec extends AnyFunSuite {
       (1L, "one two three four five six seven eight"),
       (2L, "one two three four five six seven nine"))
     val docs = (heavy ++ light).toDF("doc_id", "text")
-    val capped = Dedup.minHashCandidates(docs, maxBucket = Some(10))
+    val capped = Dedup.minHashCandidates(docs, starCap = Some(10))
       .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
-    assert(!capped.exists { case (a, b) => a >= 1000L && b >= 1000L },
-      "pairs inside the oversized bucket must be skipped")
+    // the oversized bucket emits only its hub edges: rep 1000 -> member
+    val hub = (1001L to 1029L).map(b => (1000L, b)).toSet
+    assert(capped.filter { case (a, b) => a >= 1000L && b >= 1000L } == hub,
+      s"oversized bucket must emit exactly the 29 hub edges: $capped")
     assert(capped.contains((1L, 2L)), "small buckets must still pair")
     // default (no cap) still finds the heavy group
     val uncapped = Dedup.minHashCandidates(docs)
