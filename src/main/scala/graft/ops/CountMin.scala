@@ -126,11 +126,8 @@ object CountMin {
   }
 
   /** Compact the folded artifact back to ≤ depth×width rows (serve
-    * results unchanged — the fold is the serve's own first step; the
-    * pinned localCheckpoint severs the read from the overwrite). */
-  def cmsCompact(spark: SparkSession, dir: String): Unit = {
-    val folded = Pins.checkpoint(Models.load(spark, s"$dir/cells")
-      .groupBy("row_i", "bucket").agg(sum(col("cnt")).cast("long").as("cnt")))
-    Models.save(folded, s"$dir/cells")
-  }
+    * results unchanged — the fold is the serve's own first step). */
+  def cmsCompact(spark: SparkSession, dir: String): Unit =
+    Models.rewrite(spark, s"$dir/cells")(
+      _.groupBy("row_i", "bucket").agg(sum(col("cnt")).cast("long").as("cnt")))
 }

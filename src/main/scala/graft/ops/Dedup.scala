@@ -581,8 +581,8 @@ object Dedup {
   /** Compact the union-find artifact — the path-compression pass run as
     * maintenance instead of at every serve: rewrite `labels` as the
     * RESOLVED table (every stored label pushed through the merge
-    * closure, via generation swap — the labels table is read while its
-    * replacement is written) and reset `merges` to empty. Serving after
+    * closure, via [[Models.rewrite]] — the labels table is read while
+    * its replacement is written) and reset `merges` to empty. Serving after
     * compaction resolves through an empty closure — identity — so
     * serve-after-compact ≡ serve-before; appends after compaction see
     * the same current representatives (a resolved label IS its rep).
@@ -591,14 +591,9 @@ object Dedup {
     * compaction the merge map restarts from the append deltas only. */
   def ccCompact(spark: org.apache.spark.sql.SparkSession,
       dir: String): Unit = Pins.scoped {
-    val resolved = resolve(Models.load(spark, s"$dir/labels"),
-      closeMerges(Models.load(spark, s"$dir/merges")))
-    val tmp = s"$dir/labels__compacting"
-    Models.save(resolved, tmp)
-    Models.swapIn(spark, tmp, s"$dir/labels")
-    import spark.implicits._
-    Models.save(Seq.empty[(Long, Long)].toDF("from_rep", "to_rep"),
-      s"$dir/merges")
+    val closed = closeMerges(Models.load(spark, s"$dir/merges"))
+    Models.rewrite(spark, s"$dir/labels")(resolve(_, closed))
+    Models.rewrite(spark, s"$dir/merges")(_.limit(0))
     Models.resetGens(spark, dir)
   }
 }

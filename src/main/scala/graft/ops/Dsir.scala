@@ -253,14 +253,12 @@ object Dsir {
     * to one row per bucket (the exact integer sum serve performs at
     * load). Serve-after-compact is bit-identical; what it buys is the
     * load-time fold shrinking from O(batches·buckets) rows back to the
-    * numBuckets bound. The checkpoint is Pins-tracked (the table is
-    * bucket-bounded, so the checkpoint is tiny). */
+    * numBuckets bound. */
   def dsirCompactCounts(spark: SparkSession, dir: String,
       numBuckets: Int = DefaultBuckets): Unit = {
     requireMeta(spark, dir, numBuckets)
-    val folded = Pins.checkpoint(Models.load(spark, s"$dir/raw_counts")
-      .groupBy("bucket").agg(sum(col("nr")).cast("long").as("nr")))
-    Models.save(folded, s"$dir/raw_counts")
+    Models.rewrite(spark, s"$dir/raw_counts")(
+      _.groupBy("bucket").agg(sum(col("nr")).cast("long").as("nr")))
   }
 
   /** Weight a corpus against the COUNT-form artifact: sum the (possibly

@@ -131,21 +131,17 @@ object Evolve {
       .agg(sum(col("n")).as("n_rows"), sum(col("amount")).as("total_amount"))
 
   /** Compact the folded artifact back to one row per group: fold the
-    * appended partials and REPLACE the table (localCheckpoint severs the
-    * read from the overwrite — Spark cannot overwrite a path its plan is
-    * still scanning). Serve results are unchanged by construction; run
-    * whenever batch count makes the artifact's |groups| × |batches| rows
-    * worth collapsing. */
+    * appended partials and REPLACE the table ([[Models.rewrite]]). Serve
+    * results are unchanged by construction; run whenever batch count
+    * makes the artifact's |groups| × |batches| rows worth collapsing. */
   def aggCompact(spark: org.apache.spark.sql.SparkSession, dir: String,
-      keyCol: String): Unit = {
+      keyCol: String): Unit =
     // cast back to the partial schema (sum widens decimal precision;
     // future appends must stay parquet-schema-compatible)
-    val folded = Pins.checkpoint(aggServe(spark, dir, keyCol)
-      .select(col(keyCol), col("n_rows").cast("long").as("n"),
-        col("total_amount")
+    Models.rewrite(spark, s"$dir/agg")(_.groupBy(keyCol)
+      .agg(sum(col("n")).cast("long").as("n"),
+        sum(col("amount"))
           .cast(org.apache.spark.sql.types.DecimalType(28, 6)).as("amount")))
-    Models.save(folded, s"$dir/agg")
-  }
 
   /** Incremental JOIN-view maintenance (insert-only deltas on BOTH
     * sides) — the join-shaped sibling of the maintained aggregate

@@ -4,6 +4,7 @@ import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{coalesce, col, countDistinct, lit, max}
 
 /** Persisted model artifacts: the fit/apply split for the
   * learned-parameter operators (PQ codebooks, IVF coarse centroids,
@@ -23,7 +24,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * change, which is what lets a served query share its oracle with the
   * refitting form.
   *
-  * [[save]]/[[load]]/[[exists]] work on any Hadoop-visible path (local
+  * [[save]]/[[load]]/[[rewrite]] work on any Hadoop-visible path (local
   * fs in tests, HDFS/object store at scale). [[ensureBuilt]] is the
   * in-JVM memoization the bench/verify harness uses: first caller builds
   * into a fresh temp dir, every later caller (and bench rep) serves from
@@ -32,9 +33,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Models {
 
-  /** Persist one model table (overwrite — a fitted artifact is replaced
-    * atomically per path; the one append-shaped artifact is the dedup
-    * admission index, via [[append]]). */
+  /** Persist one model table by plain overwrite: Spark deletes `dir`
+    * before the write job runs, so a failed save leaves no table. For
+    * builds (a failed build re-runs from its inputs); an in-place
+    * replacement of a live artifact goes through [[rewrite]]. */
   def save(df: DataFrame, dir: String): Unit =
     df.write.mode("overwrite").parquet(dir)
 
@@ -67,36 +69,25 @@ object Models {
 
   /** Fold the ledger after a compaction: the artifact is ONE generation
     * again, but the last-seen batch id is preserved (compaction changes
-    * layout, not content). The max() read is fine here — compaction is
-    * already a whole-artifact rewrite, never the hot append path. */
-  def resetGens(spark: SparkSession, dir: String): Unit = {
-    import spark.implicits._
-    val path = s"$dir/gens"
-    val last =
-      try {
-        val r = load(spark, path)
-          .agg(org.apache.spark.sql.functions.max("batch_id")).head()
-        if (r.isNullAt(0)) -1L else r.getLong(0)
-      } catch { case _: org.apache.spark.sql.AnalysisException => -1L }
-    save(Seq(last).toDF("batch_id"), path)
-  }
+    * layout, not content) — the max() is the rewrite itself, one job. */
+  def resetGens(spark: SparkSession, dir: String): Unit =
+    rewrite(spark, s"$dir/gens")(_.agg(coalesce(max(col("batch_id")),
+      lit(-1L)).as("batch_id")))
 
   /** The freshness row the card reads: generation count + last batch id.
     * count(DISTINCT batch_id), not count(*): replayed micro-batches fold
     * (see [[logGen]]'s replay contract). */
-  def genStats(spark: SparkSession, dir: String): org.apache.spark.sql.DataFrame =
+  def genStats(spark: SparkSession, dir: String): DataFrame =
     load(spark, s"$dir/gens").agg(
-      org.apache.spark.sql.functions.countDistinct(
-        org.apache.spark.sql.functions.col("batch_id")).as("n_generations"),
-      org.apache.spark.sql.functions.max(
-        org.apache.spark.sql.functions.col("batch_id")).as("last_batch_id"))
+      countDistinct(col("batch_id")).as("n_generations"),
+      max(col("batch_id")).as("last_batch_id"))
 
   private val SwapAsideSuffix = "__swap_old"
 
   /** Generation swap: replace the live artifact directory with a freshly
     * written one. Parquet cannot overwrite a directory that is also
-    * being read, so maintenance passes (posting compaction, …) write a
-    * NEW directory from the old one and swap — the pattern a real table
+    * being read, so maintenance passes ([[rewrite]]) write a NEW
+    * directory from the old one and swap — the pattern a real table
     * format wraps in a metadata commit. The swap is RENAME-ASIDE
     * (live → live__swap_old, tmp → live, delete __swap_old), never
     * delete-then-rename: compaction now runs unattended inside streaming
@@ -133,6 +124,20 @@ object Models {
     fs.delete(aside, true)
   }
 
+  /** Replace the artifact table at `path` with `f` of its current
+    * contents — the one in-place rewrite every compaction runs. The new
+    * table is written to `path__compacting` while `path` keeps serving,
+    * then [[swapIn]] makes it live: a failed write leaves the live table
+    * untouched, where an overwrite of `path` would already have deleted
+    * it. `partitionBy` keeps a [[savePartitioned]] layout. */
+  def rewrite(spark: SparkSession, path: String, partitionBy: String*)(
+      f: DataFrame => DataFrame): Unit = {
+    val tmp = path + "__compacting"
+    f(load(spark, path)).write.mode("overwrite")
+      .partitionBy(partitionBy: _*).parquet(tmp)
+    swapIn(spark, tmp, path)
+  }
+
   /** Recover `liveDir` from a [[swapIn]] interrupted mid-swap (see the
     * crash-window table there). Idempotent and cheap when there is
     * nothing to do: one fs.exists on the __swap_old marker. */
@@ -151,13 +156,16 @@ object Models {
     }
   }
 
-  /** Append a delta to an existing artifact table — only for artifacts
-    * whose consumers are multiplicity-insensitive (the dedup index's
-    * digest/signature tables, read via anti/semi joins: Neutral
-    * .dedupIndexAppend). A fitted model (centroids, codebooks, merges)
-    * must never be appended — rebuild and [[save]] instead. Heals a
-    * crashed swap first: appending into a directory a dead compaction
-    * left missing would otherwise recreate it near-empty. */
+  /** Append a delta to an existing artifact table — the growth path of
+    * every incrementally maintained artifact: dedup index and Bloom
+    * positions (read through multiplicity-blind anti/semi joins), BM25
+    * postings and stats, CMS cells, agg partials, DSIR counts and the
+    * HLL cube (partials folded at serve), sample candidates (deduped and
+    * re-ranked at serve), the join view and CC labels/merges. A fitted
+    * model (centroids, codebooks, BPE merges) must never be appended —
+    * rebuild and [[save]] instead. Heals a crashed swap first: appending
+    * into a directory a dead compaction left missing would otherwise
+    * recreate it near-empty. */
   def append(df: DataFrame, dir: String): Unit = {
     healSwap(df.sparkSession, dir)
     df.write.mode("append").parquet(dir)
@@ -196,14 +204,6 @@ object Models {
     val aside = new Path(dir + SwapAsideSuffix)
     val src = if (!fs.exists(live) && fs.exists(aside)) aside else live
     spark.read.parquet(src.toString)
-  }
-
-  /** True iff a completed save exists at `dir` (the _SUCCESS marker —
-    * a torn write never serves). */
-  def exists(spark: SparkSession, dir: String): Boolean = {
-    val p = new Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(new Path(p, "_SUCCESS"))
   }
 
   private val built = new ConcurrentHashMap[String, String]()

@@ -365,29 +365,18 @@ object Neutral {
     * digest twice — consumers are anti/semi joins, so multiplicity never
     * changed answers, only scan size), `hs`/`banded` rewrite as single
     * file sets (doc ids are unique by the admission contract), banded
-    * re-laid-out by band key so a candidate probe's (b, bh) equi join
-    * prunes on footer stats. All via generation swap; answers are
-    * byte-identical before/after (the served-admission oracle is shared
-    * verbatim). */
+    * re-laid-out by band key so a candidate probe's (band, bucket) equi
+    * join prunes on footer stats. All via [[Models.rewrite]]; answers
+    * are byte-identical before/after (the served-admission oracle is
+    * shared verbatim). */
   def dedupIndexCompact(spark: org.apache.spark.sql.SparkSession,
       dir: String): Unit = {
-    val shaTmp = s"$dir/sha__compacting"
-    Models.save(Models.load(spark, s"$dir/sha").distinct(), shaTmp)
-    Models.swapIn(spark, shaTmp, s"$dir/sha")
-    val hsTmp = s"$dir/hs__compacting"
-    Models.save(
-      Models.load(spark, s"$dir/hs")
-        .repartitionByRange(col("doc_id")).sortWithinPartitions("doc_id"),
-      hsTmp)
-    Models.swapIn(spark, hsTmp, s"$dir/hs")
-    val bTmp = s"$dir/banded__compacting"
-    val banded = Models.load(spark, s"$dir/banded")
-    Models.save(
-      banded.repartitionByRange(
-        banded.columns.filter(_ != "doc_id").map(col).toSeq: _*)
-        .sortWithinPartitions(banded.columns.map(col).toSeq: _*),
-      bTmp)
-    Models.swapIn(spark, bTmp, s"$dir/banded")
+    Models.rewrite(spark, s"$dir/sha")(_.distinct())
+    Models.rewrite(spark, s"$dir/hs")(
+      _.repartitionByRange(col("doc_id")).sortWithinPartitions("doc_id"))
+    Models.rewrite(spark, s"$dir/banded")(b =>
+      b.repartitionByRange(b.columns.filter(_ != "doc_id").map(col).toSeq: _*)
+        .sortWithinPartitions(b.columns.map(col).toSeq: _*))
     Models.resetGens(spark, dir)
   }
 
@@ -501,16 +490,13 @@ object Neutral {
   /** Compact the Bloom artifact: appended batches are distinct WITHIN a
     * batch but positions re-occupied across batches accumulate duplicate
     * rows — the bitset OR, run as maintenance: one global distinct
-    * rewrite (generation swap) restores the ≤ mBits bound the broadcast
-    * probe relies on. Probes are set-membership (multiplicity never
-    * changed answers), so the served-admission oracle is shared
+    * rewrite ([[Models.rewrite]]) restores the ≤ mBits bound the
+    * broadcast probe relies on. Probes are set-membership (multiplicity
+    * never changed answers), so the served-admission oracle is shared
     * verbatim. */
   def bloomIndexCompact(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Unit = {
-    val tmp = s"$dir/bloom__compacting"
-    Models.save(Models.load(spark, s"$dir/bloom").distinct(), tmp)
-    Models.swapIn(spark, tmp, s"$dir/bloom")
-  }
+      dir: String): Unit =
+    Models.rewrite(spark, s"$dir/bloom")(_.distinct())
 
   /** Admit a batch against the Bloom artifact AND fold its positions in —
     * the per-batch step of the streaming seen-set loop. Same

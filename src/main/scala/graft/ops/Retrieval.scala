@@ -219,16 +219,12 @@ object Retrieval {
   }
 
   /** Rewrite a word-sorted posting table's N append generations into ONE
-    * word-range-sorted file set via generation swap (write new dir from
-    * old, [[Models.swapIn]]). One range shuffle over the table — the same
-    * cost as the original build's layout pass, amortized over every query
-    * until the next compaction. */
+    * word-range-sorted file set ([[Models.rewrite]]). One range shuffle
+    * over the table — the same cost as the original build's layout pass,
+    * amortized over every query until the next compaction. */
   private def compactWordSorted(spark: org.apache.spark.sql.SparkSession,
-      path: String, idCol: String): Unit = {
-    val tmp = path + "__compacting"
-    Models.save(wordSorted(Models.load(spark, path), idCol), tmp)
-    Models.swapIn(spark, tmp, path)
-  }
+      path: String, idCol: String): Unit =
+    Models.rewrite(spark, path)(wordSorted(_, idCol))
 
   /** Compact the phrase index's appended posting generations: after a
     * year of daily appends the positions table is 365 word-sorted file
@@ -249,27 +245,17 @@ object Retrieval {
     * layout ([[compactWordSorted]]), doclen rewritten id-range-sorted
     * (doc-lookup pruning), and the per-append (n_docs, sum_dl) stats
     * partials folded to their exact sum — ONE row replaces N, the same
-    * integer fold [[bm25Serve]] performs at query time (the 1-row collect
-    * is model-sized by construction). Serving after compaction is
-    * bit-identical to before: every piece is either a layout-only rewrite
-    * or an exact fold. */
+    * integer fold [[bm25Serve]] performs at query time. Serving after
+    * compaction is bit-identical to before: every piece is either a
+    * layout-only rewrite or an exact fold. */
   def bm25Compact(spark: org.apache.spark.sql.SparkSession,
       dir: String, idCol: String): Unit = {
     compactWordSorted(spark, s"$dir/postings", idCol)
-    val dlTmp = s"$dir/doclen__compacting"
-    Models.save(
-      Models.load(spark, s"$dir/doclen")
-        .repartitionByRange(col(idCol)).sortWithinPartitions(idCol),
-      dlTmp)
-    Models.swapIn(spark, dlTmp, s"$dir/doclen")
-    val folded = Models.load(spark, s"$dir/stats")
-      .agg(sum(col("n_docs")).cast("long").as("n_docs"),
-        sum(col("sum_dl")).cast("long").as("sum_dl"))
-      .head()
-    import spark.implicits._
-    Models.save(
-      Seq((folded.getLong(0), folded.getLong(1))).toDF("n_docs", "sum_dl"),
-      s"$dir/stats")
+    Models.rewrite(spark, s"$dir/doclen")(
+      _.repartitionByRange(col(idCol)).sortWithinPartitions(idCol))
+    Models.rewrite(spark, s"$dir/stats")(
+      _.agg(sum(col("n_docs")).cast("long").as("n_docs"),
+        sum(col("sum_dl")).cast("long").as("sum_dl")))
     Models.resetGens(spark, dir)
   }
 

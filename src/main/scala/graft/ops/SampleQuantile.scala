@@ -103,10 +103,13 @@ object SampleQuantile {
   /** The folded sample: bottom-k of all persisted candidate rows. Reads
     * the groups×k×batches artifact only — the corpus never re-scans. */
   def serveSketch(spark: SparkSession, dir: String,
+      groupCol: String): DataFrame =
+    bottomK(Models.load(spark, s"$dir/sample"), kOf(spark, dir), groupCol)
+
+  private def bottomK(sample: DataFrame, k: Int,
       groupCol: String): DataFrame = {
-    val k = kOf(spark, dir)
     val w = Window.partitionBy(groupCol).orderBy(col("hv"), col("v"))
-    Models.load(spark, s"$dir/sample")
+    sample
       // only TRUE replays fold away: the rid keeps genuinely distinct rows
       // that collide on (hv, v) apart, matching rebuild-on-everything
       .dropDuplicates(groupCol, "hv", "v", "rid")
@@ -120,10 +123,9 @@ object SampleQuantile {
     quantiles(serveSketch(spark, dir, groupCol), groupCol, qs)
 
   /** Rewrite the candidate table as the folded bottom-k (serve results
-    * unchanged — the fold is the serve's own first step; the pinned
-    * localCheckpoint severs the read lineage from the overwrite). */
+    * unchanged — the fold is the serve's own first step). */
   def compact(spark: SparkSession, dir: String, groupCol: String): Unit = {
-    val folded = Pins.checkpoint(serveSketch(spark, dir, groupCol))
-    Models.save(folded, s"$dir/sample")
+    val k = kOf(spark, dir)
+    Models.rewrite(spark, s"$dir/sample")(bottomK(_, k, groupCol))
   }
 }

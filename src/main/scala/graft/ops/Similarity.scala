@@ -330,19 +330,15 @@ object Similarity {
 
   /** Compact the inverted lists: N appended file sets per label
     * directory fold to one (repartition by label → each partition
-    * directory rewrites as a single file set; generation swap because
-    * the lists are read while their replacement is written). Content is
+    * directory rewrites as a single file set, via [[Models.rewrite]]
+    * because the lists are read while their replacement is written). Content is
     * untouched — serving and the q_ns_sim_ivf_served_incremental oracle
     * are layout-invariant — and the probed-lists partition pruning keeps
     * working against far fewer files. The coarse centroids are a fitted
     * model: never appended, nothing to compact. */
   def ivfCompact(spark: org.apache.spark.sql.SparkSession,
       dir: String): Unit = {
-    val tmp = s"$dir/lists__compacting"
-    Models.savePartitioned(
-      Models.load(spark, s"$dir/lists").repartition(col("label")),
-      tmp, "label")
-    Models.swapIn(spark, tmp, s"$dir/lists")
+    Models.rewrite(spark, s"$dir/lists", "label")(_.repartition(col("label")))
     Models.resetGens(spark, dir)
   }
 

@@ -157,7 +157,7 @@ class LifecycleSpec extends AnyFunSuite {
     Evolve.aggFold(orders.filter(col("o_orderkey") % 3 === 0), dir,
       "o_custkey", "o_totalprice") // re-fold a slice: schema must merge
     assert(Evolve.aggServe(spark, dir, "o_custkey").count() == full.count())
-    // the compaction checkpoint is ledger-tracked: releaseAll alone frees it
+    // aggCompact pins nothing: releaseAll leaves the registry empty
     graft.ops.Pins.releaseAll()
     assert(spark.sparkContext.getPersistentRDDs.isEmpty,
       "Pins.releaseAll left persisted RDDs behind after aggCompact")
