@@ -494,7 +494,7 @@ object ScaleEvidence {
       val (_, tBuild) = timed {
         ops.Neutral.bloomIndexBuild(d, dir, mBits = mBits)
       }
-      val occupied = ops.Models.load(spark, s"$dir/bloom").count()
+      val occupied = ops.Models.load(spark, dir, "bloom").count()
       val ((nInc, falseRejects), tServe) = timed {
         // mBits now travels with the artifact (bloom_meta) — serve reads it
         val r = ops.Neutral.admitBloomServed(spark, dir, incoming)
@@ -652,12 +652,11 @@ object ScaleEvidence {
       // a real crawl interleaves vocabularies — without it the 10x
       // corpus's replica-per-file structure smuggles accidental
       // clustering into the control and flatters it
-      ops.Models.save(
+      ops.Models.save(spark, unsortedDir)(_.write("positions",
         docs10.repartition(10, col("doc_id"))
           .select(col("doc_id"),
             posexplode(filter(split(lower(trim(col("text"))), "\\s+"),
-              x => x =!= "")).as(Seq("pos", "word"))),
-        s"$unsortedDir/positions")
+              x => x =!= "")).as(Seq("pos", "word")))))
       // the append→compact lifecycle (r11): three word-sorted GENERATIONS
       // (build + 2 appends over a doc_id 3-way split), measured before and
       // after phraseIndexCompact — compaction must restore the file count
@@ -672,11 +671,14 @@ object ScaleEvidence {
       ops.Retrieval.phraseIndexAppend(
         docs10.filter(col("doc_id") % 3 === 2), appendDir, "doc_id", "text",
         batchId = 2L)
-      val total = ops.Models.load(spark, s"$sortedDir/positions").count()
+      val total = ops.Models.load(spark, sortedDir, "positions").count()
       def measure(layout: String, dir: String): Unit =
         for (word <- Seq("r3_value", "r7_table")) {
           clearAll(spark)
-          val agg = ops.Models.load(spark, s"$dir/positions")
+          // the count must run on THIS Dataset's own query execution —
+          // df.count() spawns a separate execution whose metrics df's
+          // (never-executed) plan would not carry
+          val agg = ops.Models.load(spark, dir, "positions")
             .filter(col("word") === word)
             .groupBy().count()
           val (hits, tScan) = timed { agg.collect().head.getLong(0) }
@@ -692,27 +694,8 @@ object ScaleEvidence {
       measure("appended_x3", appendDir)
       ops.Retrieval.phraseIndexCompact(spark, appendDir, "doc_id")
       measure("compacted", appendDir)
-      for ((layout, dir) <- Seq(("sorted", sortedDir),
-          ("unsorted", unsortedDir));
-          word <- Seq("r3_value", "r7_table")) {
-        clearAll(spark)
-        // the count must run on THIS Dataset's own query execution —
-        // df.count() spawns a separate execution whose metrics df's
-        // (never-executed) plan would not carry
-        val agg = ops.Models.load(spark, s"$dir/positions")
-          .filter(col("word") === word)
-          .groupBy().count()
-        val (hits, tScan) = timed { agg.collect().head.getLong(0) }
-        val scan = agg.queryExecution.executedPlan.collect {
-          case s: org.apache.spark.sql.execution.FileSourceScanExec => s
-        }.head
-        val rowsDecoded = scan.metrics("numOutputRows").value
-        val filesRead = scan.metrics("numFiles").value
-        println(s"""PHRASE_PRUNE {"layout":"$layout","word":"$word",""" +
-          s""""rows_decoded":$rowsDecoded,"total_rows":$total,""" +
-          s""""files_read":$filesRead,"hits":$hits,""" +
-          s""""t_scan_s":${"%.2f".format(tScan)}}""")
-      }
+      measure("sorted", sortedDir)
+      measure("unsorted", unsortedDir)
     } finally spark.conf.set("spark.sql.adaptive.enabled", aqeWas)
   }
 

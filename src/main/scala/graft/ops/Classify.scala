@@ -113,8 +113,8 @@ object Classify {
       val (priors, ll) = nbModel(
         docs.filter(Sampling.saltedBucket("nbfit", col(idCol)) < 50),
         labelCol, textCol)
-      Models.save(priors, s"$dir/priors")
-      Models.save(ll, s"$dir/likelihoods")
+      Models.save(docs.sparkSession, dir)(
+        _.write("priors", priors).write("likelihoods", ll))
     }
 
   /** Classify against a PERSISTED model — zero fitting at predict time. */
@@ -122,6 +122,6 @@ object Classify {
       docs: DataFrame, idCol: String = "doc_id", textCol: String = "text")
       : DataFrame =
     nbClassifyWith(docs,
-      Models.load(spark, s"$dir/priors"),
-      Models.load(spark, s"$dir/likelihoods"), idCol, textCol)
+      Models.load(spark, dir, "priors"),
+      Models.load(spark, dir, "likelihoods"), idCol, textCol)
 }

@@ -112,7 +112,8 @@ object Cluster {
     * rebuild, so served assignments share the fit form's oracle. */
   def kmeansBuild(emb: DataFrame, dir: String, k: Int = 8,
       iters: Int = 3): Unit =
-    Pins.scoped { Models.save(kmeansFit(emb, k, iters)._1, dir) }
+    Pins.scoped(Models.save(emb.sparkSession, dir)(
+      _.write("centroids", kmeansFit(emb, k, iters)._1)))
 
   /** Assign a corpus against PERSISTED centroids ([[kmeansBuild]]) — no
     * Lloyd iterations, just the one broadcast argmax pass. The apply half
@@ -120,7 +121,7 @@ object Cluster {
     * corpora (or corpus increments) against one fitted model. */
   def kmeansAssignServed(spark: org.apache.spark.sql.SparkSession,
       dir: String, emb: DataFrame): DataFrame =
-    assign(emb, Models.load(spark, dir))
+    assign(emb, Models.load(spark, dir, "centroids"))
 
   /** SemDeDup: cluster, then drop any vector that has a smaller-id
     * intra-cluster neighbor at cosine >= minCos (keep-the-minimum rule —

@@ -94,13 +94,13 @@ object CountMin {
   def cmsBuild(df: DataFrame, dir: String, keyCol: String,
       depth: Int = DefaultDepth, width: Int = DefaultWidth): Unit = {
     val spark = df.sparkSession
-    Models.save(cmsCells(df, keyCol, depth, width), s"$dir/cells")
     import spark.implicits._
-    Models.save(Seq((depth, width)).toDF("depth", "width"), s"$dir/meta")
+    Models.save(spark, dir)(_.write("cells", cmsCells(df, keyCol, depth, width))
+      .write("meta", Seq((depth, width)).toDF("depth", "width")))
   }
 
   private def geometry(spark: SparkSession, dir: String): (Int, Int) = {
-    val r = Models.load(spark, s"$dir/meta").head()
+    val r = Models.load(spark, dir, "meta").head()
     (r.getInt(0), r.getInt(1))
   }
 
@@ -111,7 +111,8 @@ object CountMin {
     * append is repaired by exactly-once foreachBatch replay. */
   def cmsAppend(batch: DataFrame, dir: String, keyCol: String): Unit = {
     val (depth, width) = geometry(batch.sparkSession, dir)
-    Models.append(cmsCells(batch, keyCol, depth, width), s"$dir/cells")
+    Models.append(batch.sparkSession, dir)(
+      _.write("cells", cmsCells(batch, keyCol, depth, width)))
   }
 
   /** Serve point estimates from the persisted sketch: fold the appended
@@ -120,7 +121,7 @@ object CountMin {
   def cmsServe(spark: SparkSession, dir: String, keys: DataFrame,
       keyCol: String): DataFrame = {
     val (depth, width) = geometry(spark, dir)
-    val cells = Models.load(spark, s"$dir/cells")
+    val cells = Models.load(spark, dir, "cells")
       .groupBy("row_i", "bucket").agg(sum(col("cnt")).as("cnt"))
     cmsEstimate(cells, keys, keyCol, depth, width)
   }
@@ -128,6 +129,6 @@ object CountMin {
   /** Compact the folded artifact back to ≤ depth×width rows (serve
     * results unchanged — the fold is the serve's own first step). */
   def cmsCompact(spark: SparkSession, dir: String): Unit =
-    Models.rewrite(spark, s"$dir/cells")(
-      _.groupBy("row_i", "bucket").agg(sum(col("cnt")).cast("long").as("cnt")))
+    Models.rewrite(spark, dir)(_.update("cells")(
+      _.groupBy("row_i", "bucket").agg(sum(col("cnt")).cast("long").as("cnt"))))
 }

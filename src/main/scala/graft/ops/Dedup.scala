@@ -476,11 +476,9 @@ object Dedup {
     * released on exit — a build leaves zero pins behind. */
   def ccBuild(pairs: DataFrame, dir: String): Unit = Pins.scoped {
     val spark = pairs.sparkSession
-    Models.save(connectedComponents(pairs), s"$dir/labels")
     import spark.implicits._
-    Models.save(Seq.empty[(Long, Long)].toDF("from_rep", "to_rep"),
-      s"$dir/merges")
-    Models.logGen(spark, dir, batchId = -1L, fresh = true)
+    Models.save(spark, dir)(_.write("labels", connectedComponents(pairs))
+      .write("merges", Seq.empty[(Long, Long)].toDF("from_rep", "to_rep")))
   }
 
   /** Transitive closure of the merge map by pointer jumping: each round
@@ -520,16 +518,16 @@ object Dedup {
 
   /** Fold a batch of new edges into the artifact. Scans the batch plus
     * one labels equi join; CC runs over the component-compressed batch
-    * graph only. Terminal (both appends land inside), so the body runs
+    * graph only. Terminal (both tables land inside, as one
+    * [[Models.append]] commit), so the body runs
     * under Pins.scoped: the merge-closure, endpoint and batch-CC
     * checkpoints are released on exit — one append (or one ccIngest
     * micro-batch) accrues nothing in the block manager. */
   def ccAppend(newPairs: DataFrame, dir: String,
       batchId: Long): Unit = Pins.scoped {
-    require(batchId >= 0, "appends need an explicit batch/sequence id")
     val spark = newPairs.sparkSession
-    val labels = Models.load(spark, s"$dir/labels")
-    val closed = closeMerges(Models.load(spark, s"$dir/merges"))
+    val labels = Models.load(spark, dir, "labels")
+    val closed = closeMerges(Models.load(spark, dir, "merges"))
     val resolved = resolve(labels, closed)
     // current representative of each batch endpoint: its resolved stored
     // label, or itself if the node is new to the graph
@@ -560,29 +558,28 @@ object Dedup {
       .join(resolved.select(col("component").as("doc_id")).distinct(),
         Seq("doc_id"), "left_semi")
       .select(col("doc_id").as("from_rep"), col("component").as("to_rep"))
-    Models.append(newMerges, s"$dir/merges")
     val newNodeLabels = endpoints
       .join(labels.select("doc_id"), Seq("doc_id"), "left_anti")
       .join(cc.select(col("doc_id").as("rep"),
         col("component").as("__c")), Seq("rep"), "left")
       .select(col("doc_id"),
         coalesce(col("__c"), col("rep")).as("component"))
-    Models.append(newNodeLabels, s"$dir/labels")
-    Models.logGen(spark, dir, batchId)
+    Models.append(spark, dir, Some(batchId))(
+      _.write("merges", newMerges).write("labels", newNodeLabels))
   }
 
   /** Current labels: stored rows resolved through the merge closure.
     * Reads the labels table + the bounded merge map — never the edges. */
   def ccServe(spark: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame =
-    resolve(Models.load(spark, s"$dir/labels"),
-      closeMerges(Models.load(spark, s"$dir/merges")))
+    resolve(Models.load(spark, dir, "labels"),
+      closeMerges(Models.load(spark, dir, "merges")))
 
   /** Compact the union-find artifact — the path-compression pass run as
     * maintenance instead of at every serve: rewrite `labels` as the
     * RESOLVED table (every stored label pushed through the merge
-    * closure, via [[Models.rewrite]] — the labels table is read while
-    * its replacement is written) and reset `merges` to empty. Serving after
+    * closure) and reset `merges` to empty, as one [[Models.rewrite]]
+    * commit — the old tables serve until it lands. Serving after
     * compaction resolves through an empty closure — identity — so
     * serve-after-compact ≡ serve-before; appends after compaction see
     * the same current representatives (a resolved label IS its rep).
@@ -591,9 +588,9 @@ object Dedup {
     * compaction the merge map restarts from the append deltas only. */
   def ccCompact(spark: org.apache.spark.sql.SparkSession,
       dir: String): Unit = Pins.scoped {
-    val closed = closeMerges(Models.load(spark, s"$dir/merges"))
-    Models.rewrite(spark, s"$dir/labels")(resolve(_, closed))
-    Models.rewrite(spark, s"$dir/merges")(_.limit(0))
-    Models.resetGens(spark, dir)
+    val merges = Models.load(spark, dir, "merges")
+    val closed = closeMerges(merges)
+    Models.rewrite(spark, dir)(_.update("labels")(resolve(_, closed))
+      .write("merges", merges.limit(0)))
   }
 }

@@ -183,14 +183,12 @@ object Dsir {
     * against wrong ratios (smaller) — plausible-looking garbage. Every
     * build persists a 1-row meta table; every serve/append validates the
     * caller's value against it and fails fast on mismatch. */
-  private def saveMeta(spark: SparkSession, dir: String,
-      numBuckets: Int): Unit =
-    Models.save(spark.range(1).select(lit(numBuckets).as("num_buckets")),
-      s"$dir/meta")
+  private def meta(spark: SparkSession, numBuckets: Int): DataFrame =
+    spark.range(1).select(lit(numBuckets).as("num_buckets"))
 
   private def requireMeta(spark: SparkSession, dir: String,
       numBuckets: Int): Unit = {
-    val m = Models.load(spark, s"$dir/meta").head().getAs[Int]("num_buckets")
+    val m = Models.load(spark, dir, "meta").head().getAs[Int]("num_buckets")
     require(m == numBuckets,
       s"numBuckets=$numBuckets does not match the artifact's bucket space " +
         s"($m) persisted at $dir/meta — rebuild or pass the artifact's value")
@@ -202,9 +200,9 @@ object Dsir {
   def dsirBuild(raw: DataFrame, target: DataFrame, dir: String,
       textCol: String = "text", idCol: String = "doc_id",
       numBuckets: Int = DefaultBuckets): Unit = {
-    Models.save(dsirModel(raw, target, textCol, idCol, numBuckets),
-      s"$dir/logratio")
-    saveMeta(raw.sparkSession, dir, numBuckets)
+    Models.save(raw.sparkSession, dir)(_.write("logratio",
+      dsirModel(raw, target, textCol, idCol, numBuckets))
+      .write("meta", meta(raw.sparkSession, numBuckets)))
   }
 
   /** Weight a corpus against a PERSISTED model — zero fitting at serve
@@ -214,7 +212,7 @@ object Dsir {
       idCol: String = "doc_id", textCol: String = "text",
       numBuckets: Int = DefaultBuckets): DataFrame = {
     requireMeta(spark, dir, numBuckets)
-    dsirWeightsWithN(docs, Models.load(spark, s"$dir/logratio"), idCol,
+    dsirWeightsWithN(docs, Models.load(spark, dir, "logratio"), idCol,
       textCol, numBuckets)
   }
 
@@ -229,11 +227,11 @@ object Dsir {
       numBuckets: Int = DefaultBuckets): Unit = {
     require(65536 % numBuckets == 0,
       s"numBuckets=$numBuckets must divide 2^16 for an unbiased bucket mod")
-    Models.save(bucketCounts(raw, idCol, textCol, numBuckets, "nr"),
-      s"$dir/raw_counts")
-    Models.save(bucketCounts(target, idCol, textCol, numBuckets, "nt"),
-      s"$dir/target_counts")
-    saveMeta(raw.sparkSession, dir, numBuckets)
+    Models.save(raw.sparkSession, dir)(_.write("raw_counts",
+      bucketCounts(raw, idCol, textCol, numBuckets, "nr"))
+      .write("target_counts",
+        bucketCounts(target, idCol, textCol, numBuckets, "nt"))
+      .write("meta", meta(raw.sparkSession, numBuckets)))
   }
 
   /** Fold a new raw batch's bucket counts into the count-form artifact —
@@ -245,8 +243,8 @@ object Dsir {
       textCol: String = "text", idCol: String = "doc_id",
       numBuckets: Int = DefaultBuckets): Unit = {
     requireMeta(newRaw.sparkSession, dir, numBuckets)
-    Models.append(bucketCounts(newRaw, idCol, textCol, numBuckets, "nr"),
-      s"$dir/raw_counts")
+    Models.append(newRaw.sparkSession, dir)(_.write("raw_counts",
+      bucketCounts(newRaw, idCol, textCol, numBuckets, "nr")))
   }
 
   /** Compact the count-form artifact: fold the appended per-bucket rows
@@ -257,8 +255,8 @@ object Dsir {
   def dsirCompactCounts(spark: SparkSession, dir: String,
       numBuckets: Int = DefaultBuckets): Unit = {
     requireMeta(spark, dir, numBuckets)
-    Models.rewrite(spark, s"$dir/raw_counts")(
-      _.groupBy("bucket").agg(sum(col("nr")).cast("long").as("nr")))
+    Models.rewrite(spark, dir)(_.update("raw_counts")(
+      _.groupBy("bucket").agg(sum(col("nr")).cast("long").as("nr"))))
   }
 
   /** Weight a corpus against the COUNT-form artifact: sum the (possibly
@@ -270,9 +268,9 @@ object Dsir {
       idCol: String = "doc_id", textCol: String = "text",
       numBuckets: Int = DefaultBuckets): DataFrame = {
     requireMeta(spark, dir, numBuckets)
-    val rawC = Models.load(spark, s"$dir/raw_counts")
+    val rawC = Models.load(spark, dir, "raw_counts")
       .groupBy("bucket").agg(sum(col("nr")).as("nr"))
-    val tgtC = Models.load(spark, s"$dir/target_counts")
+    val tgtC = Models.load(spark, dir, "target_counts")
       .groupBy("bucket").agg(sum(col("nt")).as("nt"))
     dsirWeightsWithN(docs, modelOfCounts(spark, rawC, tgtC, numBuckets),
       idCol, textCol, numBuckets)

@@ -114,19 +114,21 @@ object Evolve {
     * rebuild window. */
   def aggBuild(base: DataFrame, dir: String, keyCol: String,
       amountCol: String): Unit =
-    Models.save(aggPartial(base, keyCol, amountCol), s"$dir/agg")
+    Models.save(base.sparkSession, dir)(
+      _.write("agg", aggPartial(base, keyCol, amountCol)))
 
   /** Fold one delta batch into the maintained aggregate (scans the BATCH
     * only). */
   def aggFold(delta: DataFrame, dir: String, keyCol: String,
       amountCol: String): Unit =
-    Models.append(aggPartial(delta, keyCol, amountCol), s"$dir/agg")
+    Models.append(delta.sparkSession, dir)(
+      _.write("agg", aggPartial(delta, keyCol, amountCol)))
 
   /** Serve the maintained aggregate: fold the appended partial rows —
     * one groupBy over a table bounded by |groups| × |batches|. */
   def aggServe(spark: org.apache.spark.sql.SparkSession, dir: String,
       keyCol: String): DataFrame =
-    Models.load(spark, s"$dir/agg")
+    Models.load(spark, dir, "agg")
       .groupBy(keyCol)
       .agg(sum(col("n")).as("n_rows"), sum(col("amount")).as("total_amount"))
 
@@ -138,10 +140,10 @@ object Evolve {
       keyCol: String): Unit =
     // cast back to the partial schema (sum widens decimal precision;
     // future appends must stay parquet-schema-compatible)
-    Models.rewrite(spark, s"$dir/agg")(_.groupBy(keyCol)
+    Models.rewrite(spark, dir)(_.update("agg")(_.groupBy(keyCol)
       .agg(sum(col("n")).cast("long").as("n"),
         sum(col("amount"))
-          .cast(org.apache.spark.sql.types.DecimalType(28, 6)).as("amount")))
+          .cast(org.apache.spark.sql.types.DecimalType(28, 6)).as("amount"))))
 
   /** Incremental JOIN-view maintenance (insert-only deltas on BOTH
     * sides) — the join-shaped sibling of the maintained aggregate
@@ -160,17 +162,15 @@ object Evolve {
     * no corpus-sized shuffle, where the full re-join it replaces
     * shuffles both entire tables; the stored bases are scanned, not
     * shuffled, and a bucketed/partitioned base layout would prune even
-    * the scan. Failure contract (batch op, no checkpoint here): the
-    * three appends are not atomic — a crash mid-append leaves view and
-    * bases inconsistent; repair is [[joinViewBuild]] over the source of
-    * truth (the periodic rebuild a production view runs anyway). The
-    * streaming loops that need exactly-once fold this op into
-    * checkpointed foreachBatch like [[graft.streaming.StreamOps]]. */
+    * the scan. Failure contract: view and bases land as ONE
+    * [[Models.append]] commit, so a crash leaves them consistent at the
+    * generation before or after the batch. The streaming loops that need
+    * exactly-once fold this op into checkpointed foreachBatch like
+    * [[graft.streaming.StreamOps]]. */
   def joinViewBuild(left: DataFrame, right: DataFrame, dir: String,
       key: String): Unit = {
-    Models.save(left, s"$dir/left")
-    Models.save(right, s"$dir/right")
-    Models.save(left.join(right, key), s"$dir/view")
+    Models.save(left.sparkSession, dir)(_.write("left", left)
+      .write("right", right).write("view", left.join(right, key)))
   }
 
   /** The ΔJ term of one maintenance batch — exposed so the map-only
@@ -196,18 +196,18 @@ object Evolve {
     * joins), never re-joins them. */
   def joinViewAppend(spark: org.apache.spark.sql.SparkSession, dir: String,
       dLeft: DataFrame, dRight: DataFrame, key: String): Unit = {
-    val l = Models.load(spark, s"$dir/left")
-    val r = Models.load(spark, s"$dir/right")
-    Models.append(joinViewDelta(l, r, dLeft, dRight, key), s"$dir/view")
-    Models.append(dLeft, s"$dir/left")
-    Models.append(dRight, s"$dir/right")
+    val l = Models.load(spark, dir, "left")
+    val r = Models.load(spark, dir, "right")
+    Models.append(spark, dir)(_.write("view",
+      joinViewDelta(l, r, dLeft, dRight, key))
+      .write("left", dLeft).write("right", dRight))
   }
 
   /** The maintained join view — a plain scan; no fold step is needed
     * because the view rows ARE the join rows (append-only multiset). */
   def joinViewServe(spark: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame =
-    Models.load(spark, s"$dir/view")
+    Models.load(spark, dir, "view")
 
   def tableDiff(
       base: DataFrame,

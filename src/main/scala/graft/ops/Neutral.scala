@@ -292,12 +292,17 @@ object Neutral {
       textCol: String = "text", shingleN: Int = 3, bands: Int = 16,
       rows: Int = 4): Unit = Pins.scoped {
     require(bands * rows == 64, "bands*rows must equal the 64-lane signature")
-    Models.save(corpus.select(sha2(col(textCol), 256).as("sha")).distinct(),
-      s"$dir/sha")
-    val shC = sigTable(corpus, textCol, shingleN)
-    Models.save(shC.select(col("doc_id"), col("hs")), s"$dir/hs")
-    Models.save(bandedOf(shC, bands, rows), s"$dir/banded")
-    Models.logGen(corpus.sparkSession, dir, batchId = -1L, fresh = true)
+    Models.save(corpus.sparkSession, dir)(
+      indexTables(corpus, textCol, shingleN, bands, rows))
+  }
+
+  /** The admission index's three tables of `docs`, staged in `c`. */
+  private def indexTables(docs: DataFrame, textCol: String, shingleN: Int,
+      bands: Int, rows: Int)(c: Models.Commit): Unit = {
+    c.write("sha", docs.select(sha2(col(textCol), 256).as("sha")).distinct())
+    val sh = sigTable(docs, textCol, shingleN)
+    c.write("hs", sh.select(col("doc_id"), col("hs")))
+    c.write("banded", bandedOf(sh, bands, rows))
   }
 
   /** [[dedupAgainst]] SERVED from the persisted index at `dir`
@@ -319,9 +324,9 @@ object Neutral {
       rows: Int): (DataFrame, DataFrame) = {
     require(bands * rows == 64, "bands*rows must equal the 64-lane signature")
     admitAgainst(incoming,
-      Models.load(spark, s"$dir/sha"),
-      Models.load(spark, s"$dir/banded"),
-      Models.load(spark, s"$dir/hs"),
+      Models.load(spark, dir, "sha"),
+      Models.load(spark, dir, "banded"),
+      Models.load(spark, dir, "hs"),
       textCol, minJaccard, shingleN, bands, rows)
   }
 
@@ -332,11 +337,13 @@ object Neutral {
     * near-dups. Appending after every admitted batch keeps the index
     * exactly one batch behind "corpus = base + all admissions", which is
     * the same-batch-internal-dups gap [[ingestE2e]]'s stage 2 already
-    * covers. `admitted` MUST be lineage-severed from `dir` (re-read from
-    * the corpus store it was written to, or localCheckpoint'ed) before
-    * this call: the parquet append fires recacheByPath, so even a CACHED
-    * plan still rooted at `dir` is recomputed over the appended files and
-    * dedups the batch against itself ([[admitAndAppend]] handles this).
+    * covers. The three tables and `batchId` land as ONE [[Models.append]]
+    * commit: a crash leaves the index at the generation before or after
+    * this batch, never a digest without its signatures. `admitted`
+    * should be lineage-severed from `dir` (re-read from the corpus store
+    * it was written to, or localCheckpoint'ed): its plan reads the index
+    * generation it was admitted against, whose files a later compaction
+    * deletes ([[admitAndAppend]] handles this).
     * Duplicate digests across appended batches are harmless — admission
     * consumes these tables via anti/semi joins, which ignore key
     * multiplicity. A periodic [[dedupIndexBuild]] rebuild compacts the
@@ -346,15 +353,9 @@ object Neutral {
   def dedupIndexAppend(admitted: DataFrame, dir: String,
       textCol: String = "text", shingleN: Int = 3, bands: Int = 16,
       rows: Int = 4, batchId: Long): Unit = Pins.scoped {
-    require(batchId >= 0, "appends need an explicit batch/sequence id")
     require(bands * rows == 64, "bands*rows must equal the 64-lane signature")
-    Models.append(
-      admitted.select(sha2(col(textCol), 256).as("sha")).distinct(),
-      s"$dir/sha")
-    val sh = sigTable(admitted, textCol, shingleN)
-    Models.append(sh.select(col("doc_id"), col("hs")), s"$dir/hs")
-    Models.append(bandedOf(sh, bands, rows), s"$dir/banded")
-    Models.logGen(admitted.sparkSession, dir, batchId)
+    Models.append(admitted.sparkSession, dir, Some(batchId))(
+      indexTables(admitted, textCol, shingleN, bands, rows))
   }
 
   /** Compact the admission index's appended generations (the in-place
@@ -371,22 +372,20 @@ object Neutral {
     * shared verbatim). */
   def dedupIndexCompact(spark: org.apache.spark.sql.SparkSession,
       dir: String): Unit = {
-    Models.rewrite(spark, s"$dir/sha")(_.distinct())
-    Models.rewrite(spark, s"$dir/hs")(
-      _.repartitionByRange(col("doc_id")).sortWithinPartitions("doc_id"))
-    Models.rewrite(spark, s"$dir/banded")(b =>
-      b.repartitionByRange(b.columns.filter(_ != "doc_id").map(col).toSeq: _*)
-        .sortWithinPartitions(b.columns.map(col).toSeq: _*))
-    Models.resetGens(spark, dir)
+    Models.rewrite(spark, dir)(_.update("sha")(_.distinct())
+      .update("hs")(
+        _.repartitionByRange(col("doc_id")).sortWithinPartitions("doc_id"))
+      .update("banded")(b =>
+        b.repartitionByRange(b.columns.filter(_ != "doc_id").map(col).toSeq: _*)
+          .sortWithinPartitions(b.columns.map(col).toSeq: _*)))
   }
 
   /** Admit a batch against the served index AND append the admissions to
     * it — the per-batch step of the daily-crawl loop. The admitted batch
     * is localCheckpoint'ed (lineage SEVERED, not just cached) before the
-    * append: writing into `dir` fires Spark's recacheByPath invalidation,
-    * which re-lists the directory and recomputes any cached plan still
-    * rooted there — a merely-cached batch would silently re-admit against
-    * the appended files and dedup itself to empty. The checkpoint is
+    * append: its plan reads the index generation it was admitted against,
+    * and a compaction after the append deletes those files — a merely
+    * cached batch evicted later would fail to recompute. The checkpoint is
     * batch-sized (a day of admissions), the same footprint the caller's
     * corpus write already carries. `commitBeforeAppend` runs on the
     * checkpointed admissions BEFORE their signatures enter the index —
@@ -434,23 +433,21 @@ object Neutral {
   def bloomIndexBuild(corpus: DataFrame, dir: String,
       textCol: String = "text", mBits: Int = 1 << 20): Unit = {
     require(Integer.bitCount(mBits) == 1, "mBits must be a power of two")
-    Models.save(
-      corpus.select(explode(array(bloomPosCols(textCol, mBits): _*)).as("pos"))
-        .distinct(),
-      s"$dir/bloom")
     // mBits is part of the artifact, not a caller convention: probing with
     // a different position space makes every probe miss and silently
     // admits true duplicates — breaking the no-false-negative guarantee.
-    // Serve/append read it back from this 1-row meta table.
-    Models.save(
-      corpus.sparkSession.range(1).select(lit(mBits).as("m_bits")),
-      s"$dir/bloom_meta")
+    // Serve/append read it back from the 1-row meta table.
+    Models.save(corpus.sparkSession, dir)(_.write("bloom",
+      corpus.select(explode(array(bloomPosCols(textCol, mBits): _*)).as("pos"))
+        .distinct())
+      .write("bloom_meta",
+        corpus.sparkSession.range(1).select(lit(mBits).as("m_bits"))))
   }
 
   /** The artifact's position-space, read back from the build's meta. */
   private def bloomMBits(spark: org.apache.spark.sql.SparkSession,
       dir: String): Int =
-    Models.load(spark, s"$dir/bloom_meta").head().getAs[Int]("m_bits")
+    Models.load(spark, dir, "bloom_meta").head().getAs[Int]("m_bits")
 
   /** Admission annotation against the persisted Bloom artifact: each
     * incoming doc's k positions probe the loaded set (one broadcast
@@ -461,7 +458,7 @@ object Neutral {
   def admitBloomServed(spark: org.apache.spark.sql.SparkSession, dir: String,
       incoming: DataFrame, textCol: String = "text"): DataFrame = {
     val mBits = bloomMBits(spark, dir)
-    val occupied = Models.load(spark, s"$dir/bloom")
+    val occupied = Models.load(spark, dir, "bloom")
       .withColumn("__hit", lit(1L))
     incoming
       .select(col("doc_id"),
@@ -481,10 +478,9 @@ object Neutral {
   def bloomIndexAppend(admitted: DataFrame, dir: String,
       textCol: String = "text"): Unit = {
     val mBits = bloomMBits(admitted.sparkSession, dir)
-    Models.append(
+    Models.append(admitted.sparkSession, dir)(_.write("bloom",
       admitted.select(explode(array(bloomPosCols(textCol, mBits): _*)).as("pos"))
-        .distinct(),
-      s"$dir/bloom")
+        .distinct()))
   }
 
   /** Compact the Bloom artifact: appended batches are distinct WITHIN a
@@ -496,13 +492,13 @@ object Neutral {
     * verbatim. */
   def bloomIndexCompact(spark: org.apache.spark.sql.SparkSession,
       dir: String): Unit =
-    Models.rewrite(spark, s"$dir/bloom")(_.distinct())
+    Models.rewrite(spark, dir)(_.update("bloom")(_.distinct()))
 
   /** Admit a batch against the Bloom artifact AND fold its positions in —
     * the per-batch step of the streaming seen-set loop. Same
     * checkpoint-before-append discipline as [[admitAndAppend]]: the
     * admitted rows are severed from the artifact scan their plan reads,
-    * because the append invalidates cached plans rooted at `dir`.
+    * whose files a later compaction deletes.
     * `commitBeforeAppend` runs on the checkpointed admissions BETWEEN the
     * checkpoint and the position append — a durable sink write placed
     * there means a crash can only ever leave the sink AHEAD of the index

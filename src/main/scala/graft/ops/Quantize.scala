@@ -160,7 +160,7 @@ object Quantize {
     codesOf(
       assignSubspaces(
         subspaceSplit(emb, m, subDim, "vec_id", "embedding"),
-        Models.load(spark, s"$dir/codebooks")),
+        Models.load(spark, dir, "codebooks")),
       m)
 
   /** (vec_id, code_0..code_{m-1}) from a pqFit assignment — one pivot
@@ -317,12 +317,10 @@ object Quantize {
       k: Int = 8, iters: Int = 2): Unit =
     Pins.scoped {
       val (cents, a) = pqFit(emb, m, subDim, k, iters)
-      Models.save(Similarity.centroids(emb), s"$dir/coarse")
-      Models.save(cents, s"$dir/codebooks")
-      Models.save(
-        codesOf(a, m).join(emb.select(col("vec_id"), col("label")),
-          Seq("vec_id")),
-        s"$dir/codes")
+      Models.save(emb.sparkSession, dir)(
+        _.write("coarse", Similarity.centroids(emb)).write("codebooks", cents)
+          .write("codes", codesOf(a, m).join(
+            emb.select(col("vec_id"), col("label")), Seq("vec_id"))))
     }
 
   /** Serve IVF-PQ top-k from a persisted index — NO fitting: the coarse
@@ -333,9 +331,9 @@ object Quantize {
       queries: DataFrame, kNN: Int, nprobe: Int = 2, m: Int = 4,
       subDim: Int = 16): DataFrame =
     ivfPqScan(queries,
-      Models.load(spark, s"$dir/coarse"),
-      Models.load(spark, s"$dir/codebooks"),
-      Models.load(spark, s"$dir/codes"),
+      Models.load(spark, dir, "coarse"),
+      Models.load(spark, dir, "codebooks"),
+      Models.load(spark, dir, "codes"),
       kNN, nprobe, m, subDim)
 
   /** PQ recall@k vs the EXACT inner-product ranking — the quality metric

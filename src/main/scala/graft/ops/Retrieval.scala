@@ -107,15 +107,18 @@ object Retrieval {
     * runs. */
   def bm25Build(df: DataFrame, idCol: String, textCol: String,
       dir: String): Unit = Pins.scoped {
-    val tf = Pins.cache(tokens(df, idCol, textCol)
+    Models.save(df.sparkSession, dir)(bm25Tables(df, idCol, textCol))
+  }
+
+  /** The three BM25 tables of `docs`, staged in `c` — the corpus is
+    * tokenized once, its tf and doclen pinned for the three writes. */
+  private def bm25Tables(docs: DataFrame, idCol: String,
+      textCol: String)(c: Models.Commit): Unit = {
+    val tf = Pins.cache(tokens(docs, idCol, textCol)
       .groupBy(col(idCol), col("word")).agg(count(lit(1)).as("tf")))
     val dl = Pins.cache(tf.groupBy(idCol).agg(sum(col("tf")).as("dl")))
-    Models.save(wordSorted(tf, idCol), s"$dir/postings")
-    Models.save(dl, s"$dir/doclen")
-    Models.save(
-      dl.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl")),
-      s"$dir/stats")
-    Models.logGen(df.sparkSession, dir, batchId = -1L, fresh = true)
+    c.write("postings", wordSorted(tf, idCol)).write("doclen", dl).write(
+      "stats", dl.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl")))
   }
 
   /** Append one batch of NEW documents to the persisted BM25 index — the
@@ -133,16 +136,8 @@ object Retrieval {
     * holds per append generation. */
   def bm25Append(batch: DataFrame, dir: String, idCol: String,
       textCol: String, batchId: Long): Unit = Pins.scoped {
-    require(batchId >= 0, "appends need an explicit batch/sequence id")
-    val tf = Pins.cache(tokens(batch, idCol, textCol)
-      .groupBy(col(idCol), col("word")).agg(count(lit(1)).as("tf")))
-    val dl = Pins.cache(tf.groupBy(idCol).agg(sum(col("tf")).as("dl")))
-    Models.append(wordSorted(tf, idCol), s"$dir/postings")
-    Models.append(dl, s"$dir/doclen")
-    Models.append(
-      dl.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl")),
-      s"$dir/stats")
-    Models.logGen(batch.sparkSession, dir, batchId)
+    Models.append(batch.sparkSession, dir, Some(batchId))(
+      bm25Tables(batch, idCol, textCol))
   }
 
   /** Positional phrase search: exact-phrase occurrence counts per doc —
@@ -188,15 +183,18 @@ object Retrieval {
     * SCALING.md: the unsorted doc-order layout prunes nothing). */
   def phraseIndexBuild(df: DataFrame, dir: String, idCol: String,
       textCol: String): Unit = {
-    Models.save(
-      wordSorted(
-        df.select(col(idCol),
-          posexplode(filter(split(lower(trim(col(textCol))), "\\s+"),
-            x => x =!= "")).as(Seq("pos", "word"))),
-        idCol),
-      s"$dir/positions")
-    Models.logGen(df.sparkSession, dir, batchId = -1L, fresh = true)
+    Models.save(df.sparkSession, dir)(
+      _.write("positions", positionsOf(df, idCol, textCol)))
   }
+
+  /** One (id, pos, word) row per token occurrence, word-range-sorted. */
+  private def positionsOf(df: DataFrame, idCol: String,
+      textCol: String): DataFrame =
+    wordSorted(
+      df.select(col(idCol),
+        posexplode(filter(split(lower(trim(col(textCol))), "\\s+"),
+          x => x =!= "")).as(Seq("pos", "word"))),
+      idCol)
 
   /** Append one batch of NEW documents' positions to the phrase index —
     * batch-only tokenization, the existing postings never re-read. The
@@ -207,24 +205,9 @@ object Retrieval {
     * pruning holds per append generation. */
   def phraseIndexAppend(batch: DataFrame, dir: String, idCol: String,
       textCol: String, batchId: Long): Unit = {
-    require(batchId >= 0, "appends need an explicit batch/sequence id")
-    Models.append(
-      wordSorted(
-        batch.select(col(idCol),
-          posexplode(filter(split(lower(trim(col(textCol))), "\\s+"),
-            x => x =!= "")).as(Seq("pos", "word"))),
-        idCol),
-      s"$dir/positions")
-    Models.logGen(batch.sparkSession, dir, batchId)
+    Models.append(batch.sparkSession, dir, Some(batchId))(
+      _.write("positions", positionsOf(batch, idCol, textCol)))
   }
-
-  /** Rewrite a word-sorted posting table's N append generations into ONE
-    * word-range-sorted file set ([[Models.rewrite]]). One range shuffle
-    * over the table — the same cost as the original build's layout pass,
-    * amortized over every query until the next compaction. */
-  private def compactWordSorted(spark: org.apache.spark.sql.SparkSession,
-      path: String, idCol: String): Unit =
-    Models.rewrite(spark, path)(wordSorted(_, idCol))
 
   /** Compact the phrase index's appended posting generations: after a
     * year of daily appends the positions table is 365 word-sorted file
@@ -233,16 +216,17 @@ object Retrieval {
     * across generations, so pruning degrades toward file-count overhead.
     * One rewrite restores the single build-time word-sorted layout;
     * results are identical (the table is a bag of (id, pos, word) rows —
-    * layout only). Compose with the append lifecycle as maintenance:
+    * layout only). One range shuffle over the table — the same cost as
+    * the build's layout pass, amortized over every query until the next
+    * compaction. Compose with the append lifecycle as maintenance:
     * append daily, compact on a slow cadence. */
   def phraseIndexCompact(spark: org.apache.spark.sql.SparkSession,
       dir: String, idCol: String): Unit = {
-    compactWordSorted(spark, s"$dir/positions", idCol)
-    Models.resetGens(spark, dir)
+    Models.rewrite(spark, dir)(_.update("positions")(wordSorted(_, idCol)))
   }
 
   /** Compact the BM25 artifact: postings re-sorted into one word-range
-    * layout ([[compactWordSorted]]), doclen rewritten id-range-sorted
+    * layout (as [[phraseIndexCompact]]), doclen rewritten id-range-sorted
     * (doc-lookup pruning), and the per-append (n_docs, sum_dl) stats
     * partials folded to their exact sum — ONE row replaces N, the same
     * integer fold [[bm25Serve]] performs at query time. Serving after
@@ -250,13 +234,11 @@ object Retrieval {
     * layout-only rewrite or an exact fold. */
   def bm25Compact(spark: org.apache.spark.sql.SparkSession,
       dir: String, idCol: String): Unit = {
-    compactWordSorted(spark, s"$dir/postings", idCol)
-    Models.rewrite(spark, s"$dir/doclen")(
-      _.repartitionByRange(col(idCol)).sortWithinPartitions(idCol))
-    Models.rewrite(spark, s"$dir/stats")(
-      _.agg(sum(col("n_docs")).cast("long").as("n_docs"),
-        sum(col("sum_dl")).cast("long").as("sum_dl")))
-    Models.resetGens(spark, dir)
+    Models.rewrite(spark, dir)(_.update("postings")(wordSorted(_, idCol))
+      .update("doclen")(
+        _.repartitionByRange(col(idCol)).sortWithinPartitions(idCol))
+      .update("stats")(_.agg(sum(col("n_docs")).cast("long").as("n_docs"),
+        sum(col("sum_dl")).cast("long").as("sum_dl"))))
   }
 
   /** Phrase search SERVED from the positional index: each phrase word's
@@ -274,7 +256,7 @@ object Retrieval {
       dir: String, idCol: String, phrase: Seq[String],
       k: Int = 20): DataFrame = {
     require(phrase.size >= 2, "a phrase needs at least two words")
-    val pos = Models.load(spark, s"$dir/positions")
+    val pos = Models.load(spark, dir, "positions")
     // Locale.ROOT folding for the same reason as phraseSearch's target
     val first = pos
       .filter(col("word") === phrase.head.toLowerCase(java.util.Locale.ROOT))
@@ -305,7 +287,7 @@ object Retrieval {
       dir: String, idCol: String, first: String, second: String,
       slop: Int, k: Int = 20): DataFrame = {
     require(slop >= 1, "slop must be >= 1")
-    val pos = Models.load(spark, s"$dir/positions")
+    val pos = Models.load(spark, dir, "positions")
     val p1 = pos.filter(col("word") === first.toLowerCase(java.util.Locale.ROOT))
       .select(col(idCol), col("pos").as("__pa"))
     val p2 = pos.filter(col("word") === second.toLowerCase(java.util.Locale.ROOT))
@@ -326,9 +308,9 @@ object Retrieval {
     * it), so the served form shares the fit form's oracle. */
   def tfidfServe(spark: org.apache.spark.sql.SparkSession, dir: String,
       idCol: String): DataFrame = {
-    val tf = Models.load(spark, s"$dir/postings")
+    val tf = Models.load(spark, dir, "postings")
     val dfreq = tf.groupBy("word").agg(count(lit(1)).as("df"))
-    val n = Models.load(spark, s"$dir/stats")
+    val n = Models.load(spark, dir, "stats")
       .agg(sum(col("n_docs")).as("n_docs"))
     tf.join(dfreq, "word")
       .join(broadcast(n))
@@ -347,7 +329,7 @@ object Retrieval {
       dir: String, idCol: String, must: Seq[String],
       mustNot: Seq[String] = Nil): DataFrame = {
     require(must.nonEmpty, "boolean search needs at least one must term")
-    val postings = Models.load(spark, s"$dir/postings")
+    val postings = Models.load(spark, dir, "postings")
     val m = must.map(_.toLowerCase(java.util.Locale.ROOT))
     val candidates = postings.filter(col("word").isin(m: _*))
       .groupBy(idCol)
@@ -374,7 +356,7 @@ object Retrieval {
     * stage wants. */
   def prefixSearchServed(spark: org.apache.spark.sql.SparkSession,
       dir: String, idCol: String, prefix: String): DataFrame =
-    Models.load(spark, s"$dir/postings")
+    Models.load(spark, dir, "postings")
       .filter(col("word").startsWith(prefix.toLowerCase(java.util.Locale.ROOT)))
       .groupBy("word")
       .agg(count(lit(1)).as("df"), sum(col("tf")).as("cf"))
@@ -411,9 +393,9 @@ object Retrieval {
       idCol: String, terms: Seq[String], k1: Double = 1.2,
       b: Double = 0.75): DataFrame =
     bm25Score(
-      Models.load(spark, s"$dir/postings"),
-      Models.load(spark, s"$dir/doclen"),
-      Models.load(spark, s"$dir/stats")
+      Models.load(spark, dir, "postings"),
+      Models.load(spark, dir, "doclen"),
+      Models.load(spark, dir, "stats")
         .agg(sum(col("n_docs")).as("n_docs"), sum(col("sum_dl")).as("sum_dl"))
         .select(col("n_docs"),
           (col("sum_dl").cast("double") / col("n_docs")).as("avgdl")),

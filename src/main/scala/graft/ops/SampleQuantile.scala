@@ -80,13 +80,13 @@ object SampleQuantile {
   def build(df: DataFrame, dir: String, groupCol: String, idCol: String,
       valueCol: String, k: Int = DefaultK): Unit = {
     val spark = df.sparkSession
-    Models.save(sketchOf(df, groupCol, idCol, valueCol, k), s"$dir/sample")
     import spark.implicits._
-    Models.save(Seq(k).toDF("k"), s"$dir/meta")
+    Models.save(spark, dir)(_.write("sample",
+      sketchOf(df, groupCol, idCol, valueCol, k)).write("meta", Seq(k).toDF("k")))
   }
 
   private def kOf(spark: SparkSession, dir: String): Int =
-    Models.load(spark, s"$dir/meta").head().getInt(0)
+    Models.load(spark, dir, "meta").head().getInt(0)
 
   /** Fold a delta batch into the artifact: append the BATCH's own
     * bottom-k rows (scans only the batch). Appended rows are sample
@@ -96,15 +96,15 @@ object SampleQuantile {
   def append(batch: DataFrame, dir: String, groupCol: String,
       idCol: String, valueCol: String): Unit = {
     val k = kOf(batch.sparkSession, dir)
-    Models.append(sketchOf(batch, groupCol, idCol, valueCol, k),
-      s"$dir/sample")
+    Models.append(batch.sparkSession, dir)(
+      _.write("sample", sketchOf(batch, groupCol, idCol, valueCol, k)))
   }
 
   /** The folded sample: bottom-k of all persisted candidate rows. Reads
     * the groups×k×batches artifact only — the corpus never re-scans. */
   def serveSketch(spark: SparkSession, dir: String,
       groupCol: String): DataFrame =
-    bottomK(Models.load(spark, s"$dir/sample"), kOf(spark, dir), groupCol)
+    bottomK(Models.load(spark, dir, "sample"), kOf(spark, dir), groupCol)
 
   private def bottomK(sample: DataFrame, k: Int,
       groupCol: String): DataFrame = {
@@ -126,6 +126,6 @@ object SampleQuantile {
     * unchanged — the fold is the serve's own first step). */
   def compact(spark: SparkSession, dir: String, groupCol: String): Unit = {
     val k = kOf(spark, dir)
-    Models.rewrite(spark, s"$dir/sample")(bottomK(_, k, groupCol))
+    Models.rewrite(spark, dir)(_.update("sample")(bottomK(_, k, groupCol)))
   }
 }

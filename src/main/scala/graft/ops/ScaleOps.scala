@@ -535,7 +535,7 @@ object ScaleOps {
     * queries; sketch union is exactly the algebra that makes the rollup
     * composable. The cube is days × groups rows regardless of event
     * volume; appending a new day's sketches is a batch-only scan
-    * (Models.append — [[hllCubeRangeDistinct]] union-aggs multiple rows
+    * ([[hllCubeAppend]] — [[hllCubeRangeDistinct]] union-aggs multiple rows
     * per (day, group) transparently, so appends never rewrite). The
     * cube is LAID OUT day-partitioned (Hive-style directories), so a
     * range serve reads only the covered days' files — static partition
@@ -543,10 +543,11 @@ object ScaleOps {
   def hllCubeBuild(events: DataFrame, dir: String,
       groupCol: String = "event_type", valueCol: String = "user_id",
       tsCol: String = "ts"): Unit =
-    Models.savePartitioned(
-      hllCubePartial(events, groupCol, valueCol, tsCol), dir, "day")
+    Models.save(events.sparkSession, dir)(_.write("cube",
+      hllCubePartial(events, groupCol, valueCol, tsCol), "day"))
 
-  /** One batch's cube rows (build = save, append = Models.append this). */
+  /** One batch's cube rows (the table [[hllCubeBuild]] commits and
+    * [[hllCubeAppend]] adds to). */
   def hllCubePartial(events: DataFrame, groupCol: String = "event_type",
       valueCol: String = "user_id", tsCol: String = "ts"): DataFrame =
     events.filter(col(valueCol).isNotNull)
@@ -556,8 +557,8 @@ object ScaleOps {
   def hllCubeAppend(batch: DataFrame, dir: String,
       groupCol: String = "event_type", valueCol: String = "user_id",
       tsCol: String = "ts"): Unit =
-    Models.appendPartitioned(
-      hllCubePartial(batch, groupCol, valueCol, tsCol), dir, "day")
+    Models.append(batch.sparkSession, dir)(_.write("cube",
+      hllCubePartial(batch, groupCol, valueCol, tsCol)))
 
   /** Range-distinct from the cube: union the covered days' sketches per
     * group — reads days × groups fixed-size rows, never the event log.
@@ -565,7 +566,7 @@ object ScaleOps {
   def hllCubeRangeDistinct(spark: SparkSession, dir: String,
       fromDay: String, toDay: String,
       groupCol: String = "event_type"): DataFrame =
-    Models.load(spark, dir)
+    Models.load(spark, dir, "cube")
       .filter(col("day") >= lit(fromDay) && col("day") <= lit(toDay))
       .groupBy(groupCol)
       .agg(hll_sketch_estimate(hll_union_agg(col("sk"))).as("approx_cnt"))

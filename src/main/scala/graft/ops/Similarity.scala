@@ -170,28 +170,22 @@ object Similarity {
     * The base corpus's lists are its given label partitions (the same
     * routing [[ivfTopK]] uses); [[ivfAppend]] grows them with
     * nearest-centroid assignments. */
-  def ivfBuild(emb: DataFrame, dir: String): Unit = {
-    Models.save(centroids(emb), s"$dir/coarse")
-    Models.savePartitioned(
-      emb.select(col("vec_id"), col("embedding"), col("label")),
-      s"$dir/lists", "label")
-    saveFitOcc(emb.sparkSession, dir)
-    Models.logGen(emb.sparkSession, dir, batchId = -1L, fresh = true)
-  }
+  def ivfBuild(emb: DataFrame, dir: String): Unit =
+    Models.save(emb.sparkSession, dir)(c => writeLists(
+      c.write("coarse", centroids(emb)),
+      emb.select(col("vec_id"), col("embedding"), col("label"))))
 
-  /** Persist the FIT-TIME list-occupancy histogram (label, n_fit) — the
-    * drift baseline [[ivfDriftStats]] compares against. Written at
-    * [[ivfBuild]] and refreshed by [[ivfRetrain]] (post-retrain the
+  /** Stage the lists table partitioned by label, then the FIT-TIME
+    * list-occupancy histogram (label, n_fit) counted from the staged
+    * lists — the drift baseline [[ivfDriftStats]] compares against.
+    * Written at [[ivfBuild]] and by [[ivfRetrain]] (post-retrain the
     * current occupancy IS the fit occupancy, so measured drift resets to
-    * exactly 0). One count-per-label over the lists table: `label` is the
-    * partition column, so the scan reads zero data columns — row counts
-    * per file from parquet footers, cheap at any corpus size. */
-  private def saveFitOcc(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Unit =
-    Models.save(
-      Models.load(spark, s"$dir/lists").groupBy("label")
-        .agg(count(lit(1)).as("n_fit")),
-      s"$dir/fit_occ")
+    * exactly 0). `label` is the partition column, so the count reads zero
+    * data columns — row counts per file from parquet footers, cheap at
+    * any corpus size. */
+  private def writeLists(c: Models.Commit, lists: DataFrame): Unit =
+    c.write("lists", lists, "label").write("fit_occ",
+      c.read("lists").groupBy("label").agg(count(lit(1)).as("n_fit")))
 
   /** Per-list drift evidence: (label, n_fit, n_cur) — fit-time vs
     * current occupancy, zeros for lists that appeared or emptied. The
@@ -199,9 +193,9 @@ object Similarity {
     * the driver-gate query, the card) derives shares identically. */
   def ivfDriftStats(spark: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame = {
-    val cur = Models.load(spark, s"$dir/lists").groupBy("label")
+    val cur = Models.load(spark, dir, "lists").groupBy("label")
       .agg(count(lit(1)).as("n_cur"))
-    Models.load(spark, s"$dir/fit_occ")
+    Models.load(spark, dir, "fit_occ")
       .join(cur, Seq("label"), "full_outer")
       .select(col("label"),
         coalesce(col("n_fit"), lit(0L)).as("n_fit"),
@@ -321,25 +315,21 @@ object Similarity {
 
   def ivfAppend(spark: org.apache.spark.sql.SparkSession,
       newVecs: DataFrame, dir: String, batchId: Long): Unit = {
-    require(batchId >= 0, "appends need an explicit batch/sequence id")
-    val coarse = Models.load(spark, s"$dir/coarse")
-    val assigned = assignFrozen(newVecs, coarse)
-    Models.appendPartitioned(assigned, s"$dir/lists", "label")
-    Models.logGen(spark, dir, batchId)
+    val assigned = assignFrozen(newVecs, Models.load(spark, dir, "coarse"))
+    Models.append(spark, dir, Some(batchId))(_.write("lists", assigned))
   }
 
   /** Compact the inverted lists: N appended file sets per label
     * directory fold to one (repartition by label → each partition
-    * directory rewrites as a single file set, via [[Models.rewrite]]
-    * because the lists are read while their replacement is written). Content is
+    * directory rewrites as a single file set, one [[Models.rewrite]]
+    * commit — the lists serve until it lands). Content is
     * untouched — serving and the q_ns_sim_ivf_served_incremental oracle
     * are layout-invariant — and the probed-lists partition pruning keeps
     * working against far fewer files. The coarse centroids are a fitted
     * model: never appended, nothing to compact. */
   def ivfCompact(spark: org.apache.spark.sql.SparkSession,
       dir: String): Unit = {
-    Models.rewrite(spark, s"$dir/lists", "label")(_.repartition(col("label")))
-    Models.resetGens(spark, dir)
+    Models.rewrite(spark, dir)(_.update("lists")(_.repartition(col("label"))))
   }
 
   /** Retrain the coarse quantizer on the CUMULATIVE lists — the missing
@@ -361,52 +351,33 @@ object Similarity {
     *     ivfAppend broadcast-argmax shape over the whole corpus: one
     *     scan + one partitioned rewrite, the same cost class as
     *     [[ivfCompact]]).
-    * Both halves land by generation swap; the coarse tmp is written and
-    * swapped BEFORE the lists so a crash between the swaps leaves new
-    * centroids routing over old lists — transiently suboptimal recall,
-    * never a missing partition or a torn read. Ledger folds to one
-    * generation ([[ivfCompact]]'s contract: retrain subsumes compaction
-    * — the rewrite is one file set per list). Deterministic end to end
+    * Coarse, lists and the fit-occupancy baseline land in ONE
+    * [[Models.rewrite]] commit: the reassignment reads the coarse table
+    * as staged (never a recompute that could diverge), and a crash
+    * anywhere before the commit leaves the old centroids, lists and
+    * baseline serving together. The history folds to one generation
+    * ([[ivfCompact]]'s contract: retrain subsumes compaction — the
+    * rewrite is one file set per list). Deterministic end to end
     * (mean + cosine argmax + label tie-break), so the served result has
     * a plain SQL oracle twin. */
   def ivfRetrain(spark: org.apache.spark.sql.SparkSession, dir: String,
       sampleFrac: Double = 1.0): Unit = {
     require(sampleFrac > 0 && sampleFrac <= 1.0,
       "sampleFrac must be in (0, 1]")
-    val lists = Models.load(spark, s"$dir/lists")
+    val lists = Models.load(spark, dir, "lists")
     val fit =
       if (sampleFrac >= 1.0) lists
       else lists.filter(pmod(xxhash64(col("vec_id")), lit(1000000)) <
         (sampleFrac * 1000000).toLong)
-    val oldCoarse = Models.load(spark, s"$dir/coarse")
+    val oldCoarse = Models.load(spark, dir, "coarse")
       .select(col("label"), col("centroid").as("__old_c"))
     val cents = oldCoarse
       .join(centroids(fit).withColumnRenamed("centroid", "__new_c"),
         Seq("label"), "left")
       .select(col("label"),
         coalesce(col("__new_c"), col("__old_c")).as("centroid"))
-    val coarseTmp = s"$dir/coarse__retraining"
-    Models.save(cents, coarseTmp)
-    val newCents = Models.load(spark, coarseTmp) // reassign reads the
-    // MATERIALIZED centroids, never a recompute that could diverge
-    val reassigned = lists
-      .select(col("vec_id"), col("embedding"))
-      .crossJoin(broadcast(newCents))
-      .select(col("vec_id"), col("embedding"), col("label"),
-        cosine("embedding", "centroid").as("ccos"))
-      .groupBy("vec_id")
-      .agg(max(struct(col("ccos"), (-col("label")).as("negl"),
-        col("embedding").as("e"))).as("m"))
-      .select(col("vec_id"), col("m.e").as("embedding"),
-        (-col("m.negl")).cast("int").as("label"))
-    val listsTmp = s"$dir/lists__retraining"
-    Models.savePartitioned(reassigned, listsTmp, "label")
-    Models.swapIn(spark, coarseTmp, s"$dir/coarse")
-    Models.swapIn(spark, listsTmp, s"$dir/lists")
-    // the retrained occupancy becomes the new drift baseline: measured
-    // drift is exactly 0 until post-retrain appends move it again
-    saveFitOcc(spark, dir)
-    Models.resetGens(spark, dir)
+    Models.rewrite(spark, dir)(c =>
+      writeLists(c.write("coarse", cents), assignFrozen(lists, c.read("coarse"))))
   }
 
   /** IVF top-k SERVED from the persisted artifact: route each query to
@@ -419,8 +390,8 @@ object Similarity {
     * per batch). `queries` is a (query_id, embedding) batch. */
   def ivfServe(spark: org.apache.spark.sql.SparkSession, dir: String,
       queries: DataFrame, k: Int, nprobe: Int = 1): DataFrame = {
-    val cents = Models.load(spark, s"$dir/coarse")
-    val lists = Models.load(spark, s"$dir/lists")
+    val cents = Models.load(spark, dir, "coarse")
+    val lists = Models.load(spark, dir, "lists")
     val wProbe = Window.partitionBy("query_id")
       .orderBy(col("ccos").desc, col("label").asc)
     val routed = queries

@@ -642,7 +642,8 @@ object TextAnalysis {
     * tokenization shares the fit form's oracle. */
   def bpeBuild(docs: DataFrame, dir: String, textCol: String = "text",
       rounds: Int = 4): Unit =
-    Models.save(bpeTopMerges(docs, textCol, rounds), dir)
+    Models.save(docs.sparkSession, dir)(
+      _.write("merges", bpeTopMerges(docs, textCol, rounds)))
 
   /** Tokenize against a PERSISTED merge table ([[bpeBuild]]) — no fit:
     * the merges (model parameters, `rounds` rows) load to the driver and
@@ -650,7 +651,7 @@ object TextAnalysis {
     * The apply half of the tokenizer's fit/apply split. */
   def bpeTokenizeServed(spark: org.apache.spark.sql.SparkSession,
       dir: String, docs: DataFrame, textCol: String = "text"): DataFrame = {
-    val fitted = Models.load(spark, dir)
+    val fitted = Models.load(spark, dir, "merges")
       .select("round", "pair_a", "pair_b")
       .collect()
       .sortBy(_.getInt(0))
@@ -780,8 +781,8 @@ object TextAnalysis {
       textCol: String = "text"): Unit = Pins.scoped {
     val (big, bo) = lmBigramModel(
       docs.filter(Sampling.saltedBucket("lmfit", col(idCol)) < 50), textCol)
-    Models.save(big, s"$dir/bigrams")
-    Models.save(bo, s"$dir/backoff")
+    Models.save(docs.sparkSession, dir)(
+      _.write("bigrams", big).write("backoff", bo))
   }
 
   /** Score against a PERSISTED model — zero fitting at serve time: the
@@ -791,8 +792,8 @@ object TextAnalysis {
       docs: DataFrame, idCol: String = "doc_id", textCol: String = "text")
       : DataFrame =
     lmBigramScoreWith(docs,
-      Models.load(spark, s"$dir/bigrams"),
-      Models.load(spark, s"$dir/backoff"), idCol, textCol)
+      Models.load(spark, dir, "bigrams"),
+      Models.load(spark, dir, "backoff"), idCol, textCol)
 
   /** Distinctive terms per group (Monroe/Colaresi/Quinn "Fightin' Words"
     * informative-Dirichlet log-odds): for each (group, word), the

@@ -419,14 +419,13 @@ object Lifecycle {
           levenshtein(lower(col("na")), lower(col("nb"))) <= 4)
         .select("doc_a", "doc_b").distinct()
       graft.ops.Pins.scoped {
-        graft.ops.Models.save(
+        graft.ops.Models.save(s, tmp)(_.write("labels",
           graft.ops.Dedup.connectedComponents(pairs)
-            .withColumnRenamed("doc_id", "key"),
-          s"$tmp/labels")
+            .withColumnRenamed("doc_id", "key")))
       }
     }
     erDirtyBase(s, d)
-      .join(graft.ops.Models.load(s, s"$dir/labels"), Seq("key"), "left")
+      .join(graft.ops.Models.load(s, dir, "labels"), Seq("key"), "left")
       .withColumn("component", coalesce(col("component"), col("key")))
   }
 

@@ -1319,7 +1319,7 @@ object NorthStar {
   /** IVF serving after append→COMPACT (r11): same build+append lifecycle
     * as the incremental query, then Similarity.ivfCompact folds the N
     * appended file sets per label directory into one (repartition by
-    * label + generation swap; the fitted coarse centroids are untouched).
+    * label, one rewrite commit; the fitted coarse centroids are untouched).
     * Content is layout-invariant, so the oracle is the incremental
     * query's cumulative SQL verbatim; what compaction buys is the probed
     * lists' partition pruning against one file set per label instead of
@@ -1355,6 +1355,18 @@ object NorthStar {
         expr("transform(embedding, x -> " +
           "cast(cast(x as double) * 0.85d + 0.25d as float))")
           .as("embedding"))
+
+  /** The drift lifecycle's shared artifacts: the corpus IVF with the
+    * drifted batch appended against frozen centroids ("ivfstale"), and
+    * the same artifact retrained ("ivfretr"). */
+  private def ivfDrifted(s: org.apache.spark.sql.SparkSession, d: String,
+      retrain: Boolean): String =
+    graft.ops.Models.ensureBuilt(
+        (if (retrain) "ivfretr|" else "ivfstale|") + d) { tmp =>
+      Similarity.ivfBuild(T.embeddings(s, d), tmp)
+      Similarity.ivfAppend(s, driftedBatch(s, d), tmp, batchId = 71L)
+      if (retrain) Similarity.ivfRetrain(s, tmp)
+    }
 
   private val driftOracleProlog =
     """WITH base AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) e
@@ -1419,11 +1431,7 @@ object NorthStar {
     driftOracleProlog + """
       |SELECT query_id, rank, neighbor_id FROM retr
       |ORDER BY query_id, rank""".stripMargin) { (s, d) =>
-    val dir = graft.ops.Models.ensureBuilt(s"ivfretr|$d") { tmp =>
-      Similarity.ivfBuild(T.embeddings(s, d), tmp)
-      Similarity.ivfAppend(s, driftedBatch(s, d), tmp, batchId = 71L)
-      Similarity.ivfRetrain(s, tmp)
-    }
+    val dir = ivfDrifted(s, d, retrain = true)
     val queries = driftedBatch(s, d).filter(col("vec_id") < 1000100L)
       .select(col("vec_id").as("query_id"), col("embedding"))
     Similarity.ivfServe(s, dir, queries, 3, nprobe = 1)
@@ -1475,15 +1483,8 @@ object NorthStar {
       |ORDER BY q.query_id""".stripMargin) { (s, d) =>
     val emb = T.embeddings(s, d)
     val drift = driftedBatch(s, d)
-    val dirStale = graft.ops.Models.ensureBuilt(s"ivfstale|$d") { tmp =>
-      Similarity.ivfBuild(emb, tmp)
-      Similarity.ivfAppend(s, drift, tmp, batchId = 71L)
-    }
-    val dirRetr = graft.ops.Models.ensureBuilt(s"ivfretr|$d") { tmp =>
-      Similarity.ivfBuild(emb, tmp)
-      Similarity.ivfAppend(s, drift, tmp, batchId = 71L)
-      Similarity.ivfRetrain(s, tmp)
-    }
+    val dirStale = ivfDrifted(s, d, retrain = false)
+    val dirRetr = ivfDrifted(s, d, retrain = true)
     val queries = drift.filter(col("vec_id") < 1000100L)
       .select(col("vec_id").as("query_id"), col("embedding"))
     val staleTop = Similarity.ivfServe(s, dirStale, queries, 3, nprobe = 1)
@@ -1518,12 +1519,12 @@ object NorthStar {
     *  - drift: the planted drifted batch (TV 0.215 at sf0.01, 0.076 at
     *    sf0.1 — the frozen centroids funnel it into few lists) fires the
     *    θ=0.05 policy → occupancy re-baselines to the reassigned lists
-    *    (n_fit_after == n_cur_after) and the ledger folds to one
+    *    (n_fit_after == n_cur_after) and the history folds to one
     *    generation;
     *  - control: an equal-sized UNDRIFTED batch (fresh ids over corpus
     *    vectors 200–399; TV 0.023 / 0.008) does NOT fire → the baseline
     *    stays the build corpus and both generations remain.
-    * The `retrained` flag is read from the ARTIFACT (ledger folded to
+    * The `retrained` flag is read from the ARTIFACT (history folded to
     * one generation), while the oracle derives it from the exact-integer
     * TV inequality — a policy that misfires on either side hash-fails.
     * The decision is ALL-INTEGER on both engines (r13 ADVICE): Spark's
@@ -1585,12 +1586,8 @@ object NorthStar {
     val control = emb.filter(col("vec_id") >= 200 && col("vec_id") < 400)
       .select((col("vec_id") + 2000000L).as("vec_id"), col("embedding"))
     // the stale (pre-decision) occupancy for the drift phase comes from
-    // the retrain-recall query's frozen twin — identical build steps, so
-    // ensureBuilt shares one artifact
-    val dirStale = graft.ops.Models.ensureBuilt(s"ivfstale|$d") { tmp =>
-      Similarity.ivfBuild(emb, tmp)
-      Similarity.ivfAppend(s, drift, tmp, batchId = 71L)
-    }
+    // the retrain-recall query's frozen twin
+    val dirStale = ivfDrifted(s, d, retrain = false)
     val dirDrift = graft.ops.Models.ensureBuilt(s"ivfpolicy_drift|$d") { tmp =>
       Similarity.ivfBuild(emb, tmp)
       Similarity.ivfAppend(s, drift, tmp, batchId = 81L)
@@ -1603,12 +1600,12 @@ object NorthStar {
     }
     def phaseDf(phase: String, staleListsDir: String, policyDir: String) = {
       val nFit = emb.groupBy("label").agg(count(lit(1)).as("n_fit"))
-      val nStale = graft.ops.Models.load(s, s"$staleListsDir/lists")
+      val nStale = graft.ops.Models.load(s, staleListsDir, "lists")
         .groupBy("label").agg(count(lit(1)).as("n_stale"))
       val after = Similarity.ivfDriftStats(s, policyDir)
         .select(col("label"), col("n_fit").as("n_fit_after"),
           col("n_cur").as("n_cur_after"))
-      // artifact-derived decision: retrain folds the ledger to ONE
+      // artifact-derived decision: retrain folds the history to ONE
       // generation; the untriggered path keeps build + append = two
       val retrained = graft.ops.Models.genStats(s, policyDir)
         .head().getLong(0) == 1L
@@ -2386,14 +2383,15 @@ object NorthStar {
     * positions, IVF inverted lists — the generation count (how many
     * file-set generations a serving scan pays for: the compaction-cadence
     * signal) and the last-append batch id (the staleness signal), read
-    * from each artifact's own `gens` ledger (Models.logGen/genStats),
-    * never recomputed from data. The planted lifecycle exercises every
-    * ledger transition: build (fresh), append (explicit batch ids — the
-    * ids a streaming fold stamps from its real micro-batch id), and
-    * compaction (bm25 folds back to ONE generation while keeping the
-    * last-seen id — layout changed, content didn't). The oracle is the
-    * planted lifecycle itself: a mis-wired ledger (an append that forgot
-    * to log, a compaction that dropped the id) hash-fails. */
+    * from the batch-id history in each artifact's manifest
+    * (Models.genStats), never recomputed from data. The planted lifecycle
+    * exercises every history transition: build (fresh), append (explicit
+    * batch ids — the ids a streaming fold passes from its real
+    * micro-batch id), and compaction (bm25 folds back to ONE generation
+    * while keeping the last-seen id — layout changed, content didn't).
+    * The oracle is the planted lifecycle itself: a mis-wired commit (an
+    * append that dropped its id, a compaction that lost the last one)
+    * hash-fails. */
   val datasetCardFreshness = QueryDef(
     "q_ns_dataset_card_freshness",
     """SELECT * FROM (VALUES

@@ -221,7 +221,7 @@ object Retrieve {
 
   /** Phrase search served after append→append→COMPACT: three word-sorted
     * generations rewritten into one (Retrieval.phraseIndexCompact, a
-    * generation-swap layout pass), then the same served query — the
+    * one-commit layout rewrite), then the same served query — the
     * posting-maintenance lifecycle's missing step (r10 "What's missing"
     * #4: per-generation pruning stats degrade toward file-count overhead
     * as appends accumulate; compaction restores the build-time single

@@ -299,10 +299,10 @@ object StreamOps {
   /** The in-loop compaction policy of the index-maintenance loops, two
     * triggers: a fixed cadence (every `compactEvery` micro-batches, keyed
     * on batchId — zero reads, deterministic under replay), or
-    * LEDGER-DRIVEN: compact when the artifact's own generation count —
+    * HISTORY-DRIVEN: compact when the artifact's own generation count —
     * the signal the dataset card's freshness row reports — reaches
-    * `compactWhenGens`. The ledger read is one tiny gens-table aggregate
-    * per micro-batch, and replay-deterministic because genStats counts
+    * `compactWhenGens`. The count is one manifest read per micro-batch
+    * (no Spark job), and replay-deterministic because genStats counts
     * DISTINCT batch ids (a replayed batch folds instead of
     * re-triggering). */
   private def compactionDue(spark: org.apache.spark.sql.SparkSession,
@@ -441,8 +441,7 @@ object StreamOps {
       key: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
     foldEach(stream, checkpointDir) { (batch, _) =>
-      val emptyRight = graft.ops.Models
-        .load(spark, s"$dir/right").limit(0)
+      val emptyRight = graft.ops.Models.load(spark, dir, "right").limit(0)
       graft.ops.Evolve.joinViewAppend(spark, dir, batch, emptyRight,
         key)
     }
@@ -567,8 +566,8 @@ object StreamOps {
     * until the next compaction rebuild (bm25Build/phraseIndexBuild over
     * the sink corpus, the periodic rebuild any production postings index
     * runs anyway); admissions are never silently lost, which the reverse
-    * ordering risks. The batch is localCheckpoint'ed before the first
-    * append for the same recacheByPath reason as the dedup loop. */
+    * ordering risks. The batch is localCheckpoint'ed once and feeds the
+    * sink write and both index appends. */
   def retrievalIngest(spark: org.apache.spark.sql.SparkSession,
       indexDir: String, stream: DataFrame, sinkDir: String,
       checkpointDir: String, idCol: String = "doc_id",
@@ -578,7 +577,7 @@ object StreamOps {
     foldEach(stream, checkpointDir) { (batch, batchId) =>
       val b = graft.ops.Pins.checkpoint(batch)
       b.write.mode("append").parquet(sinkDir)
-      // the real micro-batch id lands in the generation ledger — the
+      // the real micro-batch id lands in the manifest's history — the
       // card's freshness row then names the exact stream position
       graft.ops.Retrieval.phraseIndexAppend(b, s"$indexDir/phrase",
         idCol, textCol, batchId)
@@ -608,9 +607,8 @@ object StreamOps {
     * duplicate (vec_id, embedding) rows, which surface as duplicate
     * candidates in a probed rerank until the periodic ivfBuild rebuild
     * over the sink corpus); sink-first ordering means vectors are never
-    * silently lost, which the reverse ordering risks. localCheckpoint
-    * before the first write for the same recacheByPath reason as the
-    * dedup loop. */
+    * silently lost, which the reverse ordering risks. The batch is
+    * localCheckpoint'ed once and feeds the sink write and the append. */
   def ivfIngest(spark: org.apache.spark.sql.SparkSession,
       indexDir: String, stream: DataFrame, sinkDir: String,
       checkpointDir: String, compactEvery: Int = 0,
@@ -634,7 +632,7 @@ object StreamOps {
       // the duplicates themselves move TV across the threshold — in
       // which case retrain re-fits over exactly what's on disk,
       // still a valid (centroids, lists) state. Retrain subsumes
-      // compaction (its rewrite is one file set per list + a ledger
+      // compaction (its rewrite is one file set per list + a history
       // fold), so a fired retrain skips the compaction checks.
       val retrained = retrainWhenDrift > 0 &&
         graft.ops.Similarity.ivfMaintain(spark, indexDir,

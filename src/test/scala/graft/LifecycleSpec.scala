@@ -148,7 +148,7 @@ class LifecycleSpec extends AnyFunSuite {
     // compaction: artifact collapses to one row per group, totals
     // unchanged, and a post-compaction fold still appends cleanly
     Evolve.aggCompact(spark, dir, "o_custkey")
-    val rows = graft.ops.Models.load(spark, s"$dir/agg")
+    val rows = graft.ops.Models.load(spark, dir, "agg")
     assert(rows.count() == rows.select("o_custkey").distinct().count(),
       "compaction must leave one partial row per group")
     val afterCompact = Evolve.aggServe(spark, dir, "o_custkey")

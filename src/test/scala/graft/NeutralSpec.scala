@@ -315,7 +315,7 @@ class NeutralSpec extends AnyFunSuite {
     // the fresh doc must be admitted
     assert(got(70001L)._2, s"fresh doc rejected: ${got(70001L)}")
     // the artifact is position-bounded: |occupied| <= k * |corpus|
-    val occ = graft.ops.Models.load(spark, s"$dir/bloom").count()
+    val occ = graft.ops.Models.load(spark, dir, "bloom").count()
     assert(occ <= Neutral.BloomK * corpus.count() && occ > 0)
   }
 

@@ -3139,9 +3139,9 @@ class OpsSpec extends AnyFunSuite {
     Similarity.ivfRetrain(spark, samp, sampleFrac = 0.5)
     assert(hitsFrom(samp) > staleHits,
       "sampled retrain must still beat the stale artifact")
-    val nLabels = graft.ops.Models.load(spark, s"$samp/coarse").count()
+    val nLabels = graft.ops.Models.load(spark, samp, "coarse").count()
     assert(nLabels ==
-      graft.ops.Models.load(spark, s"$stale/coarse").count(),
+      graft.ops.Models.load(spark, stale, "coarse").count(),
       "sampled retrain must never drop a coarse label")
   }
 
@@ -3184,41 +3184,58 @@ class OpsSpec extends AnyFunSuite {
       "untriggered path keeps build + append generations")
   }
 
-  test("swapIn is crash-recoverable: readers fall back to the " +
-      "__swap_old aside WITHOUT mutating; writes heal the path") {
+  test("a Models commit survives a crash on either side of its commit " +
+      "point: staged residue is invisible and cleared, a committed " +
+      "generation serves before its cleanup") {
     import graft.ops.Models
-    val dir = java.nio.file.Files.createTempDirectory("swap_heal").toString
-    val live = s"$dir/table"
-    Models.save(Seq((1L, "a"), (2L, "b")).toDF("id", "v"), live)
-    // simulate a crash BETWEEN swapIn's two renames: live was renamed
-    // aside, the new generation never landed
-    val fs = new org.apache.hadoop.fs.Path(live)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(fs.rename(new org.apache.hadoop.fs.Path(live),
-      new org.apache.hadoop.fs.Path(live + "__swap_old")))
-    // load serves the pre-swap generation from the aside but is strictly
-    // READ-ONLY: a reader that renamed would race a live writer inside
-    // the swap window (heal is a writer-side duty)
-    assert(Models.load(spark, live).count() == 2L,
-      "load must serve the aside when live is missing")
-    assert(fs.exists(new org.apache.hadoop.fs.Path(live + "__swap_old")),
-      "load must not move the aside")
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(live)),
-      "load must not recreate live")
-    // the next WRITE heals: append renames the aside back, then lands
-    Models.append(Seq((3L, "c")).toDF("id", "v"), live)
-    assert(Models.load(spark, live).count() == 3L)
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(live + "__swap_old")))
-    // append after a crash-after-rename-2 (stale aside + live both
-    // present): aside is deleted, the append lands in live
-    Models.save(Seq((9L, "z")).toDF("id", "v"), live + "__swap_old")
-    Models.append(Seq((4L, "d")).toDF("id", "v"), live)
-    assert(Models.load(spark, live).count() == 4L)
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(live + "__swap_old")),
-      "a stale aside must be cleared, never merged")
-    // a full swap still works end to end after the heals
-    Models.save(Seq((7L, "q")).toDF("id", "v"), s"$dir/tmp")
-    Models.swapIn(spark, s"$dir/tmp", live)
-    assert(Models.load(spark, live).count() == 1L)
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.faulty.impl", classOf[FaultyFs].getName)
+    val local = java.nio.file.Files.createTempDirectory("commit_crash").toString
+    val dir = s"faulty://$local"
+    def ids(df: DataFrame) = df.collect().map(_.getLong(0)).sorted.toSeq
+    def served = ids(Models.load(spark, dir, "t"))
+    def plain = ids(spark.read.parquet(s"$local/t"))
+    def gens = Models.genStats(spark, dir).head()
+    def underscored = new java.io.File(local).list().toSeq
+      .filter(_.startsWith("_")).sorted
+    def stagedFiles = underscored.filter(_.startsWith("_stage.")).flatMap(s =>
+      Seq("p=0", "p=1").flatMap(p => Option(
+        new java.io.File(s"$local/$s/t/$p").list()).toSeq.flatten))
+      .filter(_.startsWith("part-"))
+    // partitioned, so a read that mixes staged and moved files must still
+    // resolve its partition values
+    def rows(ids: Long*) = ids.map(i => (i, (i % 2).toInt)).toDF("id", "p")
+    Models.save(spark, dir)(_.write("t", rows(1L, 2L), "p"))
+    // crash after the data files are written, before the commit: the
+    // manifest write fails
+    val beforeCommit = scala.util.Try(FaultyFs.failing((op, f) =>
+        op == "create" && f.getName.startsWith("_manifest"))(
+      Models.append(spark, dir, Some(0L))(_.write("t", rows(3L)))))
+    assert(beforeCommit.isFailure && stagedFiles.nonEmpty,
+      s"expected staged residue after the crash: $underscored")
+    assert(served == Seq(1L, 2L) && plain == Seq(1L, 2L),
+      "uncommitted rows must be invisible to load and to a plain scan")
+    assert(gens.getLong(0) == 1L && gens.getLong(1) == -1L)
+    // the next commit removes the residue
+    Models.append(spark, dir, Some(1L))(_.write("t", rows(4L)))
+    assert(served == Seq(1L, 2L, 4L) && plain == Seq(1L, 2L, 4L))
+    assert(underscored.size == 1 && underscored.head.startsWith("_manifest."),
+      s"residue left after a commit: $underscored")
+    // crash after the commit, before cleanup: moving a rewrite's staged
+    // p=1 file into the table fails, its p=0 file may already be moved
+    val afterCommit = scala.util.Try(FaultyFs.failing((op, f) =>
+        op == "rename" && f.toUri.getPath.contains("/t/p=1/") &&
+          !f.toUri.getPath.contains("/_stage."))(
+      Models.rewrite(spark, dir)(_.write("t",
+        Models.load(spark, dir, "t").filter(col("id") =!= 2L)))))
+    assert(afterCommit.isFailure && stagedFiles.nonEmpty,
+      s"expected an unfinished cleanup: $underscored")
+    assert(served == Seq(1L, 4L), "the committed generation must serve")
+    assert(gens.getLong(0) == 1L && gens.getLong(1) == 1L)
+    // the next commit finishes the cleanup first
+    Models.append(spark, dir, Some(2L))(_.write("t", rows(5L)))
+    assert(served == Seq(1L, 4L, 5L) && plain == Seq(1L, 4L, 5L))
+    assert(underscored.size == 1 && underscored.head.startsWith("_manifest."),
+      s"residue left after a commit: $underscored")
   }
 }

@@ -89,7 +89,7 @@ class SketchOpsSpec extends AnyFunSuite {
       "build+append+serve must equal the one-pass sketch exactly")
     CountMin.cmsCompact(spark, dir)
     assert(servedMap() == served, "compaction must not change estimates")
-    val cellRows = graft.ops.Models.load(spark, s"$dir/cells").count()
+    val cellRows = graft.ops.Models.load(spark, dir, "cells").count()
     assert(cellRows <= 3 * 32, "compacted artifact exceeds depth*width rows")
   }
 

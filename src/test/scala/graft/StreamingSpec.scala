@@ -490,7 +490,7 @@ class StreamingSpec extends AnyFunSuite {
     val q = StreamOps.ivfIngest(spark, idx, stream, sink.toString, ckpt.toString)
     q.awaitTermination(180000)
     // every streamed vector landed in the maintained inverted lists
-    val listedIds = graft.ops.Models.load(spark, s"$idx/lists")
+    val listedIds = graft.ops.Models.load(spark, idx, "lists")
       .select("vec_id").collect().map(_.getLong(0)).toSet
     val deltaIds = delta.select("vec_id").collect().map(_.getLong(0)).toSet
     assert(deltaIds.subsetOf(listedIds),
