@@ -72,11 +72,12 @@ object Models {
   private val ManifestName = """_manifest\.(\d+)""".r
   private def stage(root: Path, gen: Long) = new Path(root, s"_stage.$gen")
 
-  /** The tables of one commit; each [[write]] runs its job at once. */
+  /** The tables of one commit; each [[write]] runs its job at once.
+    * Several threads may write and read one commit's distinct tables. */
   final class Commit private[Models] (spark: SparkSession, fs: FileSystem,
       root: Path, prior: Generation, appending: Boolean) {
-    private[Models] var tables = Map.empty[String, Table]
-    private var staged = Map.empty[String, Table]
+    @volatile private[Models] var tables = Map.empty[String, Table]
+    @volatile private var staged = Map.empty[String, Table]
     private def out(table: String) = new Path(stage(root, prior.gen + 1), table)
 
     /** Stage `df` as `table`'s new rows: added to the committed rows in
@@ -89,9 +90,11 @@ object Models {
       df.write.partitionBy(parts: _*).parquet(out(table).toString)
       val t = Table(old.fold(readSchema(df.schema, parts).json)(_.schema),
         parts, dataFiles(fs, out(table)))
-      staged += table -> t
-      tables += table -> t.copy(files =
-        old.fold(Map.empty[String, Long])(_.files) ++ t.files)
+      synchronized {
+        staged += table -> t
+        tables += table -> t.copy(files =
+          old.fold(Map.empty[String, Long])(_.files) ++ t.files)
+      }
       this
     }
 
@@ -103,8 +106,10 @@ object Models {
 
     /** The rows this commit staged for `table`, so a later table derives
       * from what was written, never from a recompute. */
-    def read(table: String): DataFrame =
-      relation(spark, staged(table), out(table), staged(table).files.keys)
+    def read(table: String): DataFrame = {
+      val t = staged(table)
+      relation(spark, t, out(table), t.files.keys)
+    }
   }
 
   /** Commit a build: the written tables replace same-named ones and the

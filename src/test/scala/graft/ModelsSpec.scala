@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -11,7 +10,8 @@ import graft.ops.{Models, ScaleOps}
   * file list and schema, so building the DataFrame and asking its schema
   * must start no Spark job — not the schema-inference job a plain
   * parquet read runs, and not the parallel listing job Spark starts for
-  * more than `parallelPartitionDiscovery.threshold` (32) paths. */
+  * more than `parallelPartitionDiscovery.threshold` (32) paths. One
+  * commit may be written from several threads. */
 class ModelsSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = SparkSession.builder()
@@ -21,36 +21,7 @@ class ModelsSpec extends AnyFunSuite {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  /** Jobs started while `body` runs. The listener bus is asynchronous,
-    * so a marker job (its own job group) is run after `body`, and every
-    * start event seen before the marker's is counted. */
-  private def jobsDuring(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        groups.add(Option(js.properties)
-          .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .getOrElse("")): Unit
-    }
-    def marker(tag: String): Unit = {
-      sc.setJobGroup(tag, tag)
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 30L * 1000000000L
-      while (!groups.contains(tag) && System.nanoTime() < deadline)
-        Thread.sleep(10)
-      assert(groups.contains(tag), s"marker job $tag never reported")
-    }
-    sc.addSparkListener(listener)
-    try {
-      marker("models-spec-before")
-      groups.clear()
-      body
-      marker("models-spec-after")
-      import scala.jdk.CollectionConverters._
-      groups.asScala.takeWhile(_ != "models-spec-after").size
-    } finally sc.removeSparkListener(listener)
-  }
+  private def jobsDuring(body: => Unit): Int = SparkJobs.during(spark)(body)
 
   test("Models.load runs no Spark job: 41 committed file sets and the " +
       "day-partitioned HLL cube") {
@@ -79,5 +50,24 @@ class ModelsSpec extends AnyFunSuite {
     assert(schema.get.fieldNames.toSeq == Seq("event_type", "sk", "day"))
     assert(Models.load(spark, cube, "cube").select("day").distinct()
       .count() == 40L)
+  }
+
+  test("one commit written from 8 threads: every table is in the manifest " +
+      "and loads as written") {
+    val dir = java.nio.file.Files.createTempDirectory("models_threads").toString
+    def rows(i: Int) = (i * 100L) until (i * 100L + 10 + i)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+    try Models.save(spark, dir) { c =>
+      (0 until 8).map { i =>
+        pool.submit { () =>
+          c.write(s"t$i", spark.range(rows(i).head, rows(i).last + 1).toDF("id"))
+          c.read(s"t$i").count()
+        }
+      }.zipWithIndex.foreach { case (n, i) => assert(n.get() == rows(i).size) }
+    } finally pool.shutdown()
+    (0 until 8).foreach { i =>
+      val got = Models.load(spark, dir, s"t$i").collect().map(_.getLong(0)).sorted
+      assert(got.toSeq == rows(i), s"table t$i")
+    }
   }
 }

@@ -26,7 +26,7 @@ class ParityFreezeSpec extends AnyFunSuite {
     "src/main/scala/graft/model/Staging.scala" ->
       "f0d9d966260a56eae7d817ca35ca28de769d5ada9fb83cd8f7be46d4b0be0ea2",
     "src/main/scala/graft/model/Warehouse.scala" ->
-      "4c319cadd393954a8957b979cd4e0540d492cb5c14dea25c641d846506794207",
+      "b77718f1d652304857252b1ffc380588e9a9cd15a2d72893b58bb96b0038d736",
     "src/main/scala/graft/expr/UfcExprs.scala" ->
       "c78b7948ec3a6a88f1d1dd5a9d02409b0da8fec1bc2f0a136f0e391c7b231a19")
 
