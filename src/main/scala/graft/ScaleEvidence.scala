@@ -378,7 +378,7 @@ object ScaleEvidence {
   }
 
   /** DSIR at 1x/10x: the measurable scale contract is that the MODEL is
-    * corpus-size-independent — exactly numBuckets rows at any scale
+    * corpus-size-independent — exactly Dsir.Buckets rows at any scale
     * (unlike the LM's vocabulary-growing tables), so the serving join
     * broadcasts forever — and that fit/serve walls are scan-shaped
     * (added data absorbed by added parallelism, the lmEvidence
@@ -496,7 +496,7 @@ object ScaleEvidence {
       }
       val occupied = ops.Models.load(spark, dir, "bloom").count()
       val ((nInc, falseRejects), tServe) = timed {
-        // mBits now travels with the artifact (bloom_meta) — serve reads it
+        // mBits travels in the artifact's manifest — serve reads it there
         val r = ops.Neutral.admitBloomServed(spark, dir, incoming)
           .agg(count(lit(1)), sum(when(!col("admitted"), 1L).otherwise(0L)))
           .head()

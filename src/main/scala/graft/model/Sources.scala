@@ -95,13 +95,4 @@ object Sources {
     * the unified schema explicitly once it's known. */
   def readParquetEvolved(spark: SparkSession, path: String): DataFrame =
     spark.read.option("mergeSchema", "true").parquet(path)
-
-  /** Full-replace JDBC sink — the reference's actual target is Postgres
-    * (dlt → PG schema `ufc`, dlt/load.py:55-63); this is the drop-in when a
-    * relational warehouse is wanted instead of parquet. Not exercised in
-    * this container (zero egress, no database) — the parquet path above is
-    * the tested sink. */
-  def writeJdbcReplace(df: DataFrame, url: String, table: String,
-      props: java.util.Properties): Unit =
-    df.write.mode("overwrite").jdbc(url, table, props)
 }

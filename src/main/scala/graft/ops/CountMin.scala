@@ -84,35 +84,27 @@ object CountMin {
 
   // ------------------------------------------------- persisted artifact
 
-  /** Build and persist the sketch: cell rows under $dir/cells plus a
-    * 1-row meta table pinning (depth, width). Geometry is READ BACK by
+  /** Build and persist the sketch: cell rows under $dir/cells, with
+    * (depth, width) recorded in the manifest. Geometry is READ BACK by
     * [[cmsAppend]]/[[cmsServe]] rather than re-supplied by the caller — a
     * serve-time depth/width different from build-time would silently
-    * probe the wrong buckets (the parameter-drift hazard of the
-    * independently-defaulted bloom mBits/DSIR numBuckets, closed here by
-    * construction). */
+    * probe the wrong buckets. */
   def cmsBuild(df: DataFrame, dir: String, keyCol: String,
-      depth: Int = DefaultDepth, width: Int = DefaultWidth): Unit = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    Models.save(spark, dir)(_.write("cells", cmsCells(df, keyCol, depth, width))
-      .write("meta", Seq((depth, width)).toDF("depth", "width")))
-  }
-
-  private def geometry(spark: SparkSession, dir: String): (Int, Int) = {
-    val r = Models.load(spark, dir, "meta").head()
-    (r.getInt(0), r.getInt(1))
-  }
+      depth: Int = DefaultDepth, width: Int = DefaultWidth): Unit =
+    Models.save(df.sparkSession, dir)(
+      _.write("cells", cmsCells(df, keyCol, depth, width))
+        .param("depth", depth).param("width", width))
 
   /** Fold one delta batch into the persisted sketch (scans the BATCH
-    * only; geometry from the artifact's own meta). Appended cell rows are
+    * only; geometry from the artifact's manifest). Appended cell rows are
     * additive partials — [[cmsServe]] sums them, so append order and
     * multiplicity-of-fold never change an estimate, and a half-written
     * append is repaired by exactly-once foreachBatch replay. */
   def cmsAppend(batch: DataFrame, dir: String, keyCol: String): Unit = {
-    val (depth, width) = geometry(batch.sparkSession, dir)
-    Models.append(batch.sparkSession, dir)(
-      _.write("cells", cmsCells(batch, keyCol, depth, width)))
+    val spark = batch.sparkSession
+    val cells = cmsCells(batch, keyCol, Models.param(spark, dir, "depth"),
+      Models.param(spark, dir, "width"))
+    Models.append(spark, dir)(_.write("cells", cells))
   }
 
   /** Serve point estimates from the persisted sketch: fold the appended
@@ -120,10 +112,10 @@ object CountMin {
     * estimate — the corpus that built the sketch is never re-scanned. */
   def cmsServe(spark: SparkSession, dir: String, keys: DataFrame,
       keyCol: String): DataFrame = {
-    val (depth, width) = geometry(spark, dir)
     val cells = Models.load(spark, dir, "cells")
       .groupBy("row_i", "bucket").agg(sum(col("cnt")).as("cnt"))
-    cmsEstimate(cells, keys, keyCol, depth, width)
+    cmsEstimate(cells, keys, keyCol, Models.param(spark, dir, "depth"),
+      Models.param(spark, dir, "width"))
   }
 
   /** Compact the folded artifact back to ≤ depth×width rows (serve

@@ -91,10 +91,8 @@ object Dedup {
     * [[dedupCorpus]]'s stages through it, so its traced run stays equal
     * to the real call. */
   def minHashCandidates(docs: DataFrame, textCol: String = "text",
-      shingleN: Int = 3, bands: Int = 16, rows: Int = 4,
       starCap: Option[Int] = None): DataFrame =
-    Neutral.minHashCandidates(docs, textCol, shingleN, bands, rows,
-      starCap = starCap)
+    Neutral.minHashCandidates(docs, textCol, starCap = starCap)
 
   /** Shared core of the n-gram pipeline (PPJoin-style rarest-prefix
     * blocking): candidates must share one of each doc's `prefixK`

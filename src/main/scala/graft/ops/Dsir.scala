@@ -12,9 +12,9 @@ import org.apache.spark.sql.types.DecimalType
   * replacement proportional to the importance weights.
   *
   * Scale shape (the reason the op is bucketed):
-  *  - The MODEL is one table of `numBuckets` log-ratios — fitting is two
-  *    corpus passes that partial-aggregate down to `numBuckets` rows
-  *    (map-side combine; the shuffle moves at most numBuckets rows per
+  *  - The MODEL is one table of [[Buckets]] log-ratios — fitting is two
+  *    corpus passes that partial-aggregate down to that many rows
+  *    (map-side combine; the shuffle moves at most Buckets rows per
   *    task), and the fitted artifact is kilobytes, broadcast at any
   *    corpus size.
   *  - SERVING is map-only feature hashing plus one broadcast join and a
@@ -25,16 +25,18 @@ import org.apache.spark.sql.types.DecimalType
   *
   * Determinism contract (oracle-twin discipline, see [[Neutral]]):
   * buckets come from the first 16 bits of md5("dsir:" || gram) so both
-  * engines hash identically (numBuckets must divide 2^16 to keep the mod
-  * unbiased); every ln rounds to DECIMAL(18,6) at the leaf and per-doc
-  * sums accumulate in exact decimal arithmetic; the Gumbel noise derives
-  * from the md5-uniform u = (hex16("dsirg:" || id) + 0.5) / 2^16.
+  * engines hash identically; every ln rounds to DECIMAL(18,6) at the leaf
+  * and per-doc sums accumulate in exact decimal arithmetic; the Gumbel
+  * noise derives from the md5-uniform u = (hex16("dsirg:" || id) + 0.5)
+  * / 2^16.
   */
 object Dsir {
 
-  /** Buckets in the hashed feature space. Must divide 2^16 (the md5
-    * prefix width) so the bucket mod is exactly uniform. */
-  val DefaultBuckets = 512
+  /** Buckets in the hashed feature space, shared by every fit, serve and
+    * persisted artifact (so no artifact can disagree with its server).
+    * Divides 2^16 (the md5 prefix width), so the bucket mod is exactly
+    * uniform. */
+  private[graft] val Buckets = 512
 
   private val dec = DecimalType(18, 6)
 
@@ -53,11 +55,11 @@ object Dsir {
     concat(ws, bigrams)
   }
 
-  /** First 16 bits of md5("dsir:" || gram) mod numBuckets — the hashed
+  /** First 16 bits of md5("dsir:" || gram) mod [[Buckets]] — the hashed
     * feature index, engine-neutral by the md5 seeding contract. */
-  private def bucketCol(gram: Column, numBuckets: Int): Column =
+  private def bucketCol(gram: Column): Column =
     conv(substring(md5(concat(lit("dsir:"), gram)), 1, 4), 16, 10)
-      .cast("long") % numBuckets
+      .cast("long") % Buckets
 
   /** (id, bucket) — one row per gram occurrence. Map-only. The compiled
     * [[graft.expr.DsirGramBuckets]] kernel replaces the
@@ -65,42 +67,41 @@ object Dsir {
     * the interpreted zip_with lambda per bigram and round-tripped every
     * gram through a 32-char hex string to read 2 bytes back out
     * (ExprSpec pins the kernel bit-identical to [[bucketedRef]]). */
-  private def bucketed(docs: DataFrame, idCol: String, textCol: String,
-      numBuckets: Int): DataFrame =
+  private def bucketed(docs: DataFrame, idCol: String,
+      textCol: String): DataFrame =
     docs.select(col(idCol),
       explode(graft.expr.DsirGramBuckets.dsirGramBuckets(
-        lower(trim(col(textCol))), numBuckets)).as("bucket"))
+        lower(trim(col(textCol))), Buckets)).as("bucket"))
 
   /** Built-in-functions reference form of [[bucketed]] — the semantic
     * spec the kernel must match bit-for-bit (ExprSpec). Operators run
     * the kernel. */
   private[graft] def bucketedRef(docs: DataFrame, idCol: String,
-      textCol: String, numBuckets: Int): DataFrame =
+      textCol: String): DataFrame =
     docs.select(col(idCol), explode(gramsCol(textCol)).as("gram"))
-      .select(col(idCol), bucketCol(col("gram"), numBuckets).as("bucket"))
+      .select(col(idCol), bucketCol(col("gram")).as("bucket"))
 
-  /** One corpus pass → per-bucket gram-occurrence counts (≤ numBuckets
-    * rows after the partial-agg shuffle). */
+  /** One corpus pass → per-bucket gram-occurrence counts (≤ Buckets rows
+    * after the partial-agg shuffle). */
   private def bucketCounts(df: DataFrame, idCol: String, textCol: String,
-      numBuckets: Int, as: String): DataFrame =
-    bucketed(df, idCol, textCol, numBuckets)
-      .groupBy("bucket").agg(count(lit(1)).as(as))
+      as: String): DataFrame =
+    bucketed(df, idCol, textCol).groupBy("bucket").agg(count(lit(1)).as(as))
 
   /** Model from count tables: per-bucket log importance ratio
     * lr[b] = ln p̂_target[b] − ln p̂_raw[b], both Laplace-smoothed
-    * ((c_b + 1) / (T + numBuckets)) and each ln rounded to DECIMAL(18,6)
-    * before the subtraction. Returns the numBuckets-row model table
+    * ((c_b + 1) / (T + Buckets)) and each ln rounded to DECIMAL(18,6)
+    * before the subtraction. Returns the Buckets-row model table
     * (bucket, lr) — every bucket present, broadcastable. Counts in, so
     * the count-form artifact ([[dsirBuildCounts]]) rebuilds the model at
-    * load for free (a numBuckets-row transform). */
+    * load for free (a Buckets-row transform). */
   private def modelOfCounts(spark: SparkSession, rawC: DataFrame,
-      tgtC: DataFrame, numBuckets: Int): DataFrame = {
+      tgtC: DataFrame): DataFrame = {
     val rawT = rawC.agg(coalesce(sum(col("nr")), lit(0L)).as("tr"))
     val tgtT = tgtC.agg(coalesce(sum(col("nt")), lit(0L)).as("tt"))
     def smoothedLn(n: Column, tot: Column): Column =
-      log((coalesce(n, lit(0L)) + 1).cast("double") / (tot + numBuckets))
+      log((coalesce(n, lit(0L)) + 1).cast("double") / (tot + Buckets))
         .cast(dec)
-    spark.range(numBuckets).toDF("bucket")
+    spark.range(Buckets).toDF("bucket")
       .join(rawC, Seq("bucket"), "left")
       .join(tgtC, Seq("bucket"), "left")
       .join(broadcast(rawT))
@@ -112,13 +113,9 @@ object Dsir {
 
   /** Fit from corpora (see [[modelOfCounts]] for the ratio contract). */
   def dsirModel(raw: DataFrame, target: DataFrame, textCol: String = "text",
-      idCol: String = "doc_id", numBuckets: Int = DefaultBuckets): DataFrame = {
-    require(65536 % numBuckets == 0,
-      s"numBuckets=$numBuckets must divide 2^16 for an unbiased bucket mod")
-    modelOfCounts(raw.sparkSession,
-      bucketCounts(raw, idCol, textCol, numBuckets, "nr"),
-      bucketCounts(target, idCol, textCol, numBuckets, "nt"), numBuckets)
-  }
+      idCol: String = "doc_id"): DataFrame =
+    modelOfCounts(raw.sparkSession, bucketCounts(raw, idCol, textCol, "nr"),
+      bucketCounts(target, idCol, textCol, "nt"))
 
   /** Apply: per-doc importance log-weight — the sum of the model's
     * log-ratios over the doc's gram occurrences (exact decimal sum,
@@ -126,15 +123,10 @@ object Dsir {
     * [[dsirResample]]'s key arithmetic). Docs with zero grams have no
     * weight rows, as in the paper (nothing to resample on). One
     * broadcast join, one per-doc partial agg; the corpus never shuffles
-    * whole. `numBuckets` must match the model's feature space. */
+    * whole. */
   def dsirWeightsWith(docs: DataFrame, model: DataFrame,
-      idCol: String = "doc_id", textCol: String = "text",
-      numBuckets: Int = DefaultBuckets): DataFrame =
-    dsirWeightsWithN(docs, model, idCol, textCol, numBuckets)
-
-  private def dsirWeightsWithN(docs: DataFrame, model: DataFrame,
-      idCol: String, textCol: String, numBuckets: Int): DataFrame =
-    bucketed(docs, idCol, textCol, numBuckets)
+      idCol: String = "doc_id", textCol: String = "text"): DataFrame =
+    bucketed(docs, idCol, textCol)
       .join(broadcast(model), Seq("bucket"))
       .groupBy(idCol)
       .agg(count(lit(1)).as("n_grams"), sum(col("lr")).as("__lw"))
@@ -148,132 +140,85 @@ object Dsir {
     * instead of dsirModel's two — one fewer full-corpus explode+hash
     * scan, byte-identical counts. */
   def dsirWeights(docs: DataFrame, targetWhere: Column,
-      idCol: String = "doc_id", textCol: String = "text",
-      numBuckets: Int = DefaultBuckets): DataFrame =
-    dsirWeightsWithN(docs,
-      dsirModelSubset(docs, targetWhere, textCol, idCol, numBuckets),
-      idCol, textCol, numBuckets)
+      idCol: String = "doc_id", textCol: String = "text"): DataFrame =
+    dsirWeightsWith(docs, dsirModelSubset(docs, targetWhere, textCol, idCol),
+      idCol, textCol)
 
   /** Fit when the target is a SUBSET of the raw corpus (the common
     * in-query shape): ONE gram pass with a conditional target count
     * instead of [[dsirModel]]'s two — byte-identical counts, one fewer
     * full-corpus explode+hash scan. */
   def dsirModelSubset(raw: DataFrame, targetWhere: Column,
-      textCol: String = "text", idCol: String = "doc_id",
-      numBuckets: Int = DefaultBuckets): DataFrame = {
-    require(65536 % numBuckets == 0,
-      s"numBuckets=$numBuckets must divide 2^16 for an unbiased bucket mod")
-    // the ≤numBuckets-row count table feeds both the ratio join and the
+      textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
+    // the ≤Buckets-row count table feeds both the ratio join and the
     // totals — pin it so the corpus gram pass runs once (the lmBigramModel
     // n12 precedent; the cache is bucket-bounded, never corpus-sized)
     val counts = Pins.cache(raw
       .select(targetWhere.as("__t"),
         explode(graft.expr.DsirGramBuckets.dsirGramBuckets(
-          lower(trim(col(textCol))), numBuckets)).as("bucket"))
+          lower(trim(col(textCol))), Buckets)).as("bucket"))
       .groupBy("bucket")
       .agg(count(lit(1)).as("nr"),
         sum(when(col("__t"), 1L).otherwise(0L)).as("nt")))
     modelOfCounts(raw.sparkSession,
-      counts.select("bucket", "nr"), counts.select("bucket", "nt"),
-      numBuckets)
+      counts.select("bucket", "nr"), counts.select("bucket", "nt"))
   }
 
-  /** The artifact's bucket-space record: serving with a numBuckets
-    * different from the build's silently drops grams (larger) or scores
-    * against wrong ratios (smaller) — plausible-looking garbage. Every
-    * build persists a 1-row meta table; every serve/append validates the
-    * caller's value against it and fails fast on mismatch. */
-  private def meta(spark: SparkSession, numBuckets: Int): DataFrame =
-    spark.range(1).select(lit(numBuckets).as("num_buckets"))
-
-  private def requireMeta(spark: SparkSession, dir: String,
-      numBuckets: Int): Unit = {
-    val m = Models.load(spark, dir, "meta").head().getAs[Int]("num_buckets")
-    require(m == numBuckets,
-      s"numBuckets=$numBuckets does not match the artifact's bucket space " +
-        s"($m) persisted at $dir/meta — rebuild or pass the artifact's value")
-  }
-
-  /** Persist the fitted model (one parquet table, numBuckets rows, plus
-    * the 1-row bucket-space meta). Deterministic fit ⇒ byte-identical on
-    * rebuild, so served weights share the fit form's oracle. */
+  /** Persist the fitted model (one parquet table, Buckets rows).
+    * Deterministic fit ⇒ byte-identical on rebuild, so served weights
+    * share the fit form's oracle. */
   def dsirBuild(raw: DataFrame, target: DataFrame, dir: String,
-      textCol: String = "text", idCol: String = "doc_id",
-      numBuckets: Int = DefaultBuckets): Unit = {
-    Models.save(raw.sparkSession, dir)(_.write("logratio",
-      dsirModel(raw, target, textCol, idCol, numBuckets))
-      .write("meta", meta(raw.sparkSession, numBuckets)))
-  }
+      textCol: String = "text", idCol: String = "doc_id"): Unit =
+    Models.save(raw.sparkSession, dir)(
+      _.write("logratio", dsirModel(raw, target, textCol, idCol)))
 
   /** Weight a corpus against a PERSISTED model — zero fitting at serve
-    * time (the daily-crawl selection pass). Fails fast if `numBuckets`
-    * disagrees with the artifact's persisted bucket space. */
+    * time (the daily-crawl selection pass). */
   def dsirServe(spark: SparkSession, dir: String, docs: DataFrame,
-      idCol: String = "doc_id", textCol: String = "text",
-      numBuckets: Int = DefaultBuckets): DataFrame = {
-    requireMeta(spark, dir, numBuckets)
-    dsirWeightsWithN(docs, Models.load(spark, dir, "logratio"), idCol,
-      textCol, numBuckets)
-  }
+      idCol: String = "doc_id", textCol: String = "text"): DataFrame =
+    dsirWeightsWith(docs, Models.load(spark, dir, "logratio"), idCol, textCol)
 
   /** COUNT-form artifact: persist the raw/target bucket-count tables
     * instead of precomputed log-ratios. Counts are ADDITIVE — the raw
     * side tracks a growing crawl via [[dsirAppendRaw]] with no refit
     * scan of old data — and the log-ratio model rebuilds from them at
-    * load time as a numBuckets-row transform (free). This is the DSIR
+    * load time as a Buckets-row transform (free). This is the DSIR
     * twin of the dedup index's append lifecycle. */
   def dsirBuildCounts(raw: DataFrame, target: DataFrame, dir: String,
-      textCol: String = "text", idCol: String = "doc_id",
-      numBuckets: Int = DefaultBuckets): Unit = {
-    require(65536 % numBuckets == 0,
-      s"numBuckets=$numBuckets must divide 2^16 for an unbiased bucket mod")
-    Models.save(raw.sparkSession, dir)(_.write("raw_counts",
-      bucketCounts(raw, idCol, textCol, numBuckets, "nr"))
-      .write("target_counts",
-        bucketCounts(target, idCol, textCol, numBuckets, "nt"))
-      .write("meta", meta(raw.sparkSession, numBuckets)))
-  }
+      textCol: String = "text", idCol: String = "doc_id"): Unit =
+    Models.save(raw.sparkSession, dir)(
+      _.write("raw_counts", bucketCounts(raw, idCol, textCol, "nr"))
+        .write("target_counts", bucketCounts(target, idCol, textCol, "nt")))
 
   /** Fold a new raw batch's bucket counts into the count-form artifact —
     * scan the BATCH only; the loaded table may then hold several rows
-    * per bucket, summed at load. Validates the bucket space against the
-    * artifact's meta (an append in a different space would corrupt every
-    * later serve). */
+    * per bucket, summed at load. */
   def dsirAppendRaw(newRaw: DataFrame, dir: String,
-      textCol: String = "text", idCol: String = "doc_id",
-      numBuckets: Int = DefaultBuckets): Unit = {
-    requireMeta(newRaw.sparkSession, dir, numBuckets)
-    Models.append(newRaw.sparkSession, dir)(_.write("raw_counts",
-      bucketCounts(newRaw, idCol, textCol, numBuckets, "nr")))
-  }
+      textCol: String = "text", idCol: String = "doc_id"): Unit =
+    Models.append(newRaw.sparkSession, dir)(
+      _.write("raw_counts", bucketCounts(newRaw, idCol, textCol, "nr")))
 
   /** Compact the count-form artifact: fold the appended per-bucket rows
     * to one row per bucket (the exact integer sum serve performs at
     * load). Serve-after-compact is bit-identical; what it buys is the
     * load-time fold shrinking from O(batches·buckets) rows back to the
-    * numBuckets bound. */
-  def dsirCompactCounts(spark: SparkSession, dir: String,
-      numBuckets: Int = DefaultBuckets): Unit = {
-    requireMeta(spark, dir, numBuckets)
+    * Buckets bound. */
+  def dsirCompactCounts(spark: SparkSession, dir: String): Unit =
     Models.rewrite(spark, dir)(_.update("raw_counts")(
       _.groupBy("bucket").agg(sum(col("nr")).cast("long").as("nr"))))
-  }
 
   /** Weight a corpus against the COUNT-form artifact: sum the (possibly
     * appended) per-bucket count rows, rebuild the log-ratio model (a
-    * numBuckets-row job), and serve. Bit-identical to a full refit on
+    * Buckets-row job), and serve. Bit-identical to a full refit on
     * the same cumulative corpus — exact decimal/count arithmetic all the
     * way down. */
   def dsirServeCounts(spark: SparkSession, dir: String, docs: DataFrame,
-      idCol: String = "doc_id", textCol: String = "text",
-      numBuckets: Int = DefaultBuckets): DataFrame = {
-    requireMeta(spark, dir, numBuckets)
+      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     val rawC = Models.load(spark, dir, "raw_counts")
       .groupBy("bucket").agg(sum(col("nr")).as("nr"))
     val tgtC = Models.load(spark, dir, "target_counts")
       .groupBy("bucket").agg(sum(col("nt")).as("nt"))
-    dsirWeightsWithN(docs, modelOfCounts(spark, rawC, tgtC, numBuckets),
-      idCol, textCol, numBuckets)
+    dsirWeightsWith(docs, modelOfCounts(spark, rawC, tgtC), idCol, textCol)
   }
 
   /** Gumbel top-k selection over fitted weights: key = logw + g where

@@ -27,7 +27,9 @@ import org.json4s.jackson.Serialization
   * An artifact is a directory `dir` of named tables (`dir/<table>/`,
   * Hive-partitioned where written with `partitionBy`) plus one manifest,
   * `dir/_manifest.<g>`: generation `g`'s data files, schema and partition
-  * columns of every table, and the batch-id history [[genStats]] reads.
+  * columns of every table, the batch-id history [[genStats]] reads, and
+  * the build parameters a server must reuse ([[param]]: a sketch's
+  * geometry, a filter's bit count).
   * The commit contract — a hand-built table-format commit (Delta Lake's
   * idea, without its log) on a file system whose rename is atomic:
   *  - ONE commit per operator call. [[save]] (a build), [[append]] and
@@ -52,8 +54,8 @@ import org.json4s.jackson.Serialization
   *    An append deletes none, so the reader keeps serving the older
   *    generation; after a rewrite's cleanup, a scan of a pre-rewrite
   *    DataFrame fails rather than mix generations.
-  * [[load]] and [[genStats]] read the manifest only: no listing, no
-  * schema-inference job.
+  * [[load]], [[genStats]] and [[param]] read the manifest only: no
+  * listing, no schema-inference job.
   */
 object Models {
 
@@ -66,7 +68,7 @@ object Models {
   /** One committed generation: a build's history is (-1), an append with
     * an id adds it, a rewrite folds it to its last id. */
   private final case class Generation(gen: Long, batches: List[Long],
-      tables: Map[String, Table])
+      tables: Map[String, Table], params: Map[String, Int])
 
   private implicit val formats: Formats = DefaultFormats
   private val ManifestName = """_manifest\.(\d+)""".r
@@ -77,6 +79,7 @@ object Models {
   final class Commit private[Models] (spark: SparkSession, fs: FileSystem,
       root: Path, prior: Generation, appending: Boolean) {
     @volatile private[Models] var tables = Map.empty[String, Table]
+    @volatile private[Models] var params = Map.empty[String, Int]
     @volatile private var staged = Map.empty[String, Table]
     private def out(table: String) = new Path(stage(root, prior.gen + 1), table)
 
@@ -102,6 +105,13 @@ object Models {
     def update(table: String)(f: DataFrame => DataFrame): Commit = {
       val t = prior.tables(table)
       write(table, f(relation(spark, t, new Path(root, table), t.files.keys)))
+    }
+
+    /** Record the build parameter `name` = `value` (set by a [[save]];
+      * later commits carry it forward), read back by [[Models.param]]. */
+    def param(name: String, value: Int): Commit = {
+      synchronized(params += name -> value)
+      this
     }
 
     /** The rows this commit staged for `table`, so a later table derives
@@ -148,6 +158,13 @@ object Models {
       .toDF("n_generations", "last_batch_id")
   }
 
+  /** Build parameter `name` of the artifact at `dir`, as its build
+    * recorded it ([[Commit.param]]) — read from the manifest, no job. */
+  def param(spark: SparkSession, dir: String, name: String): Int = {
+    val g = committed(spark, dir)._3
+    g.params.getOrElse(name, sys.error(s"$dir records no parameter $name"))
+  }
+
   /** `table` of the artifact at `dir`: exactly its committed files with
     * the recorded schema — no listing, no Spark job. */
   def load(spark: SparkSession, dir: String, table: String): DataFrame = {
@@ -164,12 +181,12 @@ object Models {
   private def commit(spark: SparkSession, dir: String, appending: Boolean,
       body: Commit => Unit)(history: List[Long] => List[Long]): Unit = {
     val (fs, root, last) = newest(spark, dir)
-    val prior = last.getOrElse(Generation(0L, Nil, Map.empty))
+    val prior = last.getOrElse(Generation(0L, Nil, Map.empty, Map.empty))
     settle(fs, root, prior) // a crashed commit's cleanup or residue
     val c = new Commit(spark, fs, root, prior, appending)
     body(c)
     val next = Generation(prior.gen + 1, history(prior.batches),
-      prior.tables ++ c.tables)
+      prior.tables ++ c.tables, prior.params ++ c.params)
     val tmp = new Path(root, "_manifest.tmp")
     val out = fs.create(tmp, true)
     try out.write(Serialization.write(next).getBytes(UTF_8)) finally out.close()

@@ -77,12 +77,19 @@ object Neutral {
 
   // ---------------------------------------------------------------- MinHash
 
+  /** The MinHash geometry of every pipeline below and of its oracle twin:
+    * word 3-gram shingles, and the 64-lane signature cut into 16 bands of
+    * 4 rows. A persisted dedup index stores band keys, so build and serve
+    * must agree on the cut; as constants they cannot differ. */
+  private val ShingleN = 3
+  private val Bands = 16
+  private val Rows = 4
+
   /** (cached) md5 signature table: (doc_id, hs, sig). Cached because every
     * consumer fans out over it (banding sides + verify re-attach joins) —
     * uncached, the shingle + signature kernels would re-execute per branch
     * (released by the per-query clearState). */
-  private def sigTable(docs: DataFrame, textCol: String,
-      shingleN: Int): DataFrame =
+  private def sigTable(docs: DataFrame, textCol: String): DataFrame =
     // fan BEFORE the cache: the bench corpora scan as ONE parquet row
     // group, so an unfanned cache holds one partition and every consumer
     // stage (banding sides, verify re-attach, edge build) runs 1-task —
@@ -90,8 +97,8 @@ object Neutral {
     // profile
     ScaleOps.fanOutCompute(docs.select(col("doc_id"), col(textCol)))
       .select(col("doc_id"),
-        graft.expr.ShingleStrings.shingleStrings(col(textCol), shingleN).as("s"),
-        graft.expr.ShingleHashes.shingleHashes(col(textCol), shingleN).as("hs"))
+        graft.expr.ShingleStrings.shingleStrings(col(textCol), ShingleN).as("s"),
+        graft.expr.ShingleHashes.shingleHashes(col(textCol), ShingleN).as("hs"))
       .filter(size(col("s")) > 0)
       .withColumn("sig", graft.expr.Md5MinHashSig.minHashSig(col("s")))
       .transform(Pins.cache)
@@ -100,11 +107,11 @@ object Neutral {
     * expression references sig once — 16 separate per-band columns would
     * let CollapseProject inline, and so re-evaluate, the signature kernel
     * 16x per row. */
-  private def bandedOf(sh: DataFrame, bands: Int, rows: Int): DataFrame =
+  private def bandedOf(sh: DataFrame): DataFrame =
     sh.select(col("doc_id"),
       posexplode(expr(
-        s"transform(sequence(0, ${bands - 1}), b -> " +
-          s"array_join(transform(slice(sig, b * $rows + 1, $rows), x -> cast(x as string)), ','))"))
+        s"transform(sequence(0, ${Bands - 1}), b -> " +
+          s"array_join(transform(slice(sig, b * $Rows + 1, $Rows), x -> cast(x as string)), ','))"))
         .as(Seq("band", "bucket")))
 
   /** MinHash-LSH candidate pairs with md5-seeded permutations: one row
@@ -134,18 +141,16 @@ object Neutral {
     * results are bit-identical. Default off: the oracle reproduces the
     * uncapped candidate set. */
   def minHashCandidates(docs: DataFrame, textCol: String = "text",
-      shingleN: Int = 3, bands: Int = 16, rows: Int = 4,
       precomputedSig: Option[DataFrame] = None,
       starCap: Option[Int] = None): DataFrame = {
-    require(bands * rows == 64, "bands*rows must equal the 64-lane signature")
     // precomputedSig: a sigTable already restricted to `docs` (signatures
     // are a pure function of text, so reuse is result-identical) — lets
     // composite pipelines skip re-hashing every shingle per stage
-    val sh = precomputedSig.getOrElse(sigTable(docs, textCol, shingleN))
+    val sh = precomputedSig.getOrElse(sigTable(docs, textCol))
     // candidate pairs dedup on narrow (doc_a, doc_b) keys before the
     // shingle-hash arrays re-attach for exact scoring, so no array ever
     // rides the bucket shuffle (the ngram pipeline's PPJoin shape)
-    val banded = bandedOf(sh, bands, rows)
+    val banded = bandedOf(sh)
     val cand = starCap match {
       case Some(cap) =>
         import org.apache.spark.sql.expressions.Window
@@ -186,9 +191,8 @@ object Neutral {
     * `hits(doc_a, doc_b)` — compose with a recursive closure for
     * component oracles. */
   private[graft] def skewSafeEdgeCtes(docsRel: String, minJaccard: Double,
-      starCap: Int, shingleN: Int = 3, bands: Int = 16,
-      rows: Int = 4): String =
-    s"""${bandedCtes(docsRel, "", shingleN, bands, rows)},
+      starCap: Int): String =
+    s"""${bandedCtes(docsRel, "")},
        |bsz AS (
        |  SELECT band, bucket, count(*) AS bsize, min(doc_id) AS rep
        |  FROM banded GROUP BY band, bucket
@@ -225,23 +229,20 @@ object Neutral {
     * shuffles a day of data against the corpus's precomputed (and in
     * practice persisted) signature table. */
   def dedupAgainst(corpus: DataFrame, incoming: DataFrame,
-      textCol: String = "text", minJaccard: Double = 0.8,
-      shingleN: Int = 3, bands: Int = 16, rows: Int = 4): DataFrame =
-    admitWithSig(corpus, incoming, textCol, minJaccard, shingleN, bands, rows)._1
+      textCol: String = "text", minJaccard: Double = 0.8): DataFrame =
+    admitWithSig(corpus, incoming, textCol, minJaccard)._1
 
   /** [[dedupAgainst]] body, also returning the incoming-side signature
     * table (covers every admitted doc) so composite pipelines
     * ([[ingestE2e]]) can reuse it instead of re-hashing each shingle. */
   private def admitWithSig(corpus: DataFrame, incoming: DataFrame,
-      textCol: String, minJaccard: Double, shingleN: Int, bands: Int,
-      rows: Int): (DataFrame, DataFrame) = {
-    require(bands * rows == 64, "bands*rows must equal the 64-lane signature")
-    val shC = sigTable(corpus, textCol, shingleN)
+      textCol: String, minJaccard: Double): (DataFrame, DataFrame) = {
+    val shC = sigTable(corpus, textCol)
     admitAgainst(incoming,
       corpus.select(sha2(col(textCol), 256).as("sha")).distinct(),
-      bandedOf(shC, bands, rows),
+      bandedOf(shC),
       shC.select(col("doc_id"), col("hs")),
-      textCol, minJaccard, shingleN, bands, rows)
+      textCol, minJaccard)
   }
 
   /** The admission core, parameterized by the three corpus-side tables —
@@ -253,12 +254,11 @@ object Neutral {
     * candidates only) — never the corpus text. */
   private def admitAgainst(incoming: DataFrame, corpusSha: DataFrame,
       corBanded: DataFrame, corHs: DataFrame, textCol: String,
-      minJaccard: Double, shingleN: Int, bands: Int,
-      rows: Int): (DataFrame, DataFrame) = {
+      minJaccard: Double): (DataFrame, DataFrame) = {
     val cleanExact = incoming.join(corpusSha,
       sha2(col(textCol), 256) === col("sha"), "left_anti")
-    val shI = sigTable(cleanExact, textCol, shingleN)
-    val cand = bandedOf(shI, bands, rows)
+    val shI = sigTable(cleanExact, textCol)
+    val cand = bandedOf(shI)
       .select(col("band"), col("bucket"), col("doc_id").as("inc_id"))
       .join(corBanded
         .select(col("band"), col("bucket"), col("doc_id").as("cor_id")),
@@ -289,20 +289,17 @@ object Neutral {
     * signatures) — the same artifact shape every production dedup service
     * (e.g. a crawl-frontier seen-set) persists. */
   def dedupIndexBuild(corpus: DataFrame, dir: String,
-      textCol: String = "text", shingleN: Int = 3, bands: Int = 16,
-      rows: Int = 4): Unit = Pins.scoped {
-    require(bands * rows == 64, "bands*rows must equal the 64-lane signature")
-    Models.save(corpus.sparkSession, dir)(
-      indexTables(corpus, textCol, shingleN, bands, rows))
+      textCol: String = "text"): Unit = Pins.scoped {
+    Models.save(corpus.sparkSession, dir)(indexTables(corpus, textCol))
   }
 
   /** The admission index's three tables of `docs`, staged in `c`. */
-  private def indexTables(docs: DataFrame, textCol: String, shingleN: Int,
-      bands: Int, rows: Int)(c: Models.Commit): Unit = {
+  private def indexTables(docs: DataFrame, textCol: String)(
+      c: Models.Commit): Unit = {
     c.write("sha", docs.select(sha2(col(textCol), 256).as("sha")).distinct())
-    val sh = sigTable(docs, textCol, shingleN)
+    val sh = sigTable(docs, textCol)
     c.write("hs", sh.select(col("doc_id"), col("hs")))
-    c.write("banded", bandedOf(sh, bands, rows))
+    c.write("banded", bandedOf(sh))
   }
 
   /** [[dedupAgainst]] SERVED from the persisted index at `dir`
@@ -313,22 +310,17 @@ object Neutral {
     * corpus. */
   def dedupAgainstServed(spark: org.apache.spark.sql.SparkSession,
       dir: String, incoming: DataFrame, textCol: String = "text",
-      minJaccard: Double = 0.8, shingleN: Int = 3, bands: Int = 16,
-      rows: Int = 4): DataFrame =
-    admitServedWithSig(spark, dir, incoming, textCol, minJaccard, shingleN,
-      bands, rows)._1
+      minJaccard: Double = 0.8): DataFrame =
+    admitServedWithSig(spark, dir, incoming, textCol, minJaccard)._1
 
   private def admitServedWithSig(spark: org.apache.spark.sql.SparkSession,
       dir: String, incoming: DataFrame, textCol: String,
-      minJaccard: Double, shingleN: Int, bands: Int,
-      rows: Int): (DataFrame, DataFrame) = {
-    require(bands * rows == 64, "bands*rows must equal the 64-lane signature")
+      minJaccard: Double): (DataFrame, DataFrame) =
     admitAgainst(incoming,
       Models.load(spark, dir, "sha"),
       Models.load(spark, dir, "banded"),
       Models.load(spark, dir, "hs"),
-      textCol, minJaccard, shingleN, bands, rows)
-  }
+      textCol, minJaccard)
 
   /** Append one admitted batch's digests/signatures/buckets to the index —
     * the staleness contract: an index built at time T knows nothing about
@@ -346,21 +338,18 @@ object Neutral {
     * deletes ([[admitAndAppend]] handles this).
     * Duplicate digests across appended batches are harmless — admission
     * consumes these tables via anti/semi joins, which ignore key
-    * multiplicity. A periodic [[dedupIndexBuild]] rebuild compacts the
-    * appended deltas (rebuild cadence is an ops knob: the index only
+    * multiplicity. [[dedupIndexCompact]] folds the appended deltas in
+    * place (compaction cadence is the caller's choice: the index only
     * grows, it never goes stale in the correctness sense as long as every
     * admitted batch is appended). */
   def dedupIndexAppend(admitted: DataFrame, dir: String,
-      textCol: String = "text", shingleN: Int = 3, bands: Int = 16,
-      rows: Int = 4, batchId: Long): Unit = Pins.scoped {
-    require(bands * rows == 64, "bands*rows must equal the 64-lane signature")
+      textCol: String = "text", batchId: Long): Unit = Pins.scoped {
     Models.append(admitted.sparkSession, dir, Some(batchId))(
-      indexTables(admitted, textCol, shingleN, bands, rows))
+      indexTables(admitted, textCol))
   }
 
-  /** Compact the admission index's appended generations (the in-place
-    * twin of the "periodic dedupIndexBuild rebuild" the append scaladoc
-    * promises, WITHOUT re-reading corpus text): `sha` rewrites as its
+  /** Compact the admission index's appended generations in place,
+    * WITHOUT re-reading corpus text: `sha` rewrites as its
     * distinct set (per-batch appends are distinct within a batch but a
     * text admitted under different doc ids across batches lands its
     * digest twice — consumers are anti/semi joins, so multiplicity never
@@ -436,28 +425,22 @@ object Neutral {
     // mBits is part of the artifact, not a caller convention: probing with
     // a different position space makes every probe miss and silently
     // admits true duplicates — breaking the no-false-negative guarantee.
-    // Serve/append read it back from the 1-row meta table.
+    // Serve/append read it back from the manifest.
     Models.save(corpus.sparkSession, dir)(_.write("bloom",
       corpus.select(explode(array(bloomPosCols(textCol, mBits): _*)).as("pos"))
         .distinct())
-      .write("bloom_meta",
-        corpus.sparkSession.range(1).select(lit(mBits).as("m_bits"))))
+      .param("m_bits", mBits))
   }
-
-  /** The artifact's position-space, read back from the build's meta. */
-  private def bloomMBits(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Int =
-    Models.load(spark, dir, "bloom_meta").head().getAs[Int]("m_bits")
 
   /** Admission annotation against the persisted Bloom artifact: each
     * incoming doc's k positions probe the loaded set (one broadcast
     * join); `admitted` = at least one position unoccupied. Map-only over
     * the batch + one broadcast + per-doc partial agg — no corpus-side
     * anything at admission time. The position space comes from the
-    * artifact's meta table, never from the caller. */
+    * artifact's manifest, never from the caller. */
   def admitBloomServed(spark: org.apache.spark.sql.SparkSession, dir: String,
       incoming: DataFrame, textCol: String = "text"): DataFrame = {
-    val mBits = bloomMBits(spark, dir)
+    val mBits = Models.param(spark, dir, "m_bits")
     val occupied = Models.load(spark, dir, "bloom")
       .withColumn("__hit", lit(1L))
     incoming
@@ -474,10 +457,10 @@ object Neutral {
     * loop's seen-set update ([[dedupIndexAppend]]'s cheap sibling: the
     * append is ≤ k·|batch| position rows, and the artifact stays bounded
     * by mBits regardless of how many batches accumulate). The position
-    * space comes from the artifact's meta table. */
+    * space comes from the artifact's manifest. */
   def bloomIndexAppend(admitted: DataFrame, dir: String,
       textCol: String = "text"): Unit = {
-    val mBits = bloomMBits(admitted.sparkSession, dir)
+    val mBits = Models.param(admitted.sparkSession, dir, "m_bits")
     Models.append(admitted.sparkSession, dir)(_.write("bloom",
       admitted.select(explode(array(bloomPosCols(textCol, mBits): _*)).as("pos"))
         .distinct()))
@@ -524,7 +507,7 @@ object Neutral {
       incoming: DataFrame, textCol: String = "text",
       minJaccard: Double = 0.8): DataFrame = {
     val (admitted, shI) =
-      admitServedWithSig(spark, dir, incoming, textCol, minJaccard, 3, 16, 4)
+      admitServedWithSig(spark, dir, incoming, textCol, minJaccard)
     dedupCorpusClustered(admitted, textCol, minJaccard,
       precomputedSig = Some(shI))
   }
@@ -551,12 +534,9 @@ object Neutral {
        |FROM h ORDER BY doc_id""".stripMargin
 
   /** DuckDB twin of [[dedupAgainst]] for corpus/incoming slices of the
-    * documents table defined by SQL predicates. Takes the same
-    * shingleN/bands/rows knobs as the Scala twin so non-default callers
-    * cannot silently diverge from the oracle. */
+    * documents table defined by SQL predicates. */
   def dedupAgainstOracleSql(corpusPred: String, incomingPred: String,
-      minJaccard: Double, shingleN: Int = 3, bands: Int = 16,
-      rows: Int = 4): String =
+      minJaccard: Double): String =
     s"""WITH corpus AS (SELECT * FROM documents WHERE $corpusPred),
        |inc AS (SELECT * FROM documents WHERE $incomingPred),
        |cs AS (SELECT DISTINCT sha256(text) AS sha FROM corpus),
@@ -564,8 +544,8 @@ object Neutral {
        |  SELECT i.* FROM inc i LEFT JOIN cs ON sha256(i.text) = cs.sha
        |  WHERE cs.sha IS NULL
        |),
-       |${bandedCtes("ce", "_i", shingleN, bands, rows)},
-       |${bandedCtes("corpus", "_c", shingleN, bands, rows)},
+       |${bandedCtes("ce", "_i")},
+       |${bandedCtes("corpus", "_c")},
        |cand AS (
        |  SELECT DISTINCT a.doc_id AS inc_id, b.doc_id AS cor_id
        |  FROM banded_i a JOIN banded_c b USING (band, bucket)
@@ -585,26 +565,21 @@ object Neutral {
   /** Oracle CTE chain `tok$p -> shn$p -> hv$p -> sig$p -> banded$p` over
     * the relation `docsRel` (must expose doc_id, text): the md5-seeded
     * MinHash pipeline up to banded bucket rows, CTE names suffixed `$p`
-    * (empty for the single-relation queries). Parameterized by the SAME
-    * shingleN/bands/rows knobs as the Scala twins (minHashCandidates,
-    * dedupAgainst) so a non-default caller gets a matching oracle instead
-    * of a silent divergence. */
-  private def bandedCtes(docsRel: String, p: String, shingleN: Int = 3,
-      bands: Int = 16, rows: Int = 4): String = {
-    require(shingleN >= 1, "shingleN must be >= 1")
-    require(bands * rows == 64, "bands*rows must equal the 64-lane signature")
+    * (empty for the single-relation queries), at the Scala twins'
+    * ShingleN/Bands/Rows geometry. */
+  private def bandedCtes(docsRel: String, p: String): String = {
     val lanes = laneConsts
       .map { case (a, b) => s"list_min(list_transform(h, x -> ($a * x + $b) % $P))" }
       .mkString("[\n    ", ",\n    ", "]")
-    val gram = (0 until shingleN).map(o => s"w[i+$o]").mkString(" || ' ' || ")
+    val gram = (0 until ShingleN).map(o => s"w[i+$o]").mkString(" || ' ' || ")
     s"""tok$p AS (
        |  SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS w FROM $docsRel
        |),
        |shn$p AS (
        |  SELECT doc_id,
-       |         list_distinct(list_transform(generate_series(1, len(w) - ${shingleN - 1}),
+       |         list_distinct(list_transform(generate_series(1, len(w) - ${ShingleN - 1}),
        |           i -> $gram)) AS s
-       |  FROM tok$p WHERE len(w) >= $shingleN
+       |  FROM tok$p WHERE len(w) >= $ShingleN
        |),
        |hv$p AS (
        |  SELECT doc_id, s,
@@ -615,9 +590,9 @@ object Neutral {
        |banded$p AS (
        |  SELECT doc_id, band,
        |         array_to_string(list_transform(
-       |           list_slice(sg, band * $rows + 1, band * $rows + $rows),
+       |           list_slice(sg, band * $Rows + 1, band * $Rows + $Rows),
        |           x -> CAST(x AS VARCHAR)), ',') AS bucket
-       |  FROM sig$p, (SELECT unnest(generate_series(0, ${bands - 1})) AS band) bs$p
+       |  FROM sig$p, (SELECT unnest(generate_series(0, ${Bands - 1})) AS band) bs$p
        |)""".stripMargin
   }
 
@@ -625,9 +600,9 @@ object Neutral {
     * `minJaccard` within one relation. Jaccard verification runs on the
     * string shingle sets (equals Jaccard on xxhash64'd shingles up to
     * negligible collision probability). */
-  private def minHashCandidateCtes(docsRel: String, minJaccard: Double,
-      shingleN: Int = 3, bands: Int = 16, rows: Int = 4): String =
-    s"""${bandedCtes(docsRel, "", shingleN, bands, rows)},
+  private def minHashCandidateCtes(docsRel: String,
+      minJaccard: Double): String =
+    s"""${bandedCtes(docsRel, "")},
        |cand AS (
        |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
        |  FROM banded a JOIN banded b USING (band, bucket)
@@ -648,9 +623,8 @@ object Neutral {
       minJaccard: Double): String = minHashCandidateCtes(rel, minJaccard)
 
   /** DuckDB twin of the md5-seeded MinHash candidate-count query. */
-  def minHashOracleSql(minJaccard: Double, shingleN: Int = 3,
-      bands: Int = 16, rows: Int = 4): String =
-    s"""WITH ${minHashCandidateCtes("documents", minJaccard, shingleN, bands, rows)},
+  def minHashOracleSql(minJaccard: Double): String =
+    s"""WITH ${minHashCandidateCtes("documents", minJaccard)},
        |cnt AS (
        |  SELECT doc_id, count(*) AS n_candidates FROM (
        |    SELECT doc_a AS doc_id FROM hits UNION ALL SELECT doc_b FROM hits
@@ -826,13 +800,11 @@ object Neutral {
     * nature, so its signature/banded tables broadcast at scale; the
     * corpus side is the same per-row signature map as every banded op. */
   def fuzzyDecontaminate(docs: DataFrame, benchmark: DataFrame,
-      textCol: String = "text", minJaccard: Double = 0.8,
-      shingleN: Int = 3, bands: Int = 16, rows: Int = 4): DataFrame = {
-    require(bands * rows == 64, "bands*rows must equal the 64-lane signature")
-    val shD = sigTable(docs, textCol, shingleN)
-    val shB = sigTable(benchmark, textCol, shingleN)
-    val cand = bandedOf(shD, bands, rows)
-      .join(bandedOf(shB, bands, rows)
+      textCol: String = "text", minJaccard: Double = 0.8): DataFrame = {
+    val shD = sigTable(docs, textCol)
+    val shB = sigTable(benchmark, textCol)
+    val cand = bandedOf(shD)
+      .join(bandedOf(shB)
           .select(col("band"), col("bucket"), col("doc_id").as("bench_id")),
         Seq("band", "bucket"))
       .filter(col("doc_id") =!= col("bench_id"))
@@ -853,11 +825,11 @@ object Neutral {
 
   /** DuckDB twin of [[fuzzyDecontaminate]] for a benchmark slice of the
     * documents table defined by a SQL predicate. */
-  def fuzzyDecontaminateOracleSql(benchPred: String, minJaccard: Double,
-      shingleN: Int = 3, bands: Int = 16, rows: Int = 4): String =
+  def fuzzyDecontaminateOracleSql(benchPred: String,
+      minJaccard: Double): String =
     s"""WITH bench AS (SELECT * FROM documents WHERE $benchPred),
-       |${bandedCtes("documents", "", shingleN, bands, rows)},
-       |${bandedCtes("bench", "_b", shingleN, bands, rows)},
+       |${bandedCtes("documents", "")},
+       |${bandedCtes("bench", "_b")},
        |cand AS (
        |  SELECT DISTINCT a.doc_id, b.doc_id AS bench_id
        |  FROM banded a JOIN banded_b b USING (band, bucket)
@@ -939,7 +911,7 @@ object Neutral {
     // stay unpinned: no valid measurement says pinning them pays
     // (SCALING.md, ingest stage breakdown)
     val (admitted, shI) =
-      admitWithSig(corpus, incoming, textCol, minJaccard, 3, 16, 4)
+      admitWithSig(corpus, incoming, textCol, minJaccard)
     // stage 2 reuses stage 1's cached incoming-side signatures (shI covers
     // every admitted doc) — the chain hashes each shingle exactly once
     dedupCorpusClustered(admitted, textCol, minJaccard,

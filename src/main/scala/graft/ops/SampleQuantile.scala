@@ -73,20 +73,13 @@ object SampleQuantile {
 
   // ------------------------------------------------- persisted artifact
 
-  /** Build and persist: sample rows under $dir/sample plus a 1-row meta
-    * table pinning k — read back by [[append]]/[[serveSketch]], never
-    * re-supplied by the caller (the parameter-drift hazard closed the
-    * same way as the CMS geometry / bloom mBits / DSIR buckets). */
+  /** Build and persist: sample rows under $dir/sample, with k recorded
+    * in the manifest — read back by [[append]]/[[serveSketch]], never
+    * re-supplied by the caller (as the CMS geometry and Bloom mBits). */
   def build(df: DataFrame, dir: String, groupCol: String, idCol: String,
-      valueCol: String, k: Int = DefaultK): Unit = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    Models.save(spark, dir)(_.write("sample",
-      sketchOf(df, groupCol, idCol, valueCol, k)).write("meta", Seq(k).toDF("k")))
-  }
-
-  private def kOf(spark: SparkSession, dir: String): Int =
-    Models.load(spark, dir, "meta").head().getInt(0)
+      valueCol: String, k: Int = DefaultK): Unit =
+    Models.save(df.sparkSession, dir)(_.write("sample",
+      sketchOf(df, groupCol, idCol, valueCol, k)).param("k", k))
 
   /** Fold a delta batch into the artifact: append the BATCH's own
     * bottom-k rows (scans only the batch). Appended rows are sample
@@ -95,7 +88,7 @@ object SampleQuantile {
     * foreachBatch recovery) is absorbed by the serve-side (hv, v) dedup. */
   def append(batch: DataFrame, dir: String, groupCol: String,
       idCol: String, valueCol: String): Unit = {
-    val k = kOf(batch.sparkSession, dir)
+    val k = Models.param(batch.sparkSession, dir, "k")
     Models.append(batch.sparkSession, dir)(
       _.write("sample", sketchOf(batch, groupCol, idCol, valueCol, k)))
   }
@@ -104,7 +97,8 @@ object SampleQuantile {
     * the groups×k×batches artifact only — the corpus never re-scans. */
   def serveSketch(spark: SparkSession, dir: String,
       groupCol: String): DataFrame =
-    bottomK(Models.load(spark, dir, "sample"), kOf(spark, dir), groupCol)
+    bottomK(Models.load(spark, dir, "sample"), Models.param(spark, dir, "k"),
+      groupCol)
 
   private def bottomK(sample: DataFrame, k: Int,
       groupCol: String): DataFrame = {
@@ -125,7 +119,7 @@ object SampleQuantile {
   /** Rewrite the candidate table as the folded bottom-k (serve results
     * unchanged — the fold is the serve's own first step). */
   def compact(spark: SparkSession, dir: String, groupCol: String): Unit = {
-    val k = kOf(spark, dir)
+    val k = Models.param(spark, dir, "k")
     Models.rewrite(spark, dir)(_.update("sample")(bottomK(_, k, groupCol)))
   }
 }

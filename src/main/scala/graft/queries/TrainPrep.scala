@@ -428,9 +428,10 @@ object TrainPrep {
     * (lang='en' within it; defaults to the raw slice), `scorePred` the
     * scored slice — the gate and incremental forms reuse the chain with
     * doc_id splits, as the LM oracle does. */
-  private[queries] def dsirCtes(b: Int, fitPred: String = "TRUE",
+  private[queries] def dsirCtes(fitPred: String = "TRUE",
       scorePred: String = "TRUE", tgtPredOpt: String = null): String = {
     val tgtPred = Option(tgtPredOpt).getOrElse(fitPred)
+    val b = graft.ops.Dsir.Buckets
     s"""g AS (
       |  SELECT doc_id, lang, unnest(grams) AS gram FROM (
       |    SELECT doc_id, lang,
@@ -472,14 +473,13 @@ object TrainPrep {
     * weights clearing the floor — shared by `q_stream_dsir_gate` and the
     * StreamingSpec streamed==batch test. */
   private[queries] val dsirGateOracle =
-    s"""WITH ${dsirCtes(graft.ops.Dsir.DefaultBuckets,
-        "doc_id < 250", "doc_id >= 250")}
+    s"""WITH ${dsirCtes("doc_id < 250", "doc_id >= 250")}
       |SELECT doc_id, n_grams, CAST(lw AS DOUBLE) AS dsir_logw
       |FROM w WHERE CAST(lw AS DOUBLE) >= 0.0
       |ORDER BY doc_id""".stripMargin
 
   private val dsirWeightsOracle =
-    s"""WITH ${dsirCtes(graft.ops.Dsir.DefaultBuckets)}
+    s"""WITH ${dsirCtes()}
       |SELECT doc_id, n_grams, CAST(lw AS DOUBLE) AS dsir_logw
       |FROM w ORDER BY doc_id""".stripMargin
 
@@ -495,7 +495,7 @@ object TrainPrep {
         .orderBy("doc_id")
   }
 
-  /** The same weights SERVED from the persisted numBuckets-row log-ratio
+  /** The same weights SERVED from the persisted bucket-row log-ratio
     * artifact — zero fitting at serve time; shares the fit form's oracle
     * because the fit is bit-deterministic. */
   val dsirServedQ = QueryDef("q_ns_dsir_served", dsirWeightsOracle) {
@@ -515,7 +515,7 @@ object TrainPrep {
     * global sort). */
   val dsirResampleQ = QueryDef(
     "q_ns_dsir_resample",
-    s"""WITH ${dsirCtes(graft.ops.Dsir.DefaultBuckets)},
+    s"""WITH ${dsirCtes()},
       |res AS (
       |  SELECT doc_id, n_grams, lw,
       |         lw + CAST(-ln(-ln(((${hex16SqlOf("'dsirg:' || CAST(doc_id AS VARCHAR)")}) + 0.5) / 65536.0))
@@ -537,7 +537,7 @@ object TrainPrep {
     * proven chains composed. */
   val dsirSelectPackQ = QueryDef(
     "q_ns_dsir_select_pack",
-    s"""WITH ${dsirCtes(graft.ops.Dsir.DefaultBuckets)},
+    s"""WITH ${dsirCtes()},
       |res AS (
       |  SELECT doc_id,
       |         lw + CAST(-ln(-ln(((${hex16SqlOf("'dsirg:' || CAST(doc_id AS VARCHAR)")}) + 0.5) / 65536.0))
@@ -575,11 +575,10 @@ object TrainPrep {
     * slice's raw counts FOLDED IN without rescanning the old slice —
     * the growing-crawl lifecycle. Weights must equal a full refit on the
     * cumulative raw corpus with the original target (counts are
-    * additive; the model rebuild at load is a numBuckets-row job). */
+    * additive; the model rebuild at load is a bucket-row job). */
   val dsirServedIncrementalQ = QueryDef(
     "q_ns_dsir_served_incremental",
-    s"""WITH ${dsirCtes(graft.ops.Dsir.DefaultBuckets,
-        "TRUE", "TRUE", "doc_id < 250")}
+    s"""WITH ${dsirCtes("TRUE", "TRUE", "doc_id < 250")}
       |SELECT doc_id, n_grams, CAST(lw AS DOUBLE) AS dsir_logw
       |FROM w ORDER BY doc_id""".stripMargin) { (s, d) =>
     val docs = T.documents(s, d)

@@ -537,7 +537,7 @@ object StreamOps {
     * driver-gate query, and the live crawl. foreachBatch because the
     * per-doc weight is an aggregation over exploded grams (no
     * bounded-state streaming operator); the model side is a broadcast
-    * of the numBuckets-row artifact, so each micro-batch is map-only +
+    * of the 512-row artifact, so each micro-batch is map-only +
     * one broadcast join. */
   def dsirGateIngest(spark: org.apache.spark.sql.SparkSession,
       modelDir: String, stream: DataFrame, sinkDir: String,

@@ -390,11 +390,12 @@ class CompactionFaultSpec extends AnyFunSuite {
 
   test("only Models swaps artifact generations in operator sources") {
     // every artifact write is a Models commit: no hand-rolled swap,
-    // temp directory or second generation ledger anywhere else
+    // temp directory, second generation ledger or parameter table anywhere
+    // else (build parameters live in the manifest: Commit.param)
     import scala.jdk.CollectionConverters._
     val root = java.nio.file.Paths.get("src/main/scala/graft")
     val banned = Seq("swapIn(", "__compacting", "__retraining", "logGen",
-      "resetGens", "/gens")
+      "resetGens", "/gens", "write(\"meta\"", "\"bloom_meta\"")
     val offenders = Seq("ops", "streaming", "queries").flatMap { d =>
       java.nio.file.Files.walk(root.resolve(d)).iterator().asScala.toSeq
         .filter(p => p.toString.endsWith(".scala") &&

@@ -113,7 +113,7 @@ class ExprSpec extends AnyFunSuite {
         lower(trim(col("text"))), 512)).as("bucket"))
       .groupBy("doc_id").agg(sort_array(collect_list("bucket")).as("bs"))
       .orderBy("doc_id").collect()
-    val ref = graft.ops.Dsir.bucketedRef(docs, "doc_id", "text", 512)
+    val ref = graft.ops.Dsir.bucketedRef(docs, "doc_id", "text")
       .groupBy("doc_id").agg(sort_array(collect_list("bucket")).as("bs"))
       .orderBy("doc_id").collect()
     assert(kernel.length == ref.length && kernel.length > 0)

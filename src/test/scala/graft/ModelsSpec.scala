@@ -4,14 +4,16 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.ops.{Models, ScaleOps}
+import graft.ops.{CountMin, Dsir, Models, Neutral, SampleQuantile, ScaleOps}
 
 /** What reading an artifact costs: [[Models.load]] reads the manifest's
   * file list and schema, so building the DataFrame and asking its schema
   * must start no Spark job — not the schema-inference job a plain
   * parquet read runs, and not the parallel listing job Spark starts for
-  * more than `parallelPartitionDiscovery.threshold` (32) paths. One
-  * commit may be written from several threads. */
+  * more than `parallelPartitionDiscovery.threshold` (32) paths. A build
+  * parameter is read from the manifest too, so constructing a served
+  * DataFrame starts no job. One commit may be written from several
+  * threads. */
 class ModelsSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = SparkSession.builder()
@@ -69,5 +71,32 @@ class ModelsSpec extends AnyFunSuite {
       val got = Models.load(spark, dir, s"t$i").collect().map(_.getLong(0)).sorted
       assert(got.toSeq == rows(i), s"table t$i")
     }
+  }
+
+  test("constructing a served DataFrame starts no job: cms, sample, Bloom " +
+      "and both DSIR forms") {
+    import spark.implicits._
+    val docs = (0L until 40L).map(i => (i,
+        s"alpha beta w${i % 7} gamma w${i % 5} delta",
+        if (i % 2 == 0) "en" else "de"))
+      .toDF("doc_id", "text", "lang")
+    val en = docs.filter(col("lang") === "en")
+    def dir(p: String) = java.nio.file.Files.createTempDirectory(p).toString
+    val (cms, sample, bloom, dsir, counts) = (dir("p_cms"), dir("p_sample"),
+      dir("p_bloom"), dir("p_dsir"), dir("p_counts"))
+    CountMin.cmsBuild(docs, cms, "text", depth = 3, width = 32)
+    SampleQuantile.build(docs, sample, "lang", "doc_id", "doc_id", k = 8)
+    Neutral.bloomIndexBuild(docs, bloom, mBits = 1 << 10)
+    Dsir.dsirBuild(docs, en, dsir)
+    Dsir.dsirBuildCounts(docs, en, counts)
+    val served = Seq[(String, () => Unit)](
+      "cmsServe" -> (() => CountMin.cmsServe(spark, cms, docs.select("text"),
+        "text")),
+      "serveSketch" -> (() => SampleQuantile.serveSketch(spark, sample, "lang")),
+      "admitBloomServed" -> (() => Neutral.admitBloomServed(spark, bloom, docs)),
+      "dsirServe" -> (() => Dsir.dsirServe(spark, dsir, docs)),
+      "dsirServeCounts" -> (() => Dsir.dsirServeCounts(spark, counts, docs)))
+    val jobs = served.map { case (name, serve) => name -> jobsDuring(serve()) }
+    assert(jobs.forall(_._2 == 0), s"jobs while constructing: $jobs")
   }
 }

@@ -719,7 +719,7 @@ class OpsSpec extends AnyFunSuite {
     val w = graft.ops.Dsir.dsirWeights(docs, target)
     // the model must cover the whole bucket space
     val model = graft.ops.Dsir.dsirModel(docs, docs.filter(target))
-    assert(model.count() == graft.ops.Dsir.DefaultBuckets)
+    assert(model.count() == graft.ops.Dsir.Buckets)
     // English docs resemble the English target distribution more than the
     // rest of the corpus does — their mean log-weight must be higher
     val byLang = w.join(docs.select("doc_id", "lang"), "doc_id")

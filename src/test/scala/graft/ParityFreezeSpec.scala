@@ -22,7 +22,7 @@ class ParityFreezeSpec extends AnyFunSuite {
     "src/main/scala/graft/model/Core.scala" ->
       "8b60c4ac8b1c8e7133e1dc6da35cb5ac772cd34a477d281f82eda2fc5fcff0c1",
     "src/main/scala/graft/model/Sources.scala" ->
-      "fae300d97f1995b77998094048d38db6bb7d904a79469be76150b333dad62916",
+      "4bf60790243940f3b2d8cd96ad1e57bd62a34ea21e388640bd4aa99cc9f023ad",
     "src/main/scala/graft/model/Staging.scala" ->
       "f0d9d966260a56eae7d817ca35ca28de769d5ada9fb83cd8f7be46d4b0be0ea2",
     "src/main/scala/graft/model/Warehouse.scala" ->

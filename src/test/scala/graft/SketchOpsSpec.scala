@@ -74,7 +74,8 @@ class SketchOpsSpec extends AnyFunSuite {
     val ev = queries.T.events(spark, sf).filter(col("user_id").isNotNull)
     val dir = java.nio.file.Files.createTempDirectory("cms_art").toString
     // non-default geometry — cmsAppend/cmsServe take NO geometry args,
-    // so agreement proves they read (depth=3, width=32) back from meta
+    // so agreement proves they read (depth=3, width=32) back from the
+    // manifest
     CountMin.cmsBuild(ev.filter(col("event_id") % 2 === 0), dir,
       "user_id", depth = 3, width = 32)
     CountMin.cmsAppend(ev.filter(col("event_id") % 2 =!= 0), dir, "user_id")
